@@ -1,0 +1,182 @@
+"""Zip re-read guard (operators/worker_setup.py).
+
+On CPython < 3.12 every ``importlib.invalidate_caches()`` — which
+PySpark's worker runs at the start of each task — re-reads the central
+directory of every zip archive on the worker path.  The guard skips the
+re-read of an archive that has not changed.  The unit test checks the
+guard in this process; the Spark test counts the re-reads a reused
+local[1] Python worker still makes after each extraction operator ran in
+it.  ``PYTHONPATH=. python tests/test_worker_setup.py SCRATCH_DIR`` prints
+those counts as JSON.
+"""
+
+import importlib
+import json
+import os
+import subprocess
+import sys
+import zipfile
+import zipimport
+
+import pytest
+
+from trafilatura_spark.operators.worker_setup import install_zip_reread_guard
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+pytestmark = pytest.mark.skipif(
+    sys.version_info >= (3, 12), reason="CPython 3.12+ invalidates zipimport caches lazily"
+)
+
+
+def _write_zip(path, modules: dict) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, source in modules.items():
+            zf.writestr(f"{name}.py", source)
+
+
+def _count_reads(monkeypatch) -> list:
+    "Record the archive path of every zipimport directory read from now on."
+    real = zipimport._read_directory
+    reads: list = []
+
+    def counted(archive):
+        reads.append(archive)
+        return real(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    return reads
+
+
+def test_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
+    # start from the stock method; monkeypatch restores whatever was installed
+    current = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", getattr(current, "__wrapped__", current)
+    )
+    archive = str(tmp_path / "guarded.zip")
+    _write_zip(archive, {"zrg_first": "VALUE = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("zrg_first").VALUE == 1
+        reads = _count_reads(monkeypatch)
+        importlib.invalidate_caches()
+        assert archive in reads, "the stock invalidation re-reads the archive"
+
+        install_zip_reread_guard()
+        installed = zipimport.zipimporter.invalidate_caches
+        install_zip_reread_guard()
+        assert zipimport.zipimporter.invalidate_caches is installed, "second install is a no-op"
+
+        importlib.invalidate_caches()  # reads each archive once and records its stamp
+        reads.clear()
+        importlib.invalidate_caches()
+        assert reads == [], "unchanged archives must not be re-read"
+
+        _write_zip(archive, {"zrg_first": "VALUE = 1\n", "zrg_second": "VALUE = 2\n"})
+        importlib.invalidate_caches()
+        assert reads == [archive], "exactly the rewritten archive is re-read"
+        assert importlib.import_module("zrg_second").VALUE == 2
+    finally:
+        for name in ("zrg_first", "zrg_second"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+
+
+# -- Spark: re-reads left in a reused Python worker ---------------------------
+
+
+def _wrap_reads(iterator):
+    "Probe 1: count zipimport directory reads in this worker from now on."
+    import zipimport as zi
+
+    import pandas as pd
+
+    real = zi._read_directory
+
+    def counted(archive):
+        counted.calls += 1
+        return real(archive)
+
+    counted.calls = 0
+    zi._read_directory = counted
+    for _ in iterator:
+        pass
+    yield pd.DataFrame({"pid": [os.getpid()], "reads": [-1]})
+
+
+def _report_reads(iterator):
+    "Probe 2: the reads counted since probe 1, i.e. by this task's setup."
+    import zipimport as zi
+
+    import pandas as pd
+
+    for _ in iterator:
+        pass
+    yield pd.DataFrame({"pid": [os.getpid()], "reads": [getattr(zi._read_directory, "calls", -1)]})
+
+
+def _identity(iterator):
+    yield from iterator
+
+
+def probe_rereads(local_dir: str) -> dict:
+    """For each case, a fresh local[1] session runs one job, then the two
+    probes in the same reused worker; returns case -> (reads, pids)."""
+    from pyspark.sql import SparkSession
+
+    from trafilatura_spark.operators.extract import extract_transcripts, extract_with_metadata
+    from trafilatura_spark.operators.metadata_op import extract_metadata_columns
+
+    page = (
+        "<html><head><title>Probe page</title><meta name='author' content='A. Writer'></head>"
+        "<body><article><p>" + "Some words for the extractor to keep. " * 12 + "</p></article></body></html>"
+    )
+    rows = [("c1", 0, page), ("c1", 1, "<p>" + "a short turn of text " * 8 + "</p>"), ("c2", 0, None)]
+    cases = {
+        "identity": lambda df: df.mapInPandas(_identity, schema=df.schema),
+        "extract_transcripts": extract_transcripts,
+        "extract_with_metadata": extract_with_metadata,
+        "extract_metadata_columns": extract_metadata_columns,
+    }
+    out = {}
+    for name, operator in cases.items():
+        spark = (
+            SparkSession.builder.master("local[1]")
+            .config("spark.ui.enabled", "false")
+            .config("spark.driver.memory", "512m")
+            .config("spark.local.dir", local_dir)
+            .config("spark.sql.warehouse.dir", os.path.join(local_dir, "warehouse"))
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        try:
+            df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string").coalesce(1)
+            operator(df).collect()
+            probe = spark.range(1).coalesce(1)
+            first = probe.mapInPandas(_wrap_reads, "pid long, reads long").collect()[0]
+            second = probe.mapInPandas(_report_reads, "pid long, reads long").collect()[0]
+            out[name] = {"reads": second.reads, "pids": [first.pid, second.pid]}
+        finally:
+            spark.stop()
+    return out
+
+
+def test_no_zip_rereads_after_extraction_operators(tmp_path):
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), str(tmp_path)],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    counts = json.loads(proc.stdout.strip().splitlines()[-1])
+    for name, rec in counts.items():
+        assert rec["pids"][0] == rec["pids"][1], f"{name}: probes ran in two workers {rec}"
+    # the probe sees the stock re-reads when no package batch function ran
+    assert counts["identity"]["reads"] > 0, counts
+    for name in ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns"):
+        assert counts[name]["reads"] == 0, f"{name}: {counts[name]}"
+
+
+if __name__ == "__main__":
+    print(json.dumps(probe_rereads(sys.argv[1])))

@@ -14,12 +14,15 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): the cascade aborts
   cooperatively at stage/element checkpoints, yielding tier='timeout'.
+- every batch function first installs worker_setup's zip re-read guard:
+  on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
+  otherwise re-reads spark-core's jar and pyspark.zip in every task.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Iterable, Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -32,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import DEFAULT_OPTIONS, Options, bare_extract
+from .worker_setup import install_zip_reread_guard
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
 # single-block fragments, so turns are wrapped identically everywhere
@@ -45,6 +49,9 @@ EXTRACT_RESULT_FIELDS = [
 ]
 
 DEFAULT_TIMEOUT_SECS = 30.0
+# the reference's 20 MB per-doc gate times a small factor (SURVEY.md §7
+# hard part 6): bounds the Python-side memory of one batch slice
+DEFAULT_MAX_BATCH_CHARS = 32_000_000
 
 
 def wrap_turn(text: str) -> str:
@@ -126,46 +133,52 @@ def extract_one(text: Optional[str], options: Options, timeout: float = DEFAULT_
     return result.text, result.tier, result.chars_kept
 
 
+def batch_slices(batches: Iterable[pd.DataFrame], max_chars: int) -> Iterator[pd.DataFrame]:
+    """Consecutive row slices of each frame in ``batches`` whose summed
+    ``text`` length stays bounded: a slice ends with the row that takes
+    it past ``max_chars``, so peak Python-side memory tracks
+    ``max_chars`` and not the Arrow batch.  Non-string texts count as 0
+    characters; an empty frame yields no slice."""
+    for pdf in batches:
+        lengths = [len(t) if isinstance(t, str) else 0 for t in pdf["text"]]
+        start = acc = 0
+        for end, length in enumerate(lengths, 1):
+            acc += length
+            if acc > max_chars:
+                yield pdf.iloc[start:end]
+                start, acc = end, 0
+        if start < len(lengths):
+            yield pdf.iloc[start:]
+
+
 def make_extract_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
-    max_batch_chars: int = 32_000_000,
+    max_batch_chars: int = DEFAULT_MAX_BATCH_CHARS,
 ):
     """Build a mapInPandas function emitting passthrough columns +
     (extracted_text, tier, chars_kept).
 
     ``max_batch_chars`` bounds Python-side memory: an Arrow batch whose
-    summed text length exceeds it is processed in slices (the reference's
-    20 MB per-doc gate times a small factor; SURVEY.md §7 hard part 6).
+    summed text length exceeds it is processed in slices (batch_slices).
     """
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
 
     def extract_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            texts = pdf["text"]
-            # adaptive slicing by accumulated length keeps peak RSS bounded
-            start = 0
-            n = len(pdf)
-            while start < n:
-                acc = 0
-                end = start
-                while end < n and acc <= max_batch_chars:
-                    acc += len(texts.iloc[end]) if isinstance(texts.iloc[end], str) else 0
-                    end += 1
-                chunk = pdf.iloc[start:end]
-                extracted, tiers, kept = [], [], []
-                for text in chunk["text"]:
-                    etext, tier, chars = extract_one(text, options, timeout)
-                    extracted.append(etext)
-                    tiers.append(tier)
-                    kept.append(chars)
-                out = chunk[passthrough].copy()
-                out["extracted_text"] = extracted
-                out["tier"] = tiers
-                out["chars_kept"] = pd.array(kept, dtype="int32")
-                yield out
-                start = end
+        install_zip_reread_guard()
+        for chunk in batch_slices(iterator, max_batch_chars):
+            extracted, tiers, kept = [], [], []
+            for text in chunk["text"]:
+                etext, tier, chars = extract_one(text, options, timeout)
+                extracted.append(etext)
+                tiers.append(tier)
+                kept.append(chars)
+            out = chunk[passthrough].copy()
+            out["extracted_text"] = extracted
+            out["tier"] = tiers
+            out["chars_kept"] = pd.array(kept, dtype="int32")
+            yield out
 
     return extract_batch
 
@@ -240,25 +253,28 @@ def make_extract_with_metadata_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
+    max_batch_chars: int = DEFAULT_MAX_BATCH_CHARS,
 ):
     """Batch function emitting extraction AND metadata columns in one
     mapInPandas pass — the reference's bare_extraction(with_metadata=True)
     shape.  One table scan, one Arrow crossing, and ONE HTML PARSE per
     document serve both outputs: bare_extract runs with with_metadata set
     and returns the metadata object extracted from the same parsed tree
-    (running the two standalone operators costs two of each)."""
+    (running the two standalone operators costs two of each).
+    ``max_batch_chars`` slices Arrow batches as in make_extract_batch_fn."""
     from .metadata_op import METADATA_FIELDS
 
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
     options = options.copy(with_metadata=True)
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
+        install_zip_reread_guard()
+        for chunk in batch_slices(iterator, max_batch_chars):
             extracted, tiers, kept = [], [], []
             meta_cols: dict = {name: [] for name, _ in METADATA_FIELDS}
             meta_cols["categories_joined"] = []
             meta_cols["tags_joined"] = []
-            for text in pdf["text"]:
+            for text in chunk["text"]:
                 result = extract_one_result(text, options, timeout)
                 extracted.append(result.text)
                 tiers.append(result.tier)
@@ -272,7 +288,7 @@ def make_extract_with_metadata_batch_fn(
                 meta_cols["tags_joined"].append(
                     ",".join(meta.tags) if meta and meta.tags else None
                 )
-            out = pdf[passthrough].copy()
+            out = chunk[passthrough].copy()
             out["extracted_text"] = extracted
             out["tier"] = tiers
             out["chars_kept"] = pd.array(kept, dtype="int32")

@@ -14,7 +14,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..kernel.metadata import extract_metadata
+from .extract import DEFAULT_MAX_BATCH_CHARS, batch_slices
 from .extract import wrap_if_fragment  # noqa: F401  (canonical home: extract.py)
+from .worker_setup import install_zip_reread_guard
 
 METADATA_FIELDS = [
     ("title", StringType()),
@@ -41,21 +43,25 @@ def metadata_schema(df: DataFrame, passthrough_cols: Optional[list] = None) -> S
     return StructType(fields)
 
 
-def make_metadata_batch_fn(passthrough_cols: Optional[list] = None):
+def make_metadata_batch_fn(
+    passthrough_cols: Optional[list] = None, max_batch_chars: int = DEFAULT_MAX_BATCH_CHARS
+):
+    "``max_batch_chars`` slices Arrow batches as in extract.make_extract_batch_fn."
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
 
     def metadata_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
+        install_zip_reread_guard()
+        for chunk in batch_slices(iterator, max_batch_chars):
             records = {name: [] for name, _ in METADATA_FIELDS}
             records["categories"] = []
             records["tags"] = []
-            for text in pdf["text"]:
+            for text in chunk["text"]:
                 meta = extract_metadata(wrap_if_fragment(text)) if isinstance(text, str) else None
                 for name, _ in METADATA_FIELDS:
                     records[name].append(getattr(meta, name, None) if meta else None)
                 records["categories"].append(list(meta.categories) if meta else None)
                 records["tags"].append(list(meta.tags) if meta else None)
-            out = pdf[passthrough].copy()
+            out = chunk[passthrough].copy()
             for key, values in records.items():
                 out[key] = values
             yield out

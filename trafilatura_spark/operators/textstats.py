@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.langid import LANG_WORDS
+from .worker_setup import install_zip_reread_guard
 
 # english stopword regex for the quality-scoring ratio (token_stats);
 # language ID itself uses the shared 17-language LANG_WORDS vocabulary
@@ -145,6 +146,7 @@ def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     def batch(iterator):
         from ..kernel.langid import classify_language
 
+        install_zip_reread_guard()
         for pdf in iterator:
             out = pdf[[id_col]].copy()
             out["pred_lang"] = [
