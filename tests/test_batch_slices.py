@@ -1,15 +1,18 @@
 """Batch slicing by text length (operators/extract.py batch_slices).
 
-Every batch function processes an Arrow batch in slices whose summed
-text length is bounded by ``max_batch_chars``; slicing must not change
-a single output row.  Driver-side, no Spark: the batch functions are
-called on pandas frames directly.
+Every extraction batch function processes an Arrow batch in slices
+whose summed text length is bounded (``max_batch_chars`` on
+make_extract_batch_fn, the module's ``DEFAULT_MAX_BATCH_CHARS`` on the
+two metadata batch functions); slicing must not change a single output
+row.  Driver-side, no Spark: the batch functions are called on pandas
+frames directly.
 """
 
 import pandas as pd
 import pytest
 
 from trafilatura_spark.fixtures import generate_rows
+from trafilatura_spark.operators import extract, metadata_op
 from trafilatura_spark.operators.extract import (
     batch_slices,
     make_extract_batch_fn,
@@ -39,19 +42,32 @@ def input_batches():
     return [pdf.iloc[:half], pdf.iloc[half:]]
 
 
-@pytest.mark.parametrize(
-    "factory",
-    [make_extract_batch_fn, make_extract_with_metadata_batch_fn, make_metadata_batch_fn],
-    ids=["extract", "extract_with_metadata", "metadata"],
-)
-def test_sliced_rows_equal_unsliced(factory, input_batches):
-    def run(fn):
-        return list(fn(iter(input_batches)))
+def _run(batch_fn, batches):
+    return list(batch_fn(iter(batches)))
 
-    unsliced = run(factory())
-    sliced = run(factory(max_batch_chars=1000))
-    assert len(unsliced) == len(input_batches)
-    assert len(sliced) > 4 * len(input_batches)
+
+def _assert_same_rows(sliced, unsliced, n_batches):
+    assert len(unsliced) == n_batches
+    assert len(sliced) > 4 * n_batches
     pd.testing.assert_frame_equal(
         pd.concat(sliced, ignore_index=True), pd.concat(unsliced, ignore_index=True)
     )
+
+
+def test_extract_sliced_rows_equal_unsliced(input_batches):
+    unsliced = _run(make_extract_batch_fn(), input_batches)
+    sliced = _run(make_extract_batch_fn(max_batch_chars=1000), input_batches)
+    _assert_same_rows(sliced, unsliced, len(input_batches))
+
+
+@pytest.mark.parametrize(
+    "module, factory",
+    [(extract, make_extract_with_metadata_batch_fn), (metadata_op, make_metadata_batch_fn)],
+    ids=["extract_with_metadata", "metadata"],
+)
+def test_metadata_sliced_rows_equal_unsliced(module, factory, input_batches, monkeypatch):
+    unsliced = _run(factory(), input_batches)
+    # the metadata batch functions read their module's bound when they run
+    monkeypatch.setattr(module, "DEFAULT_MAX_BATCH_CHARS", 1000)
+    sliced = _run(factory(), input_batches)
+    _assert_same_rows(sliced, unsliced, len(input_batches))

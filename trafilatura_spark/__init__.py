@@ -7,4 +7,6 @@ mapInPandas, conv_id-salted repartitioning, AQE skew handling, and
 checkpoint-resumable per-partition lineage.
 """
 
+from .operators import worker_setup  # noqa: F401  (installs the zip re-read guard)
+
 __version__ = "0.1.0"

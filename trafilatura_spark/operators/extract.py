@@ -14,8 +14,8 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): the cascade aborts
   cooperatively at stage/element checkpoints, yielding tier='timeout'.
-- every batch function first installs worker_setup's zip re-read guard:
-  on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
+- importing the package installs worker_setup's zip re-read guard in the
+  worker: on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
   otherwise re-reads spark-core's jar and pyspark.zip in every task.
 """
 
@@ -35,7 +35,6 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import DEFAULT_OPTIONS, Options, bare_extract
-from .worker_setup import install_zip_reread_guard
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
 # single-block fragments, so turns are wrapped identically everywhere
@@ -166,7 +165,6 @@ def make_extract_batch_fn(
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
 
     def extract_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
         for chunk in batch_slices(iterator, max_batch_chars):
             extracted, tiers, kept = [], [], []
             for text in chunk["text"]:
@@ -253,23 +251,21 @@ def make_extract_with_metadata_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
-    max_batch_chars: int = DEFAULT_MAX_BATCH_CHARS,
 ):
     """Batch function emitting extraction AND metadata columns in one
     mapInPandas pass — the reference's bare_extraction(with_metadata=True)
     shape.  One table scan, one Arrow crossing, and ONE HTML PARSE per
     document serve both outputs: bare_extract runs with with_metadata set
     and returns the metadata object extracted from the same parsed tree
-    (running the two standalone operators costs two of each).
-    ``max_batch_chars`` slices Arrow batches as in make_extract_batch_fn."""
+    (running the two standalone operators costs two of each).  Arrow
+    batches are sliced at DEFAULT_MAX_BATCH_CHARS (batch_slices)."""
     from .metadata_op import METADATA_FIELDS
 
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
     options = options.copy(with_metadata=True)
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
-        for chunk in batch_slices(iterator, max_batch_chars):
+        for chunk in batch_slices(iterator, DEFAULT_MAX_BATCH_CHARS):
             extracted, tiers, kept = [], [], []
             meta_cols: dict = {name: [] for name, _ in METADATA_FIELDS}
             meta_cols["categories_joined"] = []

@@ -16,7 +16,6 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 from ..kernel.metadata import extract_metadata
 from .extract import DEFAULT_MAX_BATCH_CHARS, batch_slices
 from .extract import wrap_if_fragment  # noqa: F401  (canonical home: extract.py)
-from .worker_setup import install_zip_reread_guard
 
 METADATA_FIELDS = [
     ("title", StringType()),
@@ -43,15 +42,12 @@ def metadata_schema(df: DataFrame, passthrough_cols: Optional[list] = None) -> S
     return StructType(fields)
 
 
-def make_metadata_batch_fn(
-    passthrough_cols: Optional[list] = None, max_batch_chars: int = DEFAULT_MAX_BATCH_CHARS
-):
-    "``max_batch_chars`` slices Arrow batches as in extract.make_extract_batch_fn."
+def make_metadata_batch_fn(passthrough_cols: Optional[list] = None):
+    "Arrow batches are sliced at DEFAULT_MAX_BATCH_CHARS (extract.batch_slices)."
     passthrough = passthrough_cols or ["conv_id", "turn_idx"]
 
     def metadata_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
-        for chunk in batch_slices(iterator, max_batch_chars):
+        for chunk in batch_slices(iterator, DEFAULT_MAX_BATCH_CHARS):
             records = {name: [] for name, _ in METADATA_FIELDS}
             records["categories"] = []
             records["tags"] = []

@@ -34,8 +34,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .worker_setup import install_zip_reread_guard
-
 FEATURE_DIM = 16
 
 MEDIA_META_SCHEMA = StructType(
@@ -103,7 +101,6 @@ def decode_real(payload: bytes) -> np.ndarray:  # pragma: no cover
 
 def make_feature_batch_fn(id_col: str = "media_id", bin_col: str = "payload"):
     def feature_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
         for pdf in iterator:
             feats = [_decode_stub(p).tolist() for p in pdf[bin_col]]
             yield pd.DataFrame(
@@ -166,7 +163,6 @@ def media_resize(
     with_meta = attach_media_meta(df, id_col, bin_col)
 
     def resize_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
         for pdf in iterator:
             yield pd.DataFrame(
                 {
@@ -203,7 +199,6 @@ def video_frame_sample(
     ffmpeg keyframe extraction — the mapInPandas contract is identical."""
 
     def frame_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
         for pdf in iterator:
             ids, idxs, feats = [], [], []
             for media_id, payload in zip(pdf[id_col], pdf[bin_col]):
@@ -371,7 +366,6 @@ def media_durations(df: DataFrame, id_col: str = "media_id", bin_col: str = "pay
     base = attach_media_meta(df, id_col, bin_col)
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
         for pdf in iterator:
             durs = [
                 wav_duration(p) if fmt == "riff" else mp4_duration(p)
@@ -426,7 +420,6 @@ def image_dimensions(df: DataFrame, id_col: str = "media_id", bin_col: str = "pa
     )
 
     def jpeg_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_zip_reread_guard()
         for pdf in iterator:
             dims = [jpeg_dimensions(p) for p in pdf[bin_col]]
             out = pd.DataFrame(

@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.langid import LANG_WORDS
-from .worker_setup import install_zip_reread_guard
 
 # english stopword regex for the quality-scoring ratio (token_stats);
 # language ID itself uses the shared 17-language LANG_WORDS vocabulary
@@ -146,7 +145,6 @@ def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     def batch(iterator):
         from ..kernel.langid import classify_language
 
-        install_zip_reread_guard()
         for pdf in iterator:
             out = pdf[[id_col]].copy()
             out["pred_lang"] = [

@@ -1,4 +1,4 @@
-"""Python-worker setup shared by every package batch function.
+"""Python-worker setup: installed on import of the package.
 
 PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
 EVERY task (``worker_util.setup_spark_files``).  On CPython < 3.12,
@@ -14,9 +14,12 @@ before the batch function runs — more than the kernel work of a task of
 ``install_zip_reread_guard`` makes the invalidation re-read an archive
 only when its ``(st_mtime_ns, st_size, st_ino)`` changed since it was
 last read, so an archive that really changes (``addPyFile`` overwriting
-a zip) is still re-read.  Batch functions call it first thing; it is
-idempotent, so only the first task of a worker process installs it, and
-that task's own setup has already paid the re-reads.
+a zip) is still re-read.  It runs once, when this module is imported,
+and ``trafilatura_spark/__init__.py`` imports it.  A worker imports the
+package when it unpickles the first task that calls a package function:
+every batch function refers to a module-level package helper, which
+cloudpickle pickles by reference.  That first task's setup has already
+paid the re-reads; every later task in the worker skips them.
 """
 
 from __future__ import annotations
@@ -58,3 +61,6 @@ def install_zip_reread_guard() -> None:
 
     invalidate_caches.read_stamps = stamps
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+install_zip_reread_guard()

@@ -23,7 +23,6 @@ from pyspark.sql.types import (
 
 from ..kernel import DEFAULT_OPTIONS, Options
 from ..operators.extract import make_extract_batch_fn
-from ..operators.worker_setup import install_zip_reread_guard
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -165,7 +164,6 @@ def conversation_running_state(
     gap_ms = gap_minutes * 60_000
 
     def update_conv(key, pdfs, state):
-        install_zip_reread_guard()
         (conv_id,) = key
         if state.hasTimedOut:
             n, chars, mx = state.get
