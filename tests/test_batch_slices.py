@@ -1,18 +1,17 @@
 """Batch slicing by text length (operators/extract.py batch_slices).
 
 Every extraction batch function processes an Arrow batch in slices
-whose summed text length is bounded (``max_batch_chars`` on
-make_extract_batch_fn, the module's ``DEFAULT_MAX_BATCH_CHARS`` on the
-two metadata batch functions); slicing must not change a single output
-row.  Driver-side, no Spark: the batch functions are called on pandas
-frames directly.
+whose summed text length is bounded (the one batch loop,
+``map_batches``, slices at ``DEFAULT_MAX_BATCH_CHARS``); slicing must
+not change a single output row.  Driver-side, no Spark: the batch
+functions are called on pandas frames directly.
 """
 
 import pandas as pd
 import pytest
 
 from trafilatura_spark.fixtures import generate_rows
-from trafilatura_spark.operators import extract, metadata_op
+from trafilatura_spark.operators import extract
 from trafilatura_spark.operators.extract import (
     batch_slices,
     make_extract_batch_fn,
@@ -54,20 +53,14 @@ def _assert_same_rows(sliced, unsliced, n_batches):
     )
 
 
-def test_extract_sliced_rows_equal_unsliced(input_batches):
-    unsliced = _run(make_extract_batch_fn(), input_batches)
-    sliced = _run(make_extract_batch_fn(max_batch_chars=1000), input_batches)
-    _assert_same_rows(sliced, unsliced, len(input_batches))
-
-
 @pytest.mark.parametrize(
-    "module, factory",
-    [(extract, make_extract_with_metadata_batch_fn), (metadata_op, make_metadata_batch_fn)],
-    ids=["extract_with_metadata", "metadata"],
+    "factory",
+    [make_extract_batch_fn, make_extract_with_metadata_batch_fn, make_metadata_batch_fn],
+    ids=["extract", "extract_with_metadata", "metadata"],
 )
-def test_metadata_sliced_rows_equal_unsliced(module, factory, input_batches, monkeypatch):
+def test_sliced_rows_equal_unsliced(factory, input_batches, monkeypatch):
     unsliced = _run(factory(), input_batches)
-    # the metadata batch functions read their module's bound when they run
-    monkeypatch.setattr(module, "DEFAULT_MAX_BATCH_CHARS", 1000)
+    # the batch loop reads the bound when it runs
+    monkeypatch.setattr(extract, "DEFAULT_MAX_BATCH_CHARS", 1000)
     sliced = _run(factory(), input_batches)
     _assert_same_rows(sliced, unsliced, len(input_batches))

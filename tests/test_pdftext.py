@@ -72,11 +72,11 @@ def test_bare_extract_routes_pdf_payloads():
 
 def test_spark_operator_routes_pdf_strings():
     "String-typed text cells carrying PDF bytes reach the PDF reader."
-    from trafilatura_spark.operators.extract import extract_one
+    from trafilatura_spark.operators.extract import extract_one_result
 
     payload = build_pdf(CONTENT).decode("latin-1")
-    text, tier, kept = extract_one(payload, Options(min_extracted_size=0))
-    assert tier == "pdf" and "Hello PDF world." in text and kept == len(text)
+    r = extract_one_result(payload, Options(min_extracted_size=0))
+    assert r.tier == "pdf" and "Hello PDF world." in r.text and r.chars_kept == len(r.text)
 
 
 def test_extract_facade_pdf_with_nontxt_format():
@@ -191,12 +191,12 @@ def test_encrypted_pdf_labeled_not_parsed():
 
 def test_whitespace_prefixed_pdf_routes_to_pdf_reader():
     "Round-3 VERDICT item 7: leading whitespace must not demote a PDF to HTML."
-    from trafilatura_spark.operators.extract import extract_one
+    from trafilatura_spark.operators.extract import extract_one_result
 
     payload = "\n  \t" + build_pdf(CONTENT).decode("latin-1")
     assert is_pdf(payload)
-    text, tier, _ = extract_one(payload, Options(min_extracted_size=0))
-    assert tier == "pdf" and "Hello PDF world." in text
+    r = extract_one_result(payload, Options(min_extracted_size=0))
+    assert r.tier == "pdf" and "Hello PDF world." in r.text
 
 
 def test_extract_transcripts_pdf_rows_end_to_end(spark):

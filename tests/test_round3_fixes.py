@@ -73,14 +73,14 @@ def test_only_with_metadata_enforced_in_bare_extract():
 
 
 def test_only_with_metadata_honored_by_spark_operator_path():
-    "operators/extract.extract_one routes through bare_extract's gate."
-    from trafilatura_spark.operators.extract import extract_one
+    "operators/extract.extract_one_result routes through bare_extract's gate."
+    from trafilatura_spark.operators.extract import extract_one_result
 
     opts = Options(min_extracted_size=0, only_with_metadata=True)
-    text, tier, kept = extract_one(
+    r = extract_one_result(
         "<p>Long enough body text for a normal extraction result.</p>", opts
     )
-    assert text is None and tier == "no_metadata" and kept == 0
+    assert r.text is None and r.tier == "no_metadata" and r.chars_kept == 0
 
 
 # --- check_authors ';' semantics (ADVICE low item; reference metadata.py:163

@@ -7,7 +7,7 @@ import pytest
 
 from trafilatura_spark.fixtures import generate_rows, transcripts_df
 from trafilatura_spark.kernel import DEFAULT_OPTIONS
-from trafilatura_spark.operators.extract import extract_one, extract_transcripts
+from trafilatura_spark.operators.extract import extract_one_result, extract_transcripts
 
 N_CONVS = 30
 
@@ -23,8 +23,8 @@ def spark_output(spark):
 def local_expected():
     expected = {}
     for conv_id, turn_idx, role, text, tool, ts in generate_rows(N_CONVS):
-        etext, tier, chars = extract_one(text, DEFAULT_OPTIONS)
-        expected[(conv_id, turn_idx)] = (etext, tier, chars)
+        r = extract_one_result(text, DEFAULT_OPTIONS)
+        expected[(conv_id, turn_idx)] = (r.text, r.tier, r.chars_kept)
     return expected
 
 
@@ -85,14 +85,14 @@ def test_timeout_guard_preemptive():
     reference's 30 s/file kill yields no output), not merely labeled."""
     import time
 
-    from trafilatura_spark.operators.extract import extract_one
+    from trafilatura_spark.operators.extract import extract_one_result
     from trafilatura_spark.kernel import DEFAULT_OPTIONS
 
     # expired deadline: first checkpoint fires, nothing is extracted
     text = "<article>" + "".join(f"<p>Paragraph {i} text content here.</p>" for i in range(300)) + "</article>"
-    etext, tier, chars = extract_one(text, DEFAULT_OPTIONS, timeout=0.0)
-    assert tier == "timeout"
-    assert etext is None and chars == 0
+    r = extract_one_result(text, DEFAULT_OPTIONS, timeout=0.0)
+    assert r.tier == "timeout"
+    assert r.text is None and r.chars_kept == 0
 
     # slow doc (thousands of elements through the full cascade takes
     # seconds): a 50 ms deadline must abort it in well under a second
@@ -100,14 +100,14 @@ def test_timeout_guard_preemptive():
         f"<div class=\"c{i}\"><p>Short {i}</p><span>x</span></div>" for i in range(4000)
     ) + "</div>"
     t0 = time.monotonic()
-    etext, tier, chars = extract_one(slow, DEFAULT_OPTIONS, timeout=0.05)
+    r = extract_one_result(slow, DEFAULT_OPTIONS, timeout=0.05)
     wall = time.monotonic() - t0
-    assert tier == "timeout"
+    assert r.tier == "timeout"
     assert wall < 1.0, f"preemption took {wall:.2f}s"
 
     # and without a deadline the same doc completes normally
-    etext2, tier2, chars2 = extract_one(slow, DEFAULT_OPTIONS, timeout=None)
-    assert tier2 != "timeout" and etext2
+    r2 = extract_one_result(slow, DEFAULT_OPTIONS, timeout=None)
+    assert r2.tier != "timeout" and r2.text
 
 
 def test_assemble_conversations_order_and_counts(spark):

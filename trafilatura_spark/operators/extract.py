@@ -2,15 +2,21 @@
 
 Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - input: transcripts DataFrame (conv_id, turn_idx, role, text, tool, ts)
-- Catalyst-side gates BEFORE the UDF: null filter + file-size gate
-  (reference utils.py:405-413) expressed as `length(text)` predicates so
-  they are pushed into the scan / evaluated in whole-stage codegen.
+- per-turn completeness: every input turn yields one output row.  The
+  reference CLI's null and file-size gates (utils.py:405-413) run in the
+  batch function and label the turn (tier null_input / discarded_size,
+  extracted_text NULL) instead of dropping it; only the passthrough
+  columns and `text` are selected, so column pruning reaches the scan.
 - conv_id-salted repartition: `hash(conv_id, pmod(turn_idx, salt))` so a
   single million-turn conversation spreads over many partitions (AQE
   balances bytes, not lxml-CPU; salting balances work).
 - mapInPandas over Arrow batches: Spark sees only columnar Arrow; the
   per-document DOM work happens inside the batch loop (no per-row Python
-  crossing the JVM boundary).
+  crossing the JVM boundary).  Every operator runs the one loop
+  `map_batches`; an output column is one entry of a column spec
+  (CONTENT_COLUMNS here, METADATA_COLUMNS / JOINED_METADATA_COLUMNS in
+  metadata_op.py) that drives both the pandas frame and the mapInPandas
+  schema (`map_turns`).
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): the cascade aborts
   cooperatively at stage/element checkpoints, yielding tier='timeout'.
@@ -22,6 +28,7 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 from __future__ import annotations
 
 import time
+from operator import attrgetter
 from typing import Iterable, Iterator, Optional
 
 import pandas as pd
@@ -41,16 +48,22 @@ from ..kernel import DEFAULT_OPTIONS, Options, bare_extract
 WRAP_PREFIX = "<html><body>"
 WRAP_SUFFIX = "</body></html>"
 
-EXTRACT_RESULT_FIELDS = [
-    StructField("extracted_text", StringType(), True),
-    StructField("tier", StringType(), False),
-    StructField("chars_kept", IntegerType(), False),
-]
-
 DEFAULT_TIMEOUT_SECS = 30.0
 # the reference's 20 MB per-doc gate times a small factor (SURVEY.md §7
 # hard part 6): bounds the Python-side memory of one batch slice
 DEFAULT_MAX_BATCH_CHARS = 32_000_000
+# turn_idx buckets per conv_id in salted_repartition
+SALT_BUCKETS = 64
+DEFAULT_PASSTHROUGH = ["conv_id", "turn_idx"]
+
+# Output column spec: (name, Spark type, nullable, getter of one row's
+# result).  map_batches fills the pandas frame from it, map_turns
+# declares the mapInPandas schema from it.
+CONTENT_COLUMNS = [
+    ("extracted_text", StringType(), True, attrgetter("text")),
+    ("tier", StringType(), False, attrgetter("tier")),
+    ("chars_kept", IntegerType(), False, attrgetter("chars_kept")),
+]
 
 
 def wrap_turn(text: str) -> str:
@@ -126,12 +139,6 @@ def extract_one_result(
         return ExtractionResult(None, "error", 0, 0)
 
 
-def extract_one(text: Optional[str], options: Options, timeout: float = DEFAULT_TIMEOUT_SECS):
-    "Tuple face of extract_one_result: (extracted_text|None, tier, chars_kept)."
-    result = extract_one_result(text, options, timeout)
-    return result.text, result.tier, result.chars_kept
-
-
 def batch_slices(batches: Iterable[pd.DataFrame], max_chars: int) -> Iterator[pd.DataFrame]:
     """Consecutive row slices of each frame in ``batches`` whose summed
     ``text`` length stays bounded: a slice ends with the row that takes
@@ -150,44 +157,65 @@ def batch_slices(batches: Iterable[pd.DataFrame], max_chars: int) -> Iterator[pd
             yield pdf.iloc[start:]
 
 
+def map_batches(row_fn, columns: list, passthrough: Optional[list] = None):
+    """The per-row loop of every extraction operator: a mapInPandas
+    function that calls ``row_fn`` once per ``text`` and emits the
+    passthrough columns plus one column per ``columns`` spec entry.
+
+    Arrow batches are processed in slices of bounded text length
+    (batch_slices at DEFAULT_MAX_BATCH_CHARS, read when the function
+    runs).  Each column's value is taken from a row's result as soon as
+    the row finishes, so no result (nor the DOM trees it holds)
+    outlives its row."""
+    passthrough = passthrough or DEFAULT_PASSTHROUGH
+
+    def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for chunk in batch_slices(iterator, DEFAULT_MAX_BATCH_CHARS):
+            values = [[] for _ in columns]
+            for text in chunk["text"]:
+                result = row_fn(text)
+                for column, (_, _, _, get) in zip(values, columns):
+                    column.append(get(result))
+                del result
+            out = chunk[passthrough].copy()
+            for (name, dtype, _, _), column in zip(columns, values):
+                # integer columns are non-null, so int32 matches IntegerType
+                out[name] = pd.array(column, dtype="int32") if isinstance(dtype, IntegerType) else column
+            yield out
+
+    return batch
+
+
+def map_turns(
+    df: DataFrame,
+    fn,
+    columns: list,
+    passthrough: Optional[list] = None,
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """Run the batch function ``fn`` (map_batches) over ``df``: prune to
+    the passthrough columns plus ``text``, salt-repartition when
+    ``num_partitions`` is given, and declare the output schema as the
+    passthrough columns' input fields plus the ``columns`` spec."""
+    passthrough = passthrough or DEFAULT_PASSTHROUGH
+    pruned = df.select(*dict.fromkeys(passthrough + ["text"]))
+    if num_partitions is not None:
+        pruned = salted_repartition(pruned, num_partitions)
+    fields = [df.schema[c] for c in passthrough]
+    fields += [StructField(name, dtype, nullable) for name, dtype, nullable, _ in columns]
+    return pruned.mapInPandas(fn, schema=StructType(fields))
+
+
 def make_extract_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
-    max_batch_chars: int = DEFAULT_MAX_BATCH_CHARS,
 ):
-    """Build a mapInPandas function emitting passthrough columns +
-    (extracted_text, tier, chars_kept).
-
-    ``max_batch_chars`` bounds Python-side memory: an Arrow batch whose
-    summed text length exceeds it is processed in slices (batch_slices).
-    """
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
-
-    def extract_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in batch_slices(iterator, max_batch_chars):
-            extracted, tiers, kept = [], [], []
-            for text in chunk["text"]:
-                etext, tier, chars = extract_one(text, options, timeout)
-                extracted.append(etext)
-                tiers.append(tier)
-                kept.append(chars)
-            out = chunk[passthrough].copy()
-            out["extracted_text"] = extracted
-            out["tier"] = tiers
-            out["chars_kept"] = pd.array(kept, dtype="int32")
-            yield out
-
-    return extract_batch
+    "mapInPandas function emitting passthrough columns + CONTENT_COLUMNS."
+    return map_batches(lambda text: extract_one_result(text, options, timeout), CONTENT_COLUMNS, passthrough_cols)
 
 
-def extract_result_schema(df: DataFrame, passthrough_cols: Optional[list] = None) -> StructType:
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
-    fields = [df.schema[c] for c in passthrough]
-    return StructType(list(fields) + EXTRACT_RESULT_FIELDS)
-
-
-def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None, salt_buckets: int = 64) -> DataFrame:
+def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
     """Repartition on hash(conv_id, turn-bucket) so heavy conversations
     spread across partitions (north_rule: conv_id-salted repartitioning).
 
@@ -195,7 +223,7 @@ def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None, salt
     the salt prevents the opposite failure (one giant conv_id in one
     partition when a later stage partitions by conv_id alone).
     """
-    salt = F.pmod(F.col("turn_idx"), F.lit(salt_buckets))
+    salt = F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS))
     if num_partitions:
         return df.repartition(num_partitions, F.col("conv_id"), salt)
     return df.repartition(F.col("conv_id"), salt)
@@ -205,21 +233,12 @@ def extract_transcripts(
     df: DataFrame,
     options: Options = DEFAULT_OPTIONS,
     num_partitions: Optional[int] = None,
-    salt_buckets: int = 64,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
-    keep_discarded: bool = True,
 ) -> DataFrame:
-    """Full extraction operator: gates -> salted repartition -> Arrow batches.
-
-    With ``keep_discarded`` (the per-turn completeness contract) every
-    input turn yields an output row; rows the reference would discard
-    carry extracted_text=NULL plus a tier label, and the size gate runs
-    in the UDF.  With keep_discarded=False the null/size gates run as
-    Catalyst filters ahead of the UDF (whole-stage codegen, pushed into
-    the scan) — the throughput configuration for production sweeps.
-    """
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
+    """Full extraction operator: passthrough columns + CONTENT_COLUMNS,
+    one output row per input turn (rows the reference would discard
+    carry extracted_text=NULL plus a tier label)."""
     # Partitioning policy: extraction is per-turn (no co-location needed),
     # so the default trusts the input partitioning — for file/Iceberg
     # sources, spark.sql.files.maxPartitionBytes already yields balanced
@@ -227,24 +246,8 @@ def extract_transcripts(
     # Pass num_partitions to engage the conv_id-salted repartition when
     # the input is skewed (e.g. one giant conversation per input split)
     # or badly sized.
-    if keep_discarded:
-        gated = df
-    else:
-        # reference min/max file-size gate, utils.py:405-413 + settings.cfg:7-8,
-        # adjusted for the wrapping markup the kernel adds
-        wrap_len = len(WRAP_PREFIX) + len(WRAP_SUFFIX)
-        gated = df.filter(
-            F.col("text").isNotNull()
-            & (F.length("text") + F.lit(wrap_len) >= DEFAULT_OPTIONS.min_file_size)
-            & (F.length("text") + F.lit(wrap_len) <= DEFAULT_OPTIONS.max_file_size)
-        )
-    needed = list(dict.fromkeys(passthrough + ["text"]))
-    pruned = gated.select(*needed)  # column pruning reaches the scan
-    if num_partitions is not None:
-        pruned = salted_repartition(pruned, num_partitions, salt_buckets)
-    schema = extract_result_schema(df, passthrough)
-    fn = make_extract_batch_fn(options, passthrough, timeout)
-    return pruned.mapInPandas(fn, schema=schema)
+    fn = make_extract_batch_fn(options, passthrough_cols, timeout)
+    return map_turns(df, fn, CONTENT_COLUMNS, passthrough_cols, num_partitions)
 
 
 def make_extract_with_metadata_batch_fn(
@@ -257,68 +260,29 @@ def make_extract_with_metadata_batch_fn(
     shape.  One table scan, one Arrow crossing, and ONE HTML PARSE per
     document serve both outputs: bare_extract runs with with_metadata set
     and returns the metadata object extracted from the same parsed tree
-    (running the two standalone operators costs two of each).  Arrow
-    batches are sliced at DEFAULT_MAX_BATCH_CHARS (batch_slices)."""
-    from .metadata_op import METADATA_FIELDS
+    (running the two standalone operators costs two of each)."""
+    from .metadata_op import JOINED_METADATA_COLUMNS
 
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
     options = options.copy(with_metadata=True)
-
-    def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in batch_slices(iterator, DEFAULT_MAX_BATCH_CHARS):
-            extracted, tiers, kept = [], [], []
-            meta_cols: dict = {name: [] for name, _ in METADATA_FIELDS}
-            meta_cols["categories_joined"] = []
-            meta_cols["tags_joined"] = []
-            for text in chunk["text"]:
-                result = extract_one_result(text, options, timeout)
-                extracted.append(result.text)
-                tiers.append(result.tier)
-                kept.append(result.chars_kept)
-                meta = result.metadata
-                for name, _ in METADATA_FIELDS:
-                    meta_cols[name].append(getattr(meta, name, None) if meta else None)
-                meta_cols["categories_joined"].append(
-                    ",".join(meta.categories) if meta and meta.categories else None
-                )
-                meta_cols["tags_joined"].append(
-                    ",".join(meta.tags) if meta and meta.tags else None
-                )
-            out = chunk[passthrough].copy()
-            out["extracted_text"] = extracted
-            out["tier"] = tiers
-            out["chars_kept"] = pd.array(kept, dtype="int32")
-            for key, values in meta_cols.items():
-                out[key] = values
-            yield out
-
-    return batch
+    return map_batches(
+        lambda text: extract_one_result(text, options, timeout),
+        CONTENT_COLUMNS + JOINED_METADATA_COLUMNS,
+        passthrough_cols,
+    )
 
 
 def extract_with_metadata(
     df: DataFrame,
     options: Options = DEFAULT_OPTIONS,
     num_partitions: Optional[int] = None,
-    salt_buckets: int = 64,
     passthrough_cols: Optional[list] = None,
     timeout: float = DEFAULT_TIMEOUT_SECS,
 ) -> DataFrame:
     "Combined content + metadata extraction in a single Arrow stage."
-    from .metadata_op import METADATA_FIELDS
+    from .metadata_op import JOINED_METADATA_COLUMNS
 
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
-    needed = list(dict.fromkeys(passthrough + ["text"]))
-    pruned = df.select(*needed)
-    if num_partitions is not None:
-        pruned = salted_repartition(pruned, num_partitions, salt_buckets)
-    fields = [df.schema[c] for c in passthrough] + list(EXTRACT_RESULT_FIELDS)
-    fields += [StructField(name, dtype, True) for name, dtype in METADATA_FIELDS]
-    fields += [
-        StructField("categories_joined", StringType(), True),
-        StructField("tags_joined", StringType(), True),
-    ]
-    fn = make_extract_with_metadata_batch_fn(options, passthrough, timeout)
-    return pruned.mapInPandas(fn, schema=StructType(fields))
+    fn = make_extract_with_metadata_batch_fn(options, passthrough_cols, timeout)
+    return map_turns(df, fn, CONTENT_COLUMNS + JOINED_METADATA_COLUMNS, passthrough_cols, num_partitions)
 
 
 def assemble_conversations(

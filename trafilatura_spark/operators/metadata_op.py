@@ -7,15 +7,13 @@ Spark mapping)."""
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType
 
 from ..kernel.metadata import extract_metadata
-from .extract import DEFAULT_MAX_BATCH_CHARS, batch_slices
-from .extract import wrap_if_fragment  # noqa: F401  (canonical home: extract.py)
+from .extract import map_batches, map_turns, wrap_if_fragment
 
 METADATA_FIELDS = [
     ("title", StringType()),
@@ -31,43 +29,41 @@ METADATA_FIELDS = [
 ]
 
 
-def metadata_schema(df: DataFrame, passthrough_cols: Optional[list] = None) -> StructType:
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
-    fields = [df.schema[c] for c in passthrough]
-    fields += [StructField(name, dtype, True) for name, dtype in METADATA_FIELDS]
-    fields += [
-        StructField("categories", ArrayType(StringType()), True),
-        StructField("tags", ArrayType(StringType()), True),
-    ]
-    return StructType(fields)
+def _field(name: str, shape=lambda value: value):
+    "Getter of one Metadata field, passed through ``shape``; None without metadata."
+    return lambda meta: shape(getattr(meta, name, None)) if meta else None
+
+
+def _joined(values):
+    return ",".join(values) if values else None
+
+
+def _of_result(get):
+    "The same getter over an extraction result's metadata object."
+    return lambda result: get(result.metadata)
+
+
+# column spec (extract.py CONTENT_COLUMNS) over a Metadata object
+METADATA_COLUMNS = [(name, dtype, True, _field(name)) for name, dtype in METADATA_FIELDS] + [
+    ("categories", ArrayType(StringType()), True, _field("categories", list)),
+    ("tags", ArrayType(StringType()), True, _field("tags", list)),
+]
+# ... and over an ExtractionResult carrying one, list fields comma-joined
+JOINED_METADATA_COLUMNS = [(name, dtype, True, _of_result(_field(name))) for name, dtype in METADATA_FIELDS] + [
+    ("categories_joined", StringType(), True, _of_result(_field("categories", _joined))),
+    ("tags_joined", StringType(), True, _of_result(_field("tags", _joined))),
+]
+
+
+def _metadata_of(text: Optional[str]):
+    "The metadata object of one turn; None for a non-string text."
+    return extract_metadata(wrap_if_fragment(text)) if isinstance(text, str) else None
 
 
 def make_metadata_batch_fn(passthrough_cols: Optional[list] = None):
-    "Arrow batches are sliced at DEFAULT_MAX_BATCH_CHARS (extract.batch_slices)."
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
-
-    def metadata_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in batch_slices(iterator, DEFAULT_MAX_BATCH_CHARS):
-            records = {name: [] for name, _ in METADATA_FIELDS}
-            records["categories"] = []
-            records["tags"] = []
-            for text in chunk["text"]:
-                meta = extract_metadata(wrap_if_fragment(text)) if isinstance(text, str) else None
-                for name, _ in METADATA_FIELDS:
-                    records[name].append(getattr(meta, name, None) if meta else None)
-                records["categories"].append(list(meta.categories) if meta else None)
-                records["tags"].append(list(meta.tags) if meta else None)
-            out = chunk[passthrough].copy()
-            for key, values in records.items():
-                out[key] = values
-            yield out
-
-    return metadata_batch
+    "mapInPandas function emitting passthrough columns + METADATA_COLUMNS."
+    return map_batches(_metadata_of, METADATA_COLUMNS, passthrough_cols)
 
 
 def extract_metadata_columns(df: DataFrame, passthrough_cols: Optional[list] = None) -> DataFrame:
-    passthrough = passthrough_cols or ["conv_id", "turn_idx"]
-    needed = list(dict.fromkeys(passthrough + ["text"]))
-    return df.select(*needed).mapInPandas(
-        make_metadata_batch_fn(passthrough), schema=metadata_schema(df, passthrough)
-    )
+    return map_turns(df, make_metadata_batch_fn(passthrough_cols), METADATA_COLUMNS, passthrough_cols)

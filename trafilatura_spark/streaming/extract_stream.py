@@ -22,7 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import DEFAULT_OPTIONS, Options
-from ..operators.extract import make_extract_batch_fn
+from ..operators.extract import extract_transcripts
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -35,21 +35,10 @@ TRANSCRIPT_SCHEMA = StructType(
     ]
 )
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("extracted_text", StringType(), True),
-        StructField("tier", StringType(), False),
-        StructField("chars_kept", IntegerType(), False),
-    ]
-)
-
 
 def extract_stream_df(stream_df: DataFrame, options: Options = DEFAULT_OPTIONS) -> DataFrame:
     "Apply the extraction cascade to a streaming DataFrame of turns."
-    fn = make_extract_batch_fn(options, passthrough_cols=["conv_id", "turn_idx"])
-    return stream_df.select("conv_id", "turn_idx", "text").mapInPandas(fn, schema=OUTPUT_SCHEMA)
+    return extract_transcripts(stream_df, options)
 
 
 def windowed_tier_metrics(stream_df: DataFrame, options: Options = DEFAULT_OPTIONS,
@@ -59,18 +48,7 @@ def windowed_tier_metrics(stream_df: DataFrame, options: Options = DEFAULT_OPTIO
     extraction job (tier drift over ingestion time)."""
     from pyspark.sql import functions as F
 
-    fn = make_extract_batch_fn(options, passthrough_cols=["conv_id", "turn_idx", "ts"])
-    schema = StructType(
-        [
-            StructField("conv_id", StringType(), False),
-            StructField("turn_idx", IntegerType(), False),
-            StructField("ts", TimestampType(), True),
-            StructField("extracted_text", StringType(), True),
-            StructField("tier", StringType(), False),
-            StructField("chars_kept", IntegerType(), False),
-        ]
-    )
-    extracted = stream_df.select("conv_id", "turn_idx", "ts", "text").mapInPandas(fn, schema=schema)
+    extracted = extract_transcripts(stream_df, options, passthrough_cols=["conv_id", "turn_idx", "ts"])
     return (
         extracted.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), F.col("tier"))
@@ -142,20 +120,7 @@ def conversation_running_state(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    fn = make_extract_batch_fn(options, passthrough_cols=["conv_id", "turn_idx", "ts"])
-    extract_schema = StructType(
-        [
-            StructField("conv_id", StringType(), False),
-            StructField("turn_idx", IntegerType(), False),
-            StructField("ts", TimestampType(), True),
-            StructField("extracted_text", StringType(), True),
-            StructField("tier", StringType(), False),
-            StructField("chars_kept", IntegerType(), False),
-        ]
-    )
-    extracted = stream_df.select("conv_id", "turn_idx", "ts", "text").mapInPandas(
-        fn, schema=extract_schema
-    )
+    extracted = extract_transcripts(stream_df, options, passthrough_cols=["conv_id", "turn_idx", "ts"])
 
     out_schema = (
         "conv_id string, n_turns bigint, total_chars bigint, max_turn_idx int, finalized boolean"
