@@ -1,7 +1,21 @@
-"""Resumability (per-partition lineage manifest) and streaming parity."""
+"""Resumability (per-partition lineage manifest) and streaming parity.
+
+``test_task_retry_keeps_manifest_exact`` runs its Spark job in a
+local[2,2] subprocess (the session fixture never retries a task);
+``PYTHONPATH=. python tests/test_lineage_streaming.py SCRATCH_DIR`` prints
+that run's comparison as JSON.
+"""
+
+import json
+import os
+import subprocess
+import sys
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -11,7 +25,8 @@ def small_df(spark):
     return transcripts_df(spark, 12, num_slices=2)
 
 
-def test_resume_after_simulated_crash(spark, small_df, tmp_path):
+def test_resume_after_simulated_crash(spark, small_df, tmp_path, monkeypatch):
+    from trafilatura_spark.plans import lineage
     from trafilatura_spark.plans.lineage import (
         completed_buckets,
         read_manifest,
@@ -21,11 +36,20 @@ def test_resume_after_simulated_crash(spark, small_df, tmp_path):
 
     out = str(tmp_path / "run1")
     n_buckets = 8
-    # crash after one wave of 4 buckets
-    summary1 = run_resumable_extraction(
-        spark, small_df, out, n_buckets=n_buckets, wave_size=4, fail_after_waves=1
-    )
-    assert summary1["completed"] == 4
+    # crash in the second wave of 4 buckets
+    real_extract = lineage.extract_transcripts
+    calls = []
+
+    def crash_in_second_wave(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash in wave 2")
+        return real_extract(*args, **kwargs)
+
+    monkeypatch.setattr(lineage, "extract_transcripts", crash_in_second_wave)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_resumable_extraction(spark, small_df, out, n_buckets=n_buckets, wave_size=4)
+    monkeypatch.undo()
     assert len(completed_buckets(spark, out)) == 4
 
     # resume: only the remaining buckets run
@@ -46,6 +70,56 @@ def test_resume_after_simulated_crash(spark, small_df, tmp_path):
     assert sum(r.n_turns for r in rows) == small_df.count()
 
 
+def _tree(root) -> dict:
+    "Every file under root with its size and modification time."
+    return {
+        str(p): (p.stat().st_size, p.stat().st_mtime_ns) for p in sorted(root.rglob("*")) if p.is_file()
+    }
+
+
+def test_corrupt_manifest_raises_before_writing(spark, small_df, tmp_path):
+    """A manifest that cannot be read must fail the run: treating it as
+    missing would re-extract every bucket and append duplicate rows."""
+    from trafilatura_spark.plans.lineage import run_resumable_extraction
+
+    out = tmp_path / "corrupt"
+    run_resumable_extraction(spark, small_df, str(out), n_buckets=4, wave_size=4)
+    part = sorted((out / "_lineage_manifest").glob("part-*.parquet"))[0]
+    part.write_bytes(b"not a parquet file")
+    before = _tree(out)
+    with pytest.raises(Py4JJavaError):
+        run_resumable_extraction(spark, small_df, str(out), n_buckets=4, wave_size=4)
+    assert _tree(out) == before, "a failed manifest read must write nothing"
+
+
+def test_interrupted_first_manifest_append_resumes(spark, small_df, tmp_path):
+    """A manifest directory holding only a killed write's _temporary has
+    no completed bucket: the run starts from scratch instead of failing."""
+    from trafilatura_spark.plans.lineage import completed_buckets, run_resumable_extraction
+
+    out = tmp_path / "interrupted"
+    (out / "_lineage_manifest" / "_temporary" / "0").mkdir(parents=True)
+    assert completed_buckets(spark, str(out)) == set()
+    summary = run_resumable_extraction(spark, small_df, str(out), n_buckets=4, wave_size=4)
+    assert summary["resumed_from"] == 0 and summary["completed"] == 4
+
+
+def test_fresh_run_job_count(spark, small_df, tmp_path):
+    "A wave is one extraction write plus one manifest append: two jobs."
+    from trafilatura_spark.plans.lineage import run_resumable_extraction
+
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage-job-count", "fresh resumable run")
+    try:
+        summary = run_resumable_extraction(spark, small_df, str(tmp_path / "jobs"), n_buckets=8, wave_size=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("lineage-job-count")
+    assert summary["waves_run"] == 2
+    assert 0 < len(jobs) <= 2 * summary["waves_run"] + 1, jobs
+
+
 def test_rerun_is_idempotent(spark, small_df, tmp_path):
     from trafilatura_spark.plans.lineage import read_output, run_resumable_extraction
 
@@ -56,6 +130,111 @@ def test_rerun_is_idempotent(spark, small_df, tmp_path):
     assert summary["waves_run"] == 0  # nothing left to do
     second = {(r.conv_id, r.turn_idx): r.extracted_text for r in read_output(spark, out).collect()}
     assert first == second
+
+
+def _fail_first_attempt_factory(marker_dir: str):
+    """A make_extract_batch_fn whose function fails attempt 0 of partition
+    0 right after that task yielded its first batch, leaving a marker."""
+    from trafilatura_spark.operators import extract
+
+    real = extract.make_extract_batch_fn
+
+    def factory(*args, **kwargs):
+        fn = real(*args, **kwargs)
+
+        def batch(iterator):
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            for out in fn(iterator):
+                yield out
+                if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+                    open(os.path.join(marker_dir, f"stage{ctx.stageId()}"), "w").close()
+                    raise RuntimeError("injected task failure after a yielded batch")
+
+        return batch
+
+    return factory
+
+
+def retry_run(work: str) -> dict:
+    """One clean resumable run and one whose tasks fail once and retry, in
+    a local[2,2] session; returns the rows each output differs by."""
+    from pyspark.sql import SparkSession
+
+    from trafilatura_spark.fixtures import transcripts_df
+    from trafilatura_spark.operators import extract
+    from trafilatura_spark.plans.lineage import read_manifest, read_output, run_resumable_extraction
+
+    spark = (
+        SparkSession.builder.master("local[2,2]")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "512m")
+        # several Arrow batches per task, so the failure follows yielded rows
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+        .config("spark.local.dir", work)
+        .config("spark.sql.warehouse.dir", os.path.join(work, "warehouse"))
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("OFF")
+    markers = os.path.join(work, "markers")
+    os.makedirs(markers)
+    real = extract.make_extract_batch_fn
+    try:
+        df = transcripts_df(spark, 12, num_slices=2)
+        kwargs = dict(n_buckets=8, wave_size=4)
+        run_resumable_extraction(spark, df, os.path.join(work, "clean"), **kwargs)
+        extract.make_extract_batch_fn = _fail_first_attempt_factory(markers)
+        run_resumable_extraction(spark, df, os.path.join(work, "retried"), **kwargs)
+        out = {"injected": len(os.listdir(markers))}
+        for name, read in (("manifest", read_manifest), ("data", read_output)):
+            clean, retried = (
+                read(spark, os.path.join(work, run)).drop("wall_seconds") for run in ("clean", "retried")
+            )
+            out[name] = [clean.exceptAll(retried).count(), retried.exceptAll(clean).count(), clean.count()]
+        return out
+    finally:
+        extract.make_extract_batch_fn = real
+        spark.stop()
+
+
+def test_task_retry_keeps_manifest_exact(tmp_path):
+    """The manifest metrics come from an Observation on the write, which
+    counts only successful task attempts: a task that fails after
+    yielding rows and is retried must not change them."""
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), str(tmp_path)],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["injected"] > 0, got
+    assert got["manifest"] == [0, 0, 8], got
+    assert got["data"][:2] == [0, 0] and got["data"][2] > 0, got
+
+
+def test_running_state_function_pickles_by_reference(spark, monkeypatch):
+    """The applyInPandasWithState function is a module-level package
+    function, so a worker that unpickles it imports the package (and
+    installs its zip re-read guard) instead of receiving code by value."""
+    import pickletools
+
+    from pyspark import cloudpickle
+    from pyspark.sql.group import GroupedData
+
+    from trafilatura_spark.streaming.extract_stream import TRANSCRIPT_SCHEMA, conversation_running_state
+
+    captured = []
+    monkeypatch.setattr(
+        GroupedData, "applyInPandasWithState", lambda self, func, *args: captured.append(func)
+    )
+    conversation_running_state(spark.createDataFrame([], TRANSCRIPT_SCHEMA))
+    strings = {
+        arg for op, arg, _ in pickletools.genops(cloudpickle.dumps(captured[0])) if isinstance(arg, str)
+    }
+    assert "trafilatura_spark.streaming.extract_stream" in strings
+    assert "CodeType" not in strings, "the function was pickled by value"
 
 
 def test_streaming_matches_batch(spark, small_df, tmp_path):
@@ -281,3 +460,7 @@ def test_streaming_quality_filters_stateless(spark, tmp_path):
         assert got[k].asDict() == want[k].asDict()
     assert got[2].rep_passes is False          # spam 2-gram
     assert got[3].dup_para_frac > 0.3          # duplicated paragraph
+
+
+if __name__ == "__main__":
+    print(json.dumps(retry_run(sys.argv[1])))

@@ -20,7 +20,6 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 ROWS_ONLY_ALLOWLIST = {
     "extract_turn_metadata",
     "extract_transcript_turns",
-    "extract_tier_metrics",
     "text_lang_id_ngram",  # rank-profile arithmetic has no SQL twin
 }
 

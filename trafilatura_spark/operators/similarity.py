@@ -98,13 +98,6 @@ def lsh_buckets(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding
     return df.select(F.col(id_col), bucket.cast("int").alias("bucket"))
 
 
-def lsh_buckets_sql(table: str = "embeddings", id_col: str = "vec_id", vec_col: str = "embedding") -> str:
-    bits = " + ".join(
-        f"CASE WHEN {vec_col}[{d + 1}] > 0 THEN {1 << d} ELSE 0 END" for d in range(LSH_DIMS)
-    )
-    return f"SELECT {id_col}, CAST({bits} AS INT) AS bucket FROM {table}"
-
-
 def lsh_topk(
     df: DataFrame,
     k: int = 3,

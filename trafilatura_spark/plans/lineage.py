@@ -12,18 +12,24 @@ Spark-native orchestration:
   partition overwrite, so re-processing a bucket is idempotent.
 - a manifest parquet (one row per completed bucket) records status +
   extraction metrics (turn counts, chars kept, per-tier counts).  Job
-  start anti-joins completed buckets; only missing buckets run.
-- buckets are processed in waves; the manifest commits after each wave,
-  bounding lost work to one wave on failure.
+  start reads the completed buckets; only missing buckets run.
+- buckets are processed in waves.  A wave is one extraction write plus
+  one manifest append, so a failure loses at most one wave.  Nothing is
+  cached: every wave re-reads the input, and so does every resumed run,
+  so the input must be deterministic across re-reads.
+- the manifest metrics are observed on the wave's write (one
+  ``Observation`` of per-bucket conditional sums), not computed by a
+  second pass; an empty bucket sums to 0 and still gets its row.
+  ``wall_seconds`` is the wave's write wall time, stamped on each of its
+  buckets.
 """
 
 from __future__ import annotations
 
-import os
 import time
-from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernel import DEFAULT_OPTIONS, Options
@@ -31,14 +37,26 @@ from ..operators.extract import extract_transcripts
 
 MANIFEST_SUBDIR = "_lineage_manifest"
 DATA_SUBDIR = "data"
+MANIFEST_SCHEMA = (
+    "part_bucket int, n_turns bigint, chars_kept bigint, n_extracted bigint,"
+    " n_main bigint, n_discarded bigint, status string, wall_seconds double"
+)
+# per-row value (SQL) of each manifest metric; a bucket's metric is its sum
+METRICS = {
+    "n_turns": "1",
+    "chars_kept": "chars_kept",
+    "n_extracted": "CAST(extracted_text IS NOT NULL AS INT)",
+    "n_main": "CAST(tier = 'main' AS INT)",
+    "n_discarded": "CAST(tier LIKE 'disc%' AS INT)",
+}
 
 
 def _manifest_path(output_path: str) -> str:
-    return os.path.join(output_path, MANIFEST_SUBDIR)
+    return f"{output_path.rstrip('/')}/{MANIFEST_SUBDIR}"
 
 
 def _data_path(output_path: str) -> str:
-    return os.path.join(output_path, DATA_SUBDIR)
+    return f"{output_path.rstrip('/')}/{DATA_SUBDIR}"
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -49,10 +67,11 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set:
     "Buckets already marked done in the manifest (empty set on first run)."
-    path = _manifest_path(output_path)
     try:
-        manifest = spark.read.parquet(path)
-    except Exception:
+        manifest = read_manifest(spark, output_path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return set()
     return {r.part_bucket for r in manifest.filter(F.col("status") == "done").select("part_bucket").collect()}
 
@@ -64,75 +83,48 @@ def run_resumable_extraction(
     n_buckets: int = 64,
     wave_size: int = 16,
     options: Options = DEFAULT_OPTIONS,
-    fail_after_waves: Optional[int] = None,
 ) -> dict:
-    """Run (or resume) the extraction job.  Returns a summary dict.
-
-    ``fail_after_waves`` is a test hook: stop after N waves to simulate a
-    crash; the next call resumes from the manifest.
-    """
+    "Run (or resume) the extraction job.  Returns a summary dict."
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # cache the bucketed input: every wave filters it, and without the cache
-    # each wave would recompute the full input lineage
-    bucketed = with_bucket(df, n_buckets).persist()
     done = completed_buckets(spark, output_path)
     todo = sorted(set(range(n_buckets)) - done)
+    waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
+    bucketed = with_bucket(df, n_buckets)
 
-    waves_run = 0
-    for wave_start in range(0, len(todo), wave_size):
-        wave = todo[wave_start : wave_start + wave_size]
-        wave_df = bucketed.filter(F.col("part_bucket").isin(wave))
+    for wave in waves:
         extracted = extract_transcripts(
-            wave_df,
+            bucketed.filter(F.col("part_bucket").isin(wave)),
             options=options,
             passthrough_cols=["conv_id", "turn_idx", "part_bucket"],
-        ).persist()  # one extraction pass serves both the write and the metrics
+        )
+        observation = Observation()
+        observed = extracted.observe(
+            observation,
+            *(
+                F.expr(f"SUM(IF(part_bucket = {b}, {value}, 0)) AS {name}_{b}")
+                for b in wave
+                for name, value in METRICS.items()
+            ),
+        )
         t0 = time.monotonic()
         # idempotent write: dynamic overwrite replaces exactly these buckets
-        (
-            extracted.write.mode("overwrite")
-            .partitionBy("part_bucket")
-            .parquet(_data_path(output_path))
-        )
-        elapsed = time.monotonic() - t0
+        observed.write.mode("overwrite").partitionBy("part_bucket").parquet(_data_path(output_path))
+        elapsed = round(time.monotonic() - t0, 3)
 
-        # lineage row per bucket with extraction metrics.  A left join FROM
-        # the wave's bucket list backfills zero-count rows for EMPTY
-        # buckets: without them an empty bucket never reaches the manifest,
-        # is never marked done, and re-runs on every resume.  The per-wave
-        # metrics aggregate is at most len(wave) rows, so IT is the
-        # broadcast side (a broadcast hint on the preserved side of an
-        # outer join is unachievable and would be silently dropped).
-        wave_buckets = spark.createDataFrame(
-            [(int(b),) for b in wave], "part_bucket int"
+        # a wave with no rows at all reports NULL sums
+        sums = observation.get
+        rows = [
+            (b, *(sums[f"{name}_{b}"] or 0 for name in METRICS), "done", elapsed) for b in wave
+        ]
+        spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+            _manifest_path(output_path)
         )
-        wave_metrics = extracted.groupBy("part_bucket").agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum("chars_kept").alias("chars_kept"),
-            F.count("extracted_text").alias("n_extracted"),
-            F.sum(F.when(F.col("tier") == "main", 1).otherwise(0)).alias("n_main"),
-            F.sum(F.when(F.col("tier").startswith("disc"), 1).otherwise(0)).alias("n_discarded"),
-        )
-        metrics = (
-            wave_buckets.join(F.broadcast(wave_metrics), "part_bucket", "left")
-            .fillna(0, ["n_turns", "chars_kept", "n_extracted", "n_main", "n_discarded"])
-            .withColumn("status", F.lit("done"))
-            .withColumn("wall_seconds", F.lit(round(elapsed, 3)))
-        )
-        metrics.write.mode("append").parquet(_manifest_path(output_path))
-        extracted.unpersist()
 
-        waves_run += 1
-        if fail_after_waves is not None and waves_run >= fail_after_waves:
-            break
-
-    bucketed.unpersist()
-    final_done = completed_buckets(spark, output_path)
     return {
         "n_buckets": n_buckets,
         "resumed_from": len(done),
-        "completed": len(final_done),
-        "waves_run": waves_run,
+        "completed": len(done.union(todo)),
+        "waves_run": len(waves),
     }
 
 
@@ -141,4 +133,6 @@ def read_output(spark: SparkSession, output_path: str) -> DataFrame:
 
 
 def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
-    return spark.read.parquet(_manifest_path(output_path))
+    # the explicit schema reads a directory that holds no part-file yet
+    # (a first append killed mid-write) as empty instead of failing inference
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_path(output_path))

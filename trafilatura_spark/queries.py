@@ -1177,7 +1177,7 @@ def extract_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_tier_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    "Pipeline metrics: per-tier row counts + chars kept (rows-only oracle)."
+    "Pipeline metrics: per-tier row counts + chars kept (value-matched oracle)."
     out = extract_transcript_turns(spark, sf_dir)
     return (
         out.groupBy("tier")
@@ -1525,7 +1525,7 @@ ORACLE_SQL = {
     SELECT * FROM read_parquet('/root/repo/tests/fixtures/turn_metadata_expected.parquet')
     """,
     "extract_tier_metrics": """
-    SELECT tier, COUNT(*) AS n_turns, SUM(chars_kept) AS total_chars
+    SELECT tier, COUNT(*) AS n_turns, CAST(SUM(chars_kept) AS BIGINT) AS total_chars
     FROM read_parquet('/root/repo/tests/fixtures/cascade_turns_expected.parquet')
     GROUP BY tier ORDER BY tier
     """,

@@ -10,8 +10,10 @@ deterministic so replays are idempotent.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -101,6 +103,35 @@ def start_file_stream(
     return writer.start()
 
 
+def _update_conv(gap_ms, key, pdfs, state):
+    "One conversation's step of conversation_running_state (applyInPandasWithState)."
+    (conv_id,) = key
+    if state.hasTimedOut:
+        n, chars, mx = state.get
+        state.remove()
+        yield pd.DataFrame(
+            [{"conv_id": conv_id, "n_turns": n, "total_chars": chars,
+              "max_turn_idx": mx, "finalized": True}]
+        )
+        return
+    n, chars, mx = state.get if state.exists else (0, 0, -1)
+    latest = None
+    for pdf in pdfs:
+        n += len(pdf)
+        chars += int(pdf["chars_kept"].fillna(0).sum())
+        mx = max(mx, int(pdf["turn_idx"].max()))
+        ts_max = pdf["ts"].max()
+        if not pd.isna(ts_max):
+            latest = ts_max if latest is None else max(latest, ts_max)
+    state.update((n, chars, mx))
+    if latest is not None:
+        state.setTimeoutTimestamp(int(latest.timestamp() * 1000) + gap_ms)
+    yield pd.DataFrame(
+        [{"conv_id": conv_id, "n_turns": n, "total_chars": chars,
+          "max_turn_idx": mx, "finalized": False}]
+    )
+
+
 def conversation_running_state(
     stream_df: DataFrame,
     options: Options = DEFAULT_OPTIONS,
@@ -117,7 +148,6 @@ def conversation_running_state(
     the north star's "custom stateful operator" shape: state lives in the
     state store (RocksDB/HDFS-backed on a cluster), keyed by conv_id, so
     memory scales with ACTIVE conversations, not corpus size."""
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     extracted = extract_transcripts(stream_df, options, passthrough_cols=["conv_id", "turn_idx", "ts"])
@@ -126,39 +156,13 @@ def conversation_running_state(
         "conv_id string, n_turns bigint, total_chars bigint, max_turn_idx int, finalized boolean"
     )
     state_schema = "n_turns bigint, total_chars bigint, max_turn_idx int"
-    gap_ms = gap_minutes * 60_000
-
-    def update_conv(key, pdfs, state):
-        (conv_id,) = key
-        if state.hasTimedOut:
-            n, chars, mx = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [{"conv_id": conv_id, "n_turns": n, "total_chars": chars,
-                  "max_turn_idx": mx, "finalized": True}]
-            )
-            return
-        n, chars, mx = state.get if state.exists else (0, 0, -1)
-        latest = None
-        for pdf in pdfs:
-            n += len(pdf)
-            chars += int(pdf["chars_kept"].fillna(0).sum())
-            mx = max(mx, int(pdf["turn_idx"].max()))
-            ts_max = pdf["ts"].max()
-            if not pd.isna(ts_max):
-                latest = ts_max if latest is None else max(latest, ts_max)
-        state.update((n, chars, mx))
-        if latest is not None:
-            state.setTimeoutTimestamp(int(latest.timestamp() * 1000) + gap_ms)
-        yield pd.DataFrame(
-            [{"conv_id": conv_id, "n_turns": n, "total_chars": chars,
-              "max_turn_idx": mx, "finalized": False}]
-        )
-
     return (
         extracted.withWatermark("ts", f"{gap_minutes} minutes")
         .groupBy("conv_id")
         .applyInPandasWithState(
-            update_conv, out_schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout
+            # module-level function bound by partial: pickled by reference, so
+            # the worker imports the package (and its zip re-read guard)
+            partial(_update_conv, gap_minutes * 60_000),
+            out_schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout,
         )
     )
