@@ -5,8 +5,9 @@ PySpark's worker runs at the start of each task — re-reads the central
 directory of every zip archive on the worker path.  The guard skips the
 re-read of an archive that has not changed.  The unit test checks the
 guard in this process; the Spark test counts the re-reads a reused
-local[1] Python worker still makes after each extraction operator ran in
-it.  ``PYTHONPATH=. python tests/test_worker_setup.py SCRATCH_DIR`` prints
+local[1] Python worker still makes after each extraction operator, or
+the streaming per-conversation state function, ran in it.
+``PYTHONPATH=. python tests/test_worker_setup.py SCRATCH_DIR`` prints
 those counts as JSON.
 """
 
@@ -106,23 +107,53 @@ def _wrap_reads(iterator):
 
 
 def _report_reads(iterator):
-    "Probe 2: the reads counted since probe 1, i.e. by this task's setup."
+    """Probe 2: the reads counted since probe 1, i.e. by this task's
+    setup, and whether this worker imported the streaming module."""
     import zipimport as zi
 
     import pandas as pd
 
     for _ in iterator:
         pass
-    yield pd.DataFrame({"pid": [os.getpid()], "reads": [getattr(zi._read_directory, "calls", -1)]})
+    yield pd.DataFrame({
+        "pid": [os.getpid()],
+        "reads": [getattr(zi._read_directory, "calls", -1)],
+        "streaming": [STREAMING_MODULE in sys.modules],
+    })
 
 
 def _identity(iterator):
     yield from iterator
 
 
+# imported by a worker only when it unpickles the state function
+STREAMING_MODULE = "trafilatura_spark.streaming.extract_stream"
+
+
+def _drain_running_state(df, local_dir: str) -> None:
+    "Run conversation_running_state over ``df``'s turns as a drained file stream."
+    from pyspark.sql import functions as F
+
+    from trafilatura_spark.streaming.extract_stream import TRANSCRIPT_SCHEMA, conversation_running_state
+
+    source = os.path.join(local_dir, "stream_in")
+    df.select(
+        "conv_id", "turn_idx", F.lit("user").alias("role"), "text",
+        F.lit(None).cast("string").alias("tool"), F.current_timestamp().alias("ts"),
+    ).write.mode("overwrite").parquet(source)
+    stream = df.sparkSession.readStream.schema(TRANSCRIPT_SCHEMA).parquet(source)
+    query = (
+        conversation_running_state(stream).writeStream.format("noop")
+        .option("checkpointLocation", os.path.join(local_dir, "stream_checkpoint"))
+        .outputMode("update").trigger(availableNow=True).start()
+    )
+    query.awaitTermination()
+
+
 def probe_rereads(local_dir: str) -> dict:
     """For each case, a fresh local[1] session runs one job, then the two
-    probes in the same reused worker; returns case -> (reads, pids)."""
+    probes in the same reused worker; returns case -> (reads, pids,
+    whether the worker imported the streaming module)."""
     from pyspark.sql import SparkSession
 
     from trafilatura_spark.operators.extract import extract_transcripts, extract_with_metadata
@@ -134,17 +165,19 @@ def probe_rereads(local_dir: str) -> dict:
     )
     rows = [("c1", 0, page), ("c1", 1, "<p>" + "a short turn of text " * 8 + "</p>"), ("c2", 0, None)]
     cases = {
-        "identity": lambda df: df.mapInPandas(_identity, schema=df.schema),
-        "extract_transcripts": extract_transcripts,
-        "extract_with_metadata": extract_with_metadata,
-        "extract_metadata_columns": extract_metadata_columns,
+        "identity": lambda df: df.mapInPandas(_identity, schema=df.schema).collect(),
+        "extract_transcripts": lambda df: extract_transcripts(df).collect(),
+        "extract_with_metadata": lambda df: extract_with_metadata(df).collect(),
+        "extract_metadata_columns": lambda df: extract_metadata_columns(df).collect(),
+        "conversation_running_state": lambda df: _drain_running_state(df, local_dir),
     }
     out = {}
-    for name, operator in cases.items():
+    for name, run in cases.items():
         spark = (
             SparkSession.builder.master("local[1]")
             .config("spark.ui.enabled", "false")
             .config("spark.driver.memory", "512m")
+            .config("spark.sql.shuffle.partitions", "1")
             .config("spark.local.dir", local_dir)
             .config("spark.sql.warehouse.dir", os.path.join(local_dir, "warehouse"))
             .getOrCreate()
@@ -152,11 +185,11 @@ def probe_rereads(local_dir: str) -> dict:
         spark.sparkContext.setLogLevel("ERROR")
         try:
             df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string").coalesce(1)
-            operator(df).collect()
+            run(df)
             probe = spark.range(1).coalesce(1)
             first = probe.mapInPandas(_wrap_reads, "pid long, reads long").collect()[0]
-            second = probe.mapInPandas(_report_reads, "pid long, reads long").collect()[0]
-            out[name] = {"reads": second.reads, "pids": [first.pid, second.pid]}
+            second = probe.mapInPandas(_report_reads, "pid long, reads long, streaming boolean").collect()[0]
+            out[name] = {"reads": second.reads, "pids": [first.pid, second.pid], "streaming": second.streaming}
         finally:
             spark.stop()
     return out
@@ -174,7 +207,11 @@ def test_no_zip_rereads_after_extraction_operators(tmp_path):
         assert rec["pids"][0] == rec["pids"][1], f"{name}: probes ran in two workers {rec}"
     # the probe sees the stock re-reads when no package batch function ran
     assert counts["identity"]["reads"] > 0, counts
-    for name in ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns"):
+    # one local[1] worker runs every task, so the probed worker is the one
+    # that ran the state function
+    assert counts["conversation_running_state"]["streaming"], counts
+    for name in ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns",
+                 "conversation_running_state"):
         assert counts[name]["reads"] == 0, f"{name}: {counts[name]}"
 
 

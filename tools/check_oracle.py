@@ -14,15 +14,6 @@ sys.path.insert(0, ".")
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-# Queries intentionally WITHOUT a DuckDB twin (full cascade: not SQL-
-# expressible).  Any other query missing from oracle_sql() is a gate
-# failure, and rows-only entries must still return rows.
-ROWS_ONLY_ALLOWLIST = {
-    "extract_turn_metadata",
-    "extract_transcript_turns",
-    "text_lang_id_ngram",  # rank-profile arithmetic has no SQL twin
-}
-
 
 def _norm_cell(v):
     if v is None:
@@ -91,14 +82,8 @@ def main() -> int:
             failures.append(name)
             continue
         if name not in oracles:
-            if name not in ROWS_ONLY_ALLOWLIST:
-                print(f"FAIL {name}: no oracle_sql twin and not in ROWS_ONLY_ALLOWLIST")
-                failures.append(name)
-            elif not srows:
-                print(f"FAIL {name}: rows-only check returned 0 rows")
-                failures.append(name)
-            else:
-                print(f"ok   {name}: rows-only check, {len(srows)} rows")
+            print(f"FAIL {name}: no oracle_sql twin")
+            failures.append(name)
             continue
         try:
             res = con.execute(oracles[name])

@@ -97,6 +97,15 @@ def line_processing(line: str, preserve_space: bool = False, trailing_space: boo
     return new_line
 
 
+def clear_string_memos() -> None:
+    """Empty the ``trim`` and ``line_processing`` memos.  Their keys and
+    values are arbitrary texts, whole documents included, so the batch
+    loop calls this after every row: their hits within one document
+    stay, but no memoized string outlives its row in a reused worker."""
+    trim.cache_clear()
+    line_processing.cache_clear()
+
+
 def sanitize(text: Optional[str], preserve_space: bool = False, trailing_space: bool = False) -> Optional[str]:
     "Line-by-line cleanup (reference utils.py:321-332)."
     if trailing_space:

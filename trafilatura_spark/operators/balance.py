@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_for_compute(df: DataFrame, min_rows: int = 0) -> DataFrame:
+def spread_for_compute(df: DataFrame) -> DataFrame:
     """Round-robin rebalance when (and only when) the plan would scan
     fewer partitions than the session has cores."""
     if df.isStreaming:

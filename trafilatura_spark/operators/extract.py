@@ -20,6 +20,10 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): the cascade aborts
   cooperatively at stage/element checkpoints, yielding tier='timeout'.
+- worker memory is one Arrow batch (spark.sql.execution.arrow.maxBytesPerBatch)
+  with the output columns built from it, plus the one document being
+  extracted: map_batches drops each row's result and clears the kernel's
+  string memos after the row.
 - importing the package installs worker_setup's zip re-read guard in the
   worker: on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
   otherwise re-reads spark-core's jar and pyspark.zip in every task.
@@ -29,7 +33,7 @@ from __future__ import annotations
 
 import time
 from operator import attrgetter
-from typing import Iterable, Iterator, Optional
+from typing import Iterator, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -42,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import DEFAULT_OPTIONS, Options, bare_extract
+from ..kernel.textutils import clear_string_memos
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
 # single-block fragments, so turns are wrapped identically everywhere
@@ -49,9 +54,6 @@ WRAP_PREFIX = "<html><body>"
 WRAP_SUFFIX = "</body></html>"
 
 DEFAULT_TIMEOUT_SECS = 30.0
-# the reference's 20 MB per-doc gate times a small factor (SURVEY.md §7
-# hard part 6): bounds the Python-side memory of one batch slice
-DEFAULT_MAX_BATCH_CHARS = 32_000_000
 # turn_idx buckets per conv_id in salted_repartition
 SALT_BUCKETS = 64
 DEFAULT_PASSTHROUGH = ["conv_id", "turn_idx"]
@@ -139,44 +141,27 @@ def extract_one_result(
         return ExtractionResult(None, "error", 0, 0)
 
 
-def batch_slices(batches: Iterable[pd.DataFrame], max_chars: int) -> Iterator[pd.DataFrame]:
-    """Consecutive row slices of each frame in ``batches`` whose summed
-    ``text`` length stays bounded: a slice ends with the row that takes
-    it past ``max_chars``, so peak Python-side memory tracks
-    ``max_chars`` and not the Arrow batch.  Non-string texts count as 0
-    characters; an empty frame yields no slice."""
-    for pdf in batches:
-        lengths = [len(t) if isinstance(t, str) else 0 for t in pdf["text"]]
-        start = acc = 0
-        for end, length in enumerate(lengths, 1):
-            acc += length
-            if acc > max_chars:
-                yield pdf.iloc[start:end]
-                start, acc = end, 0
-        if start < len(lengths):
-            yield pdf.iloc[start:]
-
-
 def map_batches(row_fn, columns: list, passthrough: Optional[list] = None):
     """The per-row loop of every extraction operator: a mapInPandas
     function that calls ``row_fn`` once per ``text`` and emits the
     passthrough columns plus one column per ``columns`` spec entry.
 
-    Arrow batches are processed in slices of bounded text length
-    (batch_slices at DEFAULT_MAX_BATCH_CHARS, read when the function
-    runs).  Each column's value is taken from a row's result as soon as
-    the row finishes, so no result (nor the DOM trees it holds)
-    outlives its row."""
+    Each column's value is taken from a row's result as soon as the row
+    finishes, and the kernel's string memos are cleared with it, so
+    neither a result (nor the DOM trees it holds) nor a memoized string
+    outlives its row: a worker holds its Arrow batch, the output columns
+    built from it, and one document."""
     passthrough = passthrough or DEFAULT_PASSTHROUGH
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for chunk in batch_slices(iterator, DEFAULT_MAX_BATCH_CHARS):
+        for chunk in iterator:
             values = [[] for _ in columns]
             for text in chunk["text"]:
                 result = row_fn(text)
                 for column, (_, _, _, get) in zip(values, columns):
                     column.append(get(result))
                 del result
+                clear_string_memos()
             out = chunk[passthrough].copy()
             for (name, dtype, _, _), column in zip(columns, values):
                 # integer columns are non-null, so int32 matches IntegerType

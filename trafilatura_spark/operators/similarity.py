@@ -163,10 +163,9 @@ def lsh_multitable_topk(
     minhash LSH), so recall grows with tables while each table keeps
     2^D buckets — the fix for the single-table variant's 256-bucket
     ceiling (one table's bucket join approaches n^2/2^D at corpus scale;
-    more, narrower tables keep every bucket join small)."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df.select(id_col, vec_col))
+    more, narrower tables keep every bucket join small).  Not input-
+    rebalanced: every path joins straight away, and a round-robin ahead
+    of the bucket join measured slower."""
     vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
     buckets = df.select(
         F.col(id_col),

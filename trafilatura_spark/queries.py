@@ -5,7 +5,7 @@ Relational-shell queries validate the engine's Catalyst-side plumbing
 (filters, aggregations, windows, joins over the star schema); training-
 pipeline queries (dedup / similarity / textstats) validate the
 first-class 100 TB operators; extraction queries run the kernel through
-mapInPandas (rows-only oracle where no SQL twin exists).
+mapInPandas (pinned-fixture oracle where no SQL twin exists).
 
 Float-bearing aggregates are rounded on both sides so value-hash
 comparison is stable across engines.
@@ -816,7 +816,7 @@ FROM documents
 
 
 def extract_transcript_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    "Flagship: full cascade over the synthetic transcript corpus (rows-only oracle)."
+    "Flagship: full cascade over the synthetic transcript corpus (pinned-fixture oracle)."
     from .fixtures import transcripts_df
     from .operators.extract import extract_transcripts
 
@@ -1143,7 +1143,7 @@ FROM documents
 
 
 def extract_turn_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata struct per transcript turn (rows-only oracle: full ladder).
+    """Metadata struct per transcript turn (pinned-fixture oracle: full ladder).
 
     The array-typed categories/tags columns are joined to strings: the
     driver's canonicalizer sorts result columns through pandas, which
