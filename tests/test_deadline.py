@@ -1,0 +1,119 @@
+"""The per-document deadline (kernel/settings.py arm_deadline): a SIGALRM
+interval timer bounds the wall time of one extract_one_result call.
+
+Spark-free.  A raise that the timer's handler makes inside a GC
+finalizer would be swallowed as unraisable and the document would run
+on; the module-wide filter turns that warning into a failure.
+"""
+
+import signal
+import time
+from concurrent.futures import ThreadPoolExecutor
+from types import SimpleNamespace
+
+import pytest
+
+from trafilatura_spark.fixtures import generate_rows
+from trafilatura_spark.kernel import DEFAULT_OPTIONS, settings
+from trafilatura_spark.kernel.settings import ExtractionTimeout
+from trafilatura_spark.operators.extract import extract_one_result
+
+pytestmark = pytest.mark.filterwarnings("error::pytest.PytestUnraisableExceptionWarning")
+
+# structure, not size: both spend tens of seconds in superlinear walks
+ADVERSARIAL = {
+    "nested_tables": "<html><body>" + "<table><tr><td>x " * 1000 + "text" + "</td></tr></table>" * 1000
+    + "</body></html>",
+    "nested_divs": "<html><body>" + "<div>a " * 5000 + "text" + "</div>" * 5000 + "</body></html>",
+}
+TURNS = [text for _c, _t, _role, text, _tool, _ts in generate_rows(30) if text is not None][:300]
+TURN = "<article>" + "".join(f"<p>Paragraph {i} with enough words to count as text.</p>" for i in range(20)) + "</article>"
+
+
+def _timer_off() -> bool:
+    return signal.getitimer(signal.ITIMER_REAL) == (0.0, 0.0)
+
+
+@pytest.mark.parametrize("name", sorted(ADVERSARIAL))
+def test_adversarial_document_stops_at_the_deadline(name):
+    t0 = time.monotonic()
+    r = extract_one_result(ADVERSARIAL[name], DEFAULT_OPTIONS, timeout=2.0)
+    wall = time.monotonic() - t0
+    assert r.tier == "timeout" and r.text is None and r.chars_kept == 0
+    assert wall <= 2.2, f"{name}: {wall:.2f}s for a 2 s deadline"
+    assert _timer_off()
+    r = extract_one_result(TURN, DEFAULT_OPTIONS, timeout=None)
+    assert r.tier == "main" and r.text
+
+
+def test_pdf_key_derivation_stops_at_the_deadline():
+    # /R 6 with all-zero /U and /O: both Algorithm 2.B password checks run
+    # (pure-Python AES, ~1.5 s on a 4-vCPU VM) and fail -> pdf_encrypted
+    z48, z32 = b"<" + b"00" * 48 + b">", b"<" + b"00" * 32 + b">"
+    pdf = (
+        b"%PDF-2.0\n1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
+        b"2 0 obj << /Type /Pages /Kids [] /Count 0 >> endobj\n"
+        b"5 0 obj << /Filter /Standard /V 5 /R 6 /Length 256 /CF << /StdCF << /CFM /AESV3 /Length 32 >> >>"
+        b" /StmF /StdCF /StrF /StdCF /P -4 /O " + z48 + b" /U " + z48 + b" /UE " + z32 + b" /OE " + z32
+        + b" >> endobj\n"
+        b"trailer << /Root 1 0 R /Encrypt 5 0 R >>\n%%EOF\n"
+    ).decode("latin-1")
+    t0 = time.monotonic()
+    r = extract_one_result(pdf, DEFAULT_OPTIONS, timeout=0.3)
+    wall = time.monotonic() - t0
+    assert r.tier == "timeout" and wall <= 0.33, (r.tier, wall)
+    assert _timer_off()
+
+
+def test_handler_raises_only_in_kernel_frames_while_armed(monkeypatch):
+    def frame(name):
+        return SimpleNamespace(f_globals={"__name__": name})
+
+    kernel = frame("trafilatura_spark.kernel.handlers")
+    settings._on_alarm(signal.SIGALRM, kernel)  # disarmed
+    monkeypatch.setattr(settings, "_armed", True)
+    for elsewhere in (
+        frame("py4j.java_gateway"),  # e.g. a finalizer: the raise would be lost
+        frame("trafilatura_spark.operators.extract"),  # around the guarded kernel call
+        frame("trafilatura_spark.kernel.settings"),  # disarm_deadline itself
+        SimpleNamespace(f_globals={}),
+        None,
+    ):
+        settings._on_alarm(signal.SIGALRM, elsewhere)
+    with pytest.raises(ExtractionTimeout):
+        settings._on_alarm(signal.SIGALRM, kernel)
+
+
+def test_timeout_is_not_an_exception():
+    # the kernel's `except Exception` fallbacks must not swallow it
+    assert issubclass(ExtractionTimeout, BaseException)
+    assert not issubclass(ExtractionTimeout, Exception)
+
+
+def test_short_deadlines_end_in_a_full_result_or_timeout():
+    # each turn's deadline falls at a different point of its own run, so
+    # the raise lands all over the cascade; a full result after an
+    # interrupted one shows the interruption left no state behind
+    full = []
+    for text in TURNS:
+        t0 = time.perf_counter()
+        full.append((extract_one_result(text, DEFAULT_OPTIONS, timeout=None), time.perf_counter() - t0))
+    tiers = set()
+    for i, (text, (ref, took)) in enumerate(zip(TURNS, full)):
+        timeout = min(0.01, max(0.00005, took * (1 + i % 10) / 10))
+        r = extract_one_result(text, DEFAULT_OPTIONS, timeout=timeout)
+        tiers.add(r.tier)
+        if r.tier == "timeout":
+            assert r.text is None and r.chars_kept == 0
+        else:
+            assert (r.text, r.tier, r.chars_kept) == (ref.text, ref.tier, ref.chars_kept)
+        assert _timer_off()
+    assert "timeout" in tiers and len(tiers) > 1, tiers
+
+
+def test_deadline_needs_the_main_thread():
+    with ThreadPoolExecutor(1) as pool:
+        with pytest.raises(ValueError):
+            pool.submit(extract_one_result, TURN, DEFAULT_OPTIONS, 1.0).result()
+        assert pool.submit(extract_one_result, TURN, DEFAULT_OPTIONS, None).result().tier == "main"
+    assert _timer_off()

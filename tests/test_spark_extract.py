@@ -80,6 +80,9 @@ def test_plan_shape(spark):
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan or "MapInArrow" in plan
 
 
+# a raise that lands in a GC finalizer (py4j's JavaObject weakref
+# callbacks run in this process) is swallowed as unraisable: fail on it
+@pytest.mark.filterwarnings("error::pytest.PytestUnraisableExceptionWarning")
 def test_timeout_guard_preemptive():
     """A pathological document is ABORTED in bounded wall time (the
     reference's 30 s/file kill yields no output), not merely labeled."""
@@ -88,7 +91,7 @@ def test_timeout_guard_preemptive():
     from trafilatura_spark.operators.extract import extract_one_result
     from trafilatura_spark.kernel import DEFAULT_OPTIONS
 
-    # expired deadline: first checkpoint fires, nothing is extracted
+    # spent deadline: nothing is extracted
     text = "<article>" + "".join(f"<p>Paragraph {i} text content here.</p>" for i in range(300)) + "</article>"
     r = extract_one_result(text, DEFAULT_OPTIONS, timeout=0.0)
     assert r.tier == "timeout"
@@ -108,6 +111,33 @@ def test_timeout_guard_preemptive():
     # and without a deadline the same doc completes normally
     r2 = extract_one_result(slow, DEFAULT_OPTIONS, timeout=None)
     assert r2.tier != "timeout" and r2.text
+
+
+def test_timeout_in_the_python_worker(spark, monkeypatch):
+    """The deadline holds where PySpark runs the batch function: a
+    nested-table document stops at a 2 s deadline inside the worker, and
+    the next turn of the same batch extracts normally."""
+    import time
+    from functools import partial
+
+    from trafilatura_spark.operators import extract
+
+    def with_2s_deadline(options=DEFAULT_OPTIONS, passthrough_cols=None):
+        row_fn = partial(extract.extract_one_result, options=options, timeout=2.0)
+        return extract.map_batches(row_fn, extract.CONTENT_COLUMNS, passthrough_cols)
+
+    monkeypatch.setattr(extract, "make_extract_batch_fn", with_2s_deadline)
+    nested = "<table><tr><td>x " * 1000 + "text" + "</td></tr></table>" * 1000
+    normal = "<article>" + "".join(f"<p>Paragraph {i} with enough words to count.</p>" for i in range(20)) + "</article>"
+    df = spark.createDataFrame([("c", 0, nested), ("c", 1, normal)], "conv_id string, turn_idx int, text string")
+    out = extract_transcripts(df.coalesce(1))
+    t0 = time.monotonic()
+    rows = out.orderBy("turn_idx").collect()
+    wall = time.monotonic() - t0
+    assert [r.tier for r in rows] == ["timeout", "main"]
+    assert rows[0].extracted_text is None and rows[1].extracted_text
+    # ~3 s with a warm worker, ~9 s with a cold one (4-vCPU VM)
+    assert wall < 15.0, f"worker job took {wall:.1f}s with a 2 s deadline"
 
 
 def test_assemble_conversations_order_and_counts(spark):

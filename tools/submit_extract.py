@@ -72,7 +72,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from trafilatura_spark.kernel import Options
-    from trafilatura_spark.plans.lineage import read_manifest, run_resumable_extraction
+    from trafilatura_spark.plans.lineage import read_manifest, read_output, run_resumable_extraction
 
     if args.synthetic:
         from trafilatura_spark.fixtures import transcripts_df
@@ -86,7 +86,7 @@ def main() -> int:
         )
 
     options = Options(
-        focus=args.favor if args.favor != "balanced" else "balanced",
+        focus=args.favor,
         lang=args.target_lang,
         format=args.format,
     )
@@ -116,9 +116,8 @@ def main() -> int:
         )
 
         conv_path = os.path.join(args.output, "conversations")
-        turns_df = spark.read.parquet(os.path.join(args.output, "data"))
         convs = postprocess_conversations(
-            assemble_conversations(turns_df),
+            assemble_conversations(read_output(spark, args.output)),
             dedup_lines=args.dedup_lines,
             c4_clean=args.c4_clean,
             scrub_pii=args.scrub_pii,

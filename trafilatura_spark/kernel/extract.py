@@ -29,9 +29,7 @@ from .settings import (
     ESCALATION_PAGE_SHARE,
     JUSTEXT_OVERRIDE_RATIO,
     DEFAULT_OPTIONS,
-    ExtractionTimeout,
     Options,
-    check_deadline,
 )
 from .textutils import normalize_unicode, trim
 
@@ -166,7 +164,6 @@ def _compare_extraction(
 
         raw_tree = prune_unwanted_nodes(raw_tree, overall_discard_matches(raw_tree))
 
-    check_deadline(options)  # stage boundary: before the readability pass
     temppost_algo = try_readability(raw_tree)
     algo_text = trim(temppost_algo.text_content())
     len_algo = len(algo_text)
@@ -177,7 +174,6 @@ def _compare_extraction(
         tier[0] = "readability"
 
     if any(el.tag in _SANITIZED_TAGS for el in body.iterdescendants()) or len_text < options.min_extracted_size:
-        check_deadline(options)  # stage boundary: before the justext pass
         body2, text2, len_text2 = _justext_rescue(cleaned_tree, options)
         if text2 and len_text <= JUSTEXT_OVERRIDE_RATIO * len_text2:
             body, text, len_text = body2, text2, len_text2
@@ -224,19 +220,16 @@ def trafilatura_sequence(tree: Element, options: Options, url: Optional[str] = N
         cleaned_tree = prune_unwanted_nodes(cleaned_tree, [remove_comments_matches(cleaned_tree)])
 
     # 1. main extractor
-    check_deadline(options)
     postbody, temp_text, len_text = extract_content(cleaned_tree, options)
 
     # 2. external comparison
     if not options.fast:
-        check_deadline(options)
         postbody, temp_text, len_text = _compare_extraction(
             cleaned_tree_backup, tree.copy_tree(), postbody, temp_text, len_text, options, tier
         )
 
     # 3. baseline rescue
     if len_text < options.min_extracted_size and options.focus != "precision":
-        check_deadline(options)
         postbody, temp_text, len_text = baseline(tree)
         tier[0] = "baseline"
         forum_posts = None
@@ -257,20 +250,14 @@ def trafilatura_sequence(tree: Element, options: Options, url: Optional[str] = N
         r_len = 0
         r_body, r_text = None, ""
         try:
-            check_deadline(options)
             r_body, r_text, r_len = _recall_retry(esc_tree, r_options, url, tier)
-        except ExtractionTimeout:
-            raise  # a deadline miss must abort the document, not this stage
         except Exception:
             pass
         j_len = 0
         j_body, j_text = None, ""
         if not options.fast:
             try:
-                check_deadline(options)
                 j_body, j_text, j_len = _justext_rescue(esc_tree.copy_tree(), options)
-            except ExtractionTimeout:
-                raise
             except Exception:
                 pass
 
@@ -331,7 +318,6 @@ def bare_extract(filecontent: Any, options: Options = DEFAULT_OPTIONS) -> Extrac
         tree = load_html(filecontent)
         if tree is None:
             return ExtractionResult(None, "unparseable", 0, 0)
-        check_deadline(options)
 
         # quick declared-language gate in fast mode (core.py:399-402:
         # meta-language check when the classifier would be skipped)
@@ -415,10 +401,6 @@ def bare_extract(filecontent: Any, options: Options = DEFAULT_OPTIONS) -> Extrac
 
             if language_filter(temp_text, temp_comments, options.lang, options.lang_strict):
                 return ExtractionResult(None, "wrong_language", 0, 0)
-    except ExtractionTimeout:
-        # preemptive per-document bound: the reference's 30 s/file kill
-        # yields no output for the document (cli_utils.py:431-437)
-        return ExtractionResult(None, "timeout", 0, 0)
     except UnsupportedCompression:
         # zstd/brotli payloads with no decoder in this environment:
         # a labeled discard, never a garbage latin-1 parse

@@ -37,7 +37,6 @@ from .settings import (
     MIN_DUPLICATE_LENGTH,
     TAG_CATALOG,
     Options,
-    check_deadline,
 )
 from .textutils import FORMATTING_PROTECTED, is_image_file, text_chars_test, trim
 
@@ -570,20 +569,6 @@ def _document_root(element: Element) -> Element:
     return node
 
 
-def _handle_all(subelems, potential_tags: set, options: Options) -> list:
-    """handle_textelem over a candidate's elements with a cooperative
-    deadline check every 64 elements (the per-document timeout must be
-    able to preempt huge candidate subtrees, not only stage boundaries)."""
-    out = []
-    for i, e in enumerate(subelems):
-        if i % 64 == 0:
-            check_deadline(options)
-        el = handle_textelem(e, potential_tags, options)
-        if el is not None:
-            out.append(el)
-    return out
-
-
 def _extract(tree: Element, options: Options) -> tuple:
     "Candidate ladder over BODY selectors (:743-790)."
     potential_tags = set(TAG_CATALOG)
@@ -623,7 +608,9 @@ def _extract(tree: Element, options: Options) -> tuple:
         subelems = list(subtree.iterdescendants())
         if {e.tag for e in subelems} == {"lb"}:
             subelems = [subtree]
-        result_body.extend(_handle_all(subelems, potential_tags, options))
+        result_body.extend(
+            [el for el in (handle_textelem(e, potential_tags, options) for e in subelems) if el is not None]
+        )
         while len(result_body) > 0 and result_body[-1].tag in NOT_AT_THE_END:
             delete_element(result_body[-1], keep_tail=False)
         if sum(e.tag != "graphic" for e in result_body) > 1:
@@ -656,9 +643,7 @@ def recover_wild_text(
     elem_texts = [_elem_text(el) for el in result_body]
     existing = "\n".join(filter(None, elem_texts))
     existing_elems = set(elem_texts)
-    for i, subelem in enumerate(subelems):
-        if i % 64 == 0:
-            check_deadline(options)
+    for subelem in subelems:
         processed = handle_textelem(subelem, potential_tags, options)
         if processed is None:
             continue

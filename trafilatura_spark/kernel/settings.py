@@ -1,4 +1,4 @@
-"""Extraction options and constants.
+"""Extraction options, constants and the per-document deadline timer.
 
 Defaults mirror the reference configuration
 (/root/reference/trafilatura/settings.cfg and settings.py:70-191,
@@ -9,23 +9,56 @@ links/images/formatting off (core.py:494-520).
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field, replace
+import signal
+import threading
+from dataclasses import dataclass, replace
 from typing import Optional
 
 
-class ExtractionTimeout(Exception):
-    """Per-document deadline exceeded.  The PREEMPTIVE analog of the
-    reference CLI's hard 30 s/file process kill (settings.cfg:37,
-    cli_utils.py:431-437): checked cooperatively at cascade stage
-    boundaries and inside element loops, so a pathological document
-    cannot stall an executor core."""
+class ExtractionTimeout(BaseException):
+    """Per-document deadline exceeded, raised by arm_deadline's timer: the
+    PREEMPTIVE analog of the reference CLI's hard 30 s/file kill
+    (settings.cfg:37, cli_utils.py:431-437).  A BaseException, so the
+    kernel's ``except Exception`` fallbacks never swallow it.
+
+    Whichever bytecode it hits, module-level state stays valid: lru_cache
+    memos store only returned values; fingerprint._STRIP_EXTENSION and
+    tei._DTD_SCHEMA_CACHE bind a finished value in one store; LRU_TEST
+    (dedup_state) changes by single OrderedDict calls; a failed import is
+    dropped from sys.modules."""
 
 
-def check_deadline(options: "Options") -> None:
-    "Raise ExtractionTimeout if the per-document deadline has passed."
-    if options.deadline is not None and time.monotonic() > options.deadline:
+_RETRY_SECS = 0.005  # after the deadline, re-fire until a raise lands in the kernel
+_armed = False
+_installed = False  # the handler, once per process (signal.getsignal costs ~4 µs)
+
+
+def _on_alarm(signum, frame) -> None:
+    """Raise only while armed, in a kernel frame outside this module: a
+    raise in a GC finalizer is lost as unraisable (the timer re-fires);
+    one in disarm_deadline or the operator would escape its guard."""
+    name = frame.f_globals.get("__name__", "") if frame is not None else ""
+    if _armed and name.startswith("trafilatura_spark.kernel.") and name != __name__:
         raise ExtractionTimeout
+
+
+def arm_deadline(timeout: float) -> None:
+    """Raise ExtractionTimeout in kernel code ``timeout`` (> 0) seconds from
+    now.  Main thread only (signal handlers run there); disarm in a finally."""
+    global _armed, _installed
+    if threading.current_thread() is not threading.main_thread():
+        raise ValueError("the per-document deadline is a SIGALRM timer and needs the main thread")
+    if not _installed:
+        signal.signal(signal.SIGALRM, _on_alarm)
+        _installed = True
+    _armed = True
+    signal.setitimer(signal.ITIMER_REAL, timeout, _RETRY_SECS)
+
+
+def disarm_deadline() -> None:
+    global _armed
+    _armed = False  # first: a signal still pending raises nothing
+    signal.setitimer(signal.ITIMER_REAL, 0)
 
 
 @dataclass
@@ -77,9 +110,6 @@ class Options:
     max_file_size: int = 20_000_000
     min_file_size: int = 10
     max_tree_size: Optional[int] = None
-    # per-document monotonic deadline (set per doc by the Spark operator;
-    # None = unbounded, reference default is 30 s via process kill)
-    deadline: Optional[float] = None
     # user pruning / filter job parameters (reference core.py:405-432:
     # prune_xpath, url_blacklist, author_blacklist, only_with_metadata).
     # prune_selectors uses the kernel's selector mini-syntax ('tag',
@@ -105,12 +135,12 @@ class Options:
             self.with_metadata = True
 
     def copy(self, **kw) -> "Options":
-        # per-document hot path (deadline stamp, recall-escalation focus
-        # flip): dataclasses.replace re-runs __init__/__post_init__,
-        # ~15x the cost of a raw clone.  Neither field participates in
-        # the __post_init__ implications, so a dict-level clone is
+        # per-document hot path (recall-escalation focus flip):
+        # dataclasses.replace re-runs __init__/__post_init__, ~15x the
+        # cost of a raw clone.  focus does not participate in the
+        # __post_init__ implications, so a dict-level clone is
         # equivalent; any other field change takes the full replace.
-        if not kw or set(kw) <= {"deadline", "focus"}:
+        if not kw or set(kw) <= {"focus"}:
             clone = object.__new__(Options)
             clone.__dict__.update(self.__dict__)
             clone.__dict__.update(kw)

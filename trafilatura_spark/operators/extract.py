@@ -18,8 +18,8 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
   metadata_op.py) that drives both the pandas frame and the mapInPandas
   schema (`map_turns`).
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
-  process kill (cli_utils.py / settings.cfg:37): the cascade aborts
-  cooperatively at stage/element checkpoints, yielding tier='timeout'.
+  process kill (cli_utils.py / settings.cfg:37): a SIGALRM timer interrupts
+  the kernel wherever it is (HTML or PDF), yielding tier='timeout'.
 - worker memory is one Arrow batch (spark.sql.execution.arrow.maxBytesPerBatch)
   with the output columns built from it, plus the one document being
   extracted: map_batches drops each row's result and clears the kernel's
@@ -31,7 +31,6 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 
 from __future__ import annotations
 
-import time
 from operator import attrgetter
 from typing import Iterator, Optional
 
@@ -45,7 +44,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import DEFAULT_OPTIONS, Options, bare_extract
+from ..kernel import DEFAULT_OPTIONS, ExtractionResult, Options, bare_extract
+from ..kernel.extract import serialize_result
+from ..kernel.settings import ExtractionTimeout, arm_deadline, disarm_deadline
 from ..kernel.textutils import clear_string_memos
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
@@ -100,14 +101,12 @@ def extract_one_result(
     the metadata object when options.with_metadata is set — extracted
     from the SAME parse as the content, kernel/extract.py bare_extract).
 
-    The per-document bound is PREEMPTIVE: a monotonic deadline rides on
-    the options and is checked cooperatively at cascade stage boundaries
-    and inside element loops (kernel/settings.py check_deadline), so a
-    pathological document yields tier='timeout' in bounded wall time
-    instead of stalling an executor core — matching the reference CLI's
-    hard 30 s/file kill (settings.cfg:37, cli_utils.py:431-437)."""
-    from ..kernel.extract import ExtractionResult
-
+    The per-document bound is PREEMPTIVE: a SIGALRM timer armed around
+    the kernel call (kernel/settings.py arm_deadline) interrupts it after
+    ``timeout`` seconds of wall time, HTML or PDF, so a pathological
+    document yields tier='timeout' instead of stalling an executor core —
+    the reference CLI's hard 30 s/file kill (settings.cfg:37,
+    cli_utils.py:431-437).  None = unbounded; main thread only."""
     if text is None:
         return ExtractionResult(None, "null_input", 0, 0)
     # size gate: the reference CLI's is_acceptable_length (utils.py:405-413,
@@ -116,7 +115,9 @@ def extract_one_result(
     if len(wrapped) < options.min_file_size or len(wrapped) > options.max_file_size:
         return ExtractionResult(None, "discarded_size", 0, 0)
     if timeout is not None:
-        options = options.copy(deadline=time.monotonic() + timeout)
+        if timeout <= 0:
+            return ExtractionResult(None, "timeout", 0, 0)
+        arm_deadline(timeout)
     try:
         result = bare_extract(wrapped, options)
         if options.format not in ("txt", "markdown") and result.text is not None:
@@ -126,8 +127,6 @@ def extract_one_result(
             # single-document API.  txt/markdown stay plain here even with
             # metadata: the operator surfaces metadata as COLUMNS
             # (extract_with_metadata), not YAML front matter.
-            from ..kernel.extract import serialize_result
-
             serialized = serialize_result(result, options)
             return ExtractionResult(
                 serialized,
@@ -137,8 +136,15 @@ def extract_one_result(
                 metadata=result.metadata,
             )
         return result
+    except ExtractionTimeout:
+        tier = "timeout"  # the reference's 30 s/file kill yields no output
     except Exception:
-        return ExtractionResult(None, "error", 0, 0)
+        tier = "error"
+    finally:
+        if timeout is not None:
+            disarm_deadline()
+    # built once the timer is off: ExtractionResult.__init__ is kernel code
+    return ExtractionResult(None, tier, 0, 0)
 
 
 def map_batches(row_fn, columns: list, passthrough: Optional[list] = None):
@@ -194,10 +200,9 @@ def map_turns(
 def make_extract_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
-    timeout: float = DEFAULT_TIMEOUT_SECS,
 ):
     "mapInPandas function emitting passthrough columns + CONTENT_COLUMNS."
-    return map_batches(lambda text: extract_one_result(text, options, timeout), CONTENT_COLUMNS, passthrough_cols)
+    return map_batches(lambda text: extract_one_result(text, options), CONTENT_COLUMNS, passthrough_cols)
 
 
 def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
@@ -219,7 +224,6 @@ def extract_transcripts(
     options: Options = DEFAULT_OPTIONS,
     num_partitions: Optional[int] = None,
     passthrough_cols: Optional[list] = None,
-    timeout: float = DEFAULT_TIMEOUT_SECS,
 ) -> DataFrame:
     """Full extraction operator: passthrough columns + CONTENT_COLUMNS,
     one output row per input turn (rows the reference would discard
@@ -231,14 +235,13 @@ def extract_transcripts(
     # Pass num_partitions to engage the conv_id-salted repartition when
     # the input is skewed (e.g. one giant conversation per input split)
     # or badly sized.
-    fn = make_extract_batch_fn(options, passthrough_cols, timeout)
+    fn = make_extract_batch_fn(options, passthrough_cols)
     return map_turns(df, fn, CONTENT_COLUMNS, passthrough_cols, num_partitions)
 
 
 def make_extract_with_metadata_batch_fn(
     options: Options = DEFAULT_OPTIONS,
     passthrough_cols: Optional[list] = None,
-    timeout: float = DEFAULT_TIMEOUT_SECS,
 ):
     """Batch function emitting extraction AND metadata columns in one
     mapInPandas pass — the reference's bare_extraction(with_metadata=True)
@@ -250,7 +253,7 @@ def make_extract_with_metadata_batch_fn(
 
     options = options.copy(with_metadata=True)
     return map_batches(
-        lambda text: extract_one_result(text, options, timeout),
+        lambda text: extract_one_result(text, options),
         CONTENT_COLUMNS + JOINED_METADATA_COLUMNS,
         passthrough_cols,
     )
@@ -261,12 +264,11 @@ def extract_with_metadata(
     options: Options = DEFAULT_OPTIONS,
     num_partitions: Optional[int] = None,
     passthrough_cols: Optional[list] = None,
-    timeout: float = DEFAULT_TIMEOUT_SECS,
 ) -> DataFrame:
     "Combined content + metadata extraction in a single Arrow stage."
     from .metadata_op import JOINED_METADATA_COLUMNS
 
-    fn = make_extract_with_metadata_batch_fn(options, passthrough_cols, timeout)
+    fn = make_extract_with_metadata_batch_fn(options, passthrough_cols)
     return map_turns(df, fn, CONTENT_COLUMNS + JOINED_METADATA_COLUMNS, passthrough_cols, num_partitions)
 
 
