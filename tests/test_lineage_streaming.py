@@ -381,11 +381,8 @@ def test_streaming_dedup_within_watermark(spark, small_df, tmp_path):
     """At-least-once delivery: duplicated input turns are dropped by
     dropDuplicatesWithinWatermark before extraction, so the streamed
     output matches the UNIQUE turn set exactly."""
-    from trafilatura_spark.streaming.extract_stream import (
-        TRANSCRIPT_SCHEMA,
-        dedup_stream,
-        extract_stream_df,
-    )
+    from trafilatura_spark.operators.extract import extract_transcripts
+    from trafilatura_spark.streaming.extract_stream import TRANSCRIPT_SCHEMA, dedup_stream
 
     inp = str(tmp_path / "in")
     outp = str(tmp_path / "out")
@@ -396,7 +393,7 @@ def test_streaming_dedup_within_watermark(spark, small_df, tmp_path):
 
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(inp)
     deduped = dedup_stream(stream, watermark="1 hour")
-    extracted = extract_stream_df(deduped)
+    extracted = extract_transcripts(deduped)
     q = (
         extracted.writeStream.format("parquet")
         .option("path", outp)

@@ -760,3 +760,27 @@ def test_hash_split_deterministic_and_proportional(spark):
         hash_split(df, {"train": 0.5, "valid": 0.1})
     plan = hash_split(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+def test_operator_construction_runs_no_spark_job(spark):
+    """Building an operator is pure plan construction: it launches no
+    Spark job, even over an input whose plan contains a shuffle (under
+    AQE, asking such a plan for its partition count materializes the
+    shuffle)."""
+    from trafilatura_spark.operators.dedup import minhash_signatures
+    from trafilatura_spark.operators.textstats import quality_c4, token_stats
+
+    words = spark.createDataFrame(
+        [(i % 7, f"word{i} sentence number {i} ends here.") for i in range(60)], ["doc_id", "w"]
+    )
+    docs = words.groupBy("doc_id").agg(F.concat_ws("\n", F.collect_list("w")).alias("text"))
+    sc = spark.sparkContext
+    group = "operator-construction"
+    sc.setJobGroup(group, "build only")
+    try:
+        for op in (quality_c4, token_stats, minhash_signatures):
+            op(docs)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []

@@ -84,10 +84,12 @@ def _shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 
     The shingle SET is per document, so dedup happens inside the array
     (array_distinct) BEFORE explode — no global shuffle for distinctness.
-    Deliberately NOT input-rebalanced: every consumer immediately joins
-    the exploded shingles (shuffle anyway), so an extra exchange on the
-    cheap explode map-side costs more than it saves (measured A/B in a
-    steal-free window: 1.24 s without vs 1.47-1.77 s with)."""
+    Do not spread a shingle consumer's input: every consumer immediately
+    joins the exploded shingles (shuffle anyway), so an extra exchange
+    on the cheap explode map-side costs more than it saves (measured A/B
+    in a steal-free window: 1.24 s without vs 1.47-1.77 s with; for
+    ``ngram_jaccard_via_lsh`` over one-row-group sf0.1 documents on
+    local[4], median 2.07 s unspread vs 2.24 s spread, 12 pairs)."""
     words = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
     ngrams = F.expr(
         f"array_distinct(transform(sequence(1, greatest(size(words) - {n - 1}, 1)), "
@@ -144,9 +146,7 @@ def minhash_signatures(
     # round-trips per invocation when assembled via pyspark functions —
     # that construction time is part of every query's wall (guide §1).
     # The parsed expressions are identical to the previous F.* build.
-    from .balance import spread_for_compute
-
-    pruned = spread_for_compute(df.filter(F.col(text_col).isNotNull()).select(id_col, text_col))
+    pruned = df.filter(F.col(text_col).isNotNull()).select(id_col, text_col)
     base = (
         pruned.selectExpr(
             id_col,
@@ -695,10 +695,7 @@ def benchmark_contamination(
         # 15 hex digits = 60 bits: fits a signed BIGINT in both engines
         return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
 
-    from .balance import spread_for_compute
-
-    corpus_pruned = spread_for_compute(corpus.select(id_col, text_col))
-    corpus_grams = corpus_pruned.select(
+    corpus_grams = corpus.select(
         F.col(id_col), F.explode(_ngram_expr(toks(text_col), n)).alias("g")
     ).select(F.col(id_col), gram_key(F.col("g")).alias("gk"))
     bench_grams = (

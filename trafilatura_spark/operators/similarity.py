@@ -163,9 +163,10 @@ def lsh_multitable_topk(
     minhash LSH), so recall grows with tables while each table keeps
     2^D buckets — the fix for the single-table variant's 256-bucket
     ceiling (one table's bucket join approaches n^2/2^D at corpus scale;
-    more, narrower tables keep every bucket join small).  Not input-
-    rebalanced: every path joins straight away, and a round-robin ahead
-    of the bucket join measured slower."""
+    more, narrower tables keep every bucket join small).  Its registry
+    entry does not spread the input (``queries._spread``): every path
+    joins straight away, and a round-robin ahead of the bucket join
+    measured slower."""
     vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
     buckets = df.select(
         F.col(id_col),
@@ -299,10 +300,10 @@ def _assign_to_centroids(
     return vecs.crossJoin(F.broadcast(carr)).select(*cols)
 
 
-def _ivf_build(vecs: DataFrame, nlist: int):
+def _ivf_centroids(vecs: DataFrame, nlist: int) -> DataFrame:
     """Shared IVF training: deterministic seeds (the ``nlist`` lowest-id
-    vectors), ONE Lloyd refinement, final assignment.  Returns
-    (centroids(cid, cv), inverted(cid, neighbor_id, nv)).
+    vectors), ONE Lloyd refinement.  Returns centroids(cid, cv); the
+    inverted list is the final assignment of ``vecs`` to them.
 
     The assignment carries v through, so the only exchange here is the
     partial-agged (cid, pos) mean — nlist*dim rows per task, never the
@@ -311,7 +312,7 @@ def _ivf_build(vecs: DataFrame, nlist: int):
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
     a1 = _assign_to_centroids(vecs, seeds, "vec_id", keep_vec="v")
-    cents = (
+    return (
         a1.select("cid", F.posexplode("v").alias("pos", "val"))
         .groupBy("cid", "pos")
         .agg(F.avg("val").alias("m"))
@@ -319,14 +320,6 @@ def _ivf_build(vecs: DataFrame, nlist: int):
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
         .select("cid", F.transform("pm", lambda s: F.round(s["m"], 6)).alias("cv"))
     )
-    # cents is nlist rows but its lineage contains a full corpus pass
-    # (seed assignment + per-dimension mean agg); it is referenced TWICE
-    # downstream (query probes + inverted-list build), so persist the
-    # tiny table instead of recomputing that pass per reference.  Blocks
-    # are freed by the ContextCleaner when the frame is collected.
-    cents = cents.persist()
-    inverted = _assign_to_centroids(vecs, cents, "neighbor_id", keep_vec="nv")
-    return cents, inverted
 
 
 def ivf_topk(
@@ -356,12 +349,9 @@ def ivf_topk(
     executor-sized.  Cell ids are the partition key: a hot cell is an
     ordinary AQE-splittable shuffle join partition, not a window.
     """
-    from .balance import spread_for_compute
-
-    vecs = spread_for_compute(
-        df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v"))
-    )
-    cents, inverted = _ivf_build(vecs, nlist)
+    vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v"))
+    cents = _ivf_centroids(vecs, nlist)
+    inverted = _assign_to_centroids(vecs, cents, "neighbor_id", keep_vec="nv")
     queries = vecs.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -564,8 +554,11 @@ def build_ivf_index(
     vecs = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    cents, inverted = _ivf_build(vecs, nlist)
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
+    _ivf_centroids(vecs, nlist).write.mode("overwrite").parquet(f"{path}/centroids")
+    # assign against the WRITTEN centroids, so training's corpus pass
+    # runs once rather than again inside the inverted-list write
+    cents = df.sparkSession.read.parquet(f"{path}/centroids")
+    inverted = _assign_to_centroids(vecs, cents, "neighbor_id", keep_vec="nv")
     inverted.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/inverted")
 
 

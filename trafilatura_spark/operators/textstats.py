@@ -32,9 +32,6 @@ _BPE_RE = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
 
 def token_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     "Token count + quality-scoring ratios per document."
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     text = F.col(text_col)
     n_tokens = F.size(F.split(F.trim(text), r"\s+"))
     n_chars = F.length(text)
@@ -153,9 +150,7 @@ def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
             ]
             yield out
 
-    from .balance import spread_for_compute
-
-    return spread_for_compute(df.select(id_col, text_col)).mapInPandas(batch, schema=schema)
+    return df.select(id_col, text_col).mapInPandas(batch, schema=schema)
 
 
 # Gopher-style quality rules (Rae et al. 2021, §A1.1) — the published
@@ -176,9 +171,6 @@ def quality_gopher(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     them (the thresholds published for MassiveWeb).  At 100 TB this is a
     single narrow projection over the text column: no shuffle, no Python,
     fully pipelined into whatever scan feeds it."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     text = F.col(text_col)
     words = F.split(F.trim(text), r"\s+")
     lines = F.split(text, "\n")
@@ -377,9 +369,6 @@ def quality_repetition(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     executor already had locally; this version is a scan -> project ->
     done plan, benched ~5x faster at sf0.1 and trivially linear-scaling
     (plan-audited: no Exchange, no Python)."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
 
     def _segs_sql(pattern: str) -> str:
         return (
@@ -557,9 +546,6 @@ def unigram_logprob(
     score is sum(doc_cnt * lp) as DECIMAL — exact and associative, so
     partitioning cannot change it — then one double divide + round(6).
     The DuckDB twin mirrors the same fixed-point arithmetic."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     ex = df.select(F.col(id_col), F.explode(toks).alias("tok"))
     doc_tok = ex.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("doc_cnt"))
@@ -650,9 +636,6 @@ def chunk_documents(
     is bounded by (1 + overlap/stride)."""
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be smaller than chunk_tokens")
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     stride = chunk_tokens - overlap
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     n = F.size(toks)
@@ -760,9 +743,6 @@ def quality_c4(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
 
     100 TB shape: one narrow projection over the text column — zero
     shuffle, zero Python, pipelined into the scan (plan-asserted)."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     text = F.col(text_col)
     lines = F.split(text, "\n")
     kept = c4_kept_lines(text)
@@ -845,9 +825,6 @@ def scrub_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 
     100 TB shape: pure projection (three regexp_replace passes fused by
     codegen into one scan over the string) — zero shuffle, zero Python."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     text = F.col(text_col)
     scrubbed = pii_scrubbed(text)
     n_emails = F.regexp_count(text, F.lit(PII_EMAIL_RE))

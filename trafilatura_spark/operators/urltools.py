@@ -117,9 +117,6 @@ def normalize_urls(
     is_not_crawlable, keep) — ``url_norm`` is the dedup key, ``keep``
     the frontier verdict.  100 TB shape: a narrow no-shuffle projection;
     downstream exact URL dedup is then one groupBy(url_norm)."""
-    from .balance import spread_for_compute
-
-    df = spread_for_compute(df)
     raw = F.col(url_col)
     norm = normalize_url_col(raw)
     host = F.regexp_extract(norm, r"^[a-z][a-z0-9+.\-]*://([^/:?#]+)", 1)

@@ -26,6 +26,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the session's cores.
+
+    Every table here is one parquet file with one row group, so its scan
+    is one task, and a narrow operator over it (minhash signatures, the
+    Gopher/C4/PII projections, chunking, URL normalization, the IVF
+    build) would run its whole map side on one core.  Whether to
+    repartition is the caller's decision, made from what it knows about
+    its input: the operators never repartition, and at production scale
+    a splittable many-file scan already feeds every core.  Entries whose
+    operator joins its input straight away (``ann_lsh_multitable_topk``,
+    ``dedup_jaccard_via_lsh``) stay unspread: there the round-robin
+    measured slower."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+
+
 # --- relational shell ---------------------------------------------------------
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,12 +658,12 @@ def dedup_exact_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.minhash_signatures(_t(spark, sf_dir, "documents"))
+    return D.minhash_signatures(_spread(_t(spark, sf_dir, "documents")))
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Gate profile (8 hashes / 4 bands) — cheap parameters for the oracle."
-    return D.minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
+    return D.minhash_lsh_pairs(_spread(_t(spark, sf_dir, "documents")))
 
 
 def dedup_minhash_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -656,7 +672,7 @@ def dedup_minhash_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.42 (operators/dedup.py).  Same banded bucket-join shape as the gate
     profile, value-checked against the identical-parameter DuckDB twin."""
     return D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
+        _spread(_t(spark, sf_dir, "documents")),
         num_hashes=D.PRODUCTION_NUM_HASHES,
         bands=D.PRODUCTION_BANDS,
     )
@@ -666,7 +682,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate clusters: LSH pairs -> connected components ->
     (doc_id, cluster_id, is_keeper).  The drop set for corpus dedup is
     the is_keeper=false rows — pairs alone over-delete chains."""
-    return D.dedup_clusters_df(_t(spark, sf_dir, "documents"))
+    return D.dedup_clusters_df(_spread(_t(spark, sf_dir, "documents")))
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,7 +709,7 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, corpus probes map-side, only contaminated grams shuffle."""
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") < 5)
-    out = D.benchmark_contamination(docs, bench)
+    out = D.benchmark_contamination(_spread(docs), bench)
     return out.orderBy("doc_id")
 
 
@@ -704,7 +720,7 @@ def dedup_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.token_stats(_t(spark, sf_dir, "documents"))
+    return T.token_stats(_spread(_t(spark, sf_dir, "documents")))
 
 
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,7 +734,7 @@ def text_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     no SQL twin, so the DuckDB side replays the labels pinned at
     generation time, keyed by md5(text)); the JVM-side 17-language
     text_lang_id remains the exact-SQL-twin sweep."""
-    out = T.lang_id_ngram(_t(spark, sf_dir, "documents"))
+    out = T.lang_id_ngram(_spread(_t(spark, sf_dir, "documents")))
     return out.orderBy("doc_id")
 
 
@@ -726,14 +742,14 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-family corpus-LM quality ranking: mean unigram log10
     probability per document under the corpus's own token distribution
     (top-k vocabulary broadcast; OOV add-half floor)."""
-    return T.unigram_logprob(_t(spark, sf_dir, "documents"))
+    return T.unigram_logprob(_spread(_t(spark, sf_dir, "documents")))
 
 
 def text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window chunking (64-token chunks, 16 overlap at gate scale):
     pure projection + explode, no shuffle — provenance columns keep
     chunks joinable back to source documents."""
-    return T.chunk_documents(_t(spark, sf_dir, "documents"), chunk_tokens=64, overlap=16)
+    return T.chunk_documents(_spread(_t(spark, sf_dir, "documents")), chunk_tokens=64, overlap=16)
 
 
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,20 +777,20 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-table sign-LSH — probe nprobe/nlist of the corpus per query.
     Deterministic training (seeded + one Lloyd step) so the DuckDB twin
     value-matches the whole index build, not just the search."""
-    return S.ivf_topk(_t(spark, sf_dir, "embeddings"))
+    return S.ivf_topk(_spread(_t(spark, sf_dir, "embeddings")))
 
 
 def text_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rule quality filter over documents (word stats, bullet /
     ellipsis / duplicate-line ratios, stopword hits, pass verdict)."""
-    return T.quality_gopher(_t(spark, sf_dir, "documents"))
+    return T.quality_gopher(_spread(_t(spark, sf_dir, "documents")))
 
 
 def text_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition signals (top 2-/3-gram and duplicated 5-/10-gram
     character fractions + pass verdict) — the other half of the Gopher
     rule set next to text_quality_gopher's word/line statistics."""
-    return T.quality_repetition(_t(spark, sf_dir, "documents"))
+    return T.quality_repetition(_spread(_t(spark, sf_dir, "documents")))
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1234,7 +1250,7 @@ def url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("")),
     )
     docs = _t(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
-    return normalize_urls(docs)
+    return normalize_urls(_spread(docs))
 
 
 _URL_SYNTH_SQL = """
@@ -1277,7 +1293,7 @@ def text_quality_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(d % 2 == 0, F.lit(_C4_CLOSE)),
     )
     docs = _t(spark, sf_dir, "documents").select("doc_id", text.alias("text"))
-    return quality_c4(docs)
+    return quality_c4(_spread(docs))
 
 
 _C4_SYNTH_SQL = f"""
@@ -1312,7 +1328,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
     )
     docs = _t(spark, sf_dir, "documents").select("doc_id", text.alias("text"))
-    return scrub_pii(docs)
+    return scrub_pii(_spread(docs))
 
 
 _PII_SYNTH_SQL = """

@@ -9,15 +9,18 @@ has `iceberg-spark-runtime` on the classpath.  Everything degrades by
 explicit detection, never by a stack trace from a missing class.
 
 Iceberg specifics honored when active:
-- reads go through the catalog (`spark.read.format("iceberg")` /
-  `spark.table`), so snapshot isolation, hidden-partition pruning and
-  `VERSION AS OF` time travel apply to the scan;
-- writes use the DataFrameWriterV2 `writeTo(...)` API
-  (createOrReplace / append), the Iceberg-native commit path — one
-  atomic snapshot per wave instead of directory-level overwrite;
-- the lineage unit can be the table's own partitioning: pass
-  `partition_col` and the resumable runner buckets by it instead of an
-  id hash (per-Iceberg-partition lineage, north rule).
+- reads go through the catalog (`spark.read.format("iceberg")`), so
+  snapshot isolation, hidden-partition pruning and `snapshot-id` time
+  travel apply to the scan;
+- `write_table` uses the DataFrameWriterV2 `writeTo(...)` API
+  (createOrReplace / append): each call is one atomic snapshot commit
+  instead of a directory-level overwrite;
+- `partition_col` only partitions `write_table`'s output
+  (`partitionedBy` / `partitionBy`).
+
+The resumable runner (`plans/lineage.py`) does not write through this
+module: it buckets turns by a hash of `(conv_id, turn_idx)` and writes
+each wave's buckets as parquet itself (dynamic partition overwrite).
 """
 
 from __future__ import annotations
@@ -87,8 +90,7 @@ def write_table(
     - ``parquet``: directory write (optionally partitioned);
     - ``iceberg``: DataFrameWriterV2 `writeTo(...)` — createOrReplace
       for 'overwrite', append otherwise; each call is ONE atomic Iceberg
-      snapshot commit, the property the wave-based resumable runner
-      relies on (a torn wave never becomes visible)."""
+      snapshot commit (a torn write never becomes visible)."""
     if table_format == "iceberg":
         if not iceberg_available(df.sparkSession):
             raise RuntimeError(

@@ -38,11 +38,6 @@ TRANSCRIPT_SCHEMA = StructType(
 )
 
 
-def extract_stream_df(stream_df: DataFrame, options: Options = DEFAULT_OPTIONS) -> DataFrame:
-    "Apply the extraction cascade to a streaming DataFrame of turns."
-    return extract_transcripts(stream_df, options)
-
-
 def windowed_tier_metrics(stream_df: DataFrame, options: Options = DEFAULT_OPTIONS,
                           window: str = "10 minutes", watermark: str = "30 minutes") -> DataFrame:
     """Streaming pipeline metrics: per-event-time-window tier counts with
@@ -91,7 +86,7 @@ def start_file_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    out = extract_stream_df(stream, options)
+    out = extract_transcripts(stream, options)
     writer = (
         out.writeStream.format("parquet")
         .option("path", output_dir)
