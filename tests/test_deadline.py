@@ -6,6 +6,7 @@ finalizer would be swallowed as unraisable and the document would run
 on; the module-wide filter turns that warning into a failure.
 """
 
+import hashlib
 import signal
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -46,23 +47,51 @@ def test_adversarial_document_stops_at_the_deadline(name):
     assert r.tier == "main" and r.text
 
 
-def test_pdf_key_derivation_stops_at_the_deadline():
-    # /R 6 with all-zero /U and /O: both Algorithm 2.B password checks run
-    # (pure-Python AES, ~1.5 s on a 4-vCPU VM) and fail -> pdf_encrypted
-    z48, z32 = b"<" + b"00" * 48 + b">", b"<" + b"00" * 32 + b">"
-    pdf = (
+def test_nested_tables_finish_within_the_default_deadline():
+    # each outermost nested table is collected once per handle_table call,
+    # not once per nesting level (~137 s of CPU before, ~5 s after)
+    r = extract_one_result(ADVERSARIAL["nested_tables"], DEFAULT_OPTIONS)
+    assert (r.tier, r.chars_kept) == ("baseline", 2004)
+    assert hashlib.sha256(r.text.encode()).hexdigest().startswith("07a1bede96a04f4d")
+    assert _timer_off()
+
+
+def _pdf(content: bytes, encrypt: bytes = b"") -> str:
+    "One-page PDF with ``content`` as its uncompressed stream, optionally an /Encrypt dictionary."
+    return (
         b"%PDF-2.0\n1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
-        b"2 0 obj << /Type /Pages /Kids [] /Count 0 >> endobj\n"
-        b"5 0 obj << /Filter /Standard /V 5 /R 6 /Length 256 /CF << /StdCF << /CFM /AESV3 /Length 32 >> >>"
-        b" /StmF /StdCF /StrF /StdCF /P -4 /O " + z48 + b" /U " + z48 + b" /UE " + z32 + b" /OE " + z32
-        + b" >> endobj\n"
-        b"trailer << /Root 1 0 R /Encrypt 5 0 R >>\n%%EOF\n"
+        b"2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n"
+        b"3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n"
+        b"4 0 obj << /Length " + str(len(content)).encode() + b" >>\nstream\n" + content
+        + b"\nendstream\nendobj\n" + (b"5 0 obj << " + encrypt + b" >> endobj\n" if encrypt else b"")
+        + b"trailer << /Root 1 0 R" + (b" /Encrypt 5 0 R" if encrypt else b"") + b" >>\n%%EOF\n"
     ).decode("latin-1")
+
+
+def test_pdf_content_lexing_stops_at_the_deadline():
+    # 200k text-showing operators in one 2 MB stream: ~1 s to lex unbounded
+    pdf = _pdf(b"BT /F1 12 Tf " + b"(word) Tj " * 200_000 + b"ET")
     t0 = time.monotonic()
     r = extract_one_result(pdf, DEFAULT_OPTIONS, timeout=0.3)
     wall = time.monotonic() - t0
     assert r.tier == "timeout" and wall <= 0.33, (r.tier, wall)
     assert _timer_off()
+
+
+def test_unverifiable_r6_pdf_is_labeled_quickly():
+    # /R 6 with all-zero /U and /O: both Algorithm 2.B password checks run
+    # (libcrypto AES-CBC) and fail -> pdf_encrypted without a deadline
+    z48, z32 = b"<" + b"00" * 48 + b">", b"<" + b"00" * 32 + b">"
+    pdf = _pdf(
+        b"BT (x) Tj ET",
+        b"/Filter /Standard /V 5 /R 6 /Length 256 /CF << /StdCF << /CFM /AESV3 /Length 32 >> >>"
+        b" /StmF /StdCF /StrF /StdCF /P -4 /O " + z48 + b" /U " + z48 + b" /UE " + z32 + b" /OE " + z32,
+    )
+    extract_one_result(pdf, DEFAULT_OPTIONS, timeout=None)  # first PDF of the process: imports
+    t0 = time.monotonic()
+    r = extract_one_result(pdf, DEFAULT_OPTIONS, timeout=None)
+    wall = time.monotonic() - t0
+    assert r.tier == "pdf_encrypted" and wall < 0.05, (r.tier, wall)
 
 
 def test_handler_raises_only_in_kernel_frames_while_armed(monkeypatch):

@@ -340,96 +340,62 @@ def test_unsupported_encryption_version_stays_labeled():
     assert bare_extract(pdf, Options(min_extracted_size=0)).tier == "pdf_encrypted"
 
 
-# --- AES (FIPS-197 primitive + AESV2 / AESV3 handlers) ----------------------
+# --- AES (libcrypto AES-CBC + AESV2 / AESV3 handlers) -----------------------
 
 def test_aes_fips197_known_answer_vectors():
-    "The from-scratch AES is pinned to the official Appendix C vectors."
-    from trafilatura_spark.kernel.aescipher import AES
+    """FIPS-197 Appendix C through the CBC entry points (one block under a
+    zero IV is the bare cipher; 128-, 192- and 256-bit keys), plus NIST
+    SP 800-38A F.2.1 and F.2.5: two chained CBC blocks, AES-128 and -256."""
+    from trafilatura_spark.kernel.aescipher import cbc_decrypt, cbc_encrypt
 
-    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    cases = {
-        bytes(range(16)): "69c4e0d86a7b0430d8cdb78070b4c55a",
-        bytes(range(24)): "dda97ca4864cdfe06eaf70a0ec0d7191",
-        bytes(range(32)): "8ea2b7ca516745bfeafc49904b496089",
-    }
-    for key, ct in cases.items():
-        aes = AES(key)
-        assert aes.encrypt_block(pt).hex() == ct
-        assert aes.decrypt_block(bytes.fromhex(ct)) == pt
-
-
-def _openssl_cbc_encrypt(key: bytes, iv: bytes, data: bytes):
-    """AES-CBC encrypt via the SYSTEM libcrypto (OpenSSL EVP), ctypes-bound
-    in the test itself — an implementation of AES genuinely independent of
-    kernel/aescipher.py.  Returns None when libcrypto is unavailable."""
-    import ctypes
-
-    lib = None
-    for name in ("libcrypto.so.3", "libcrypto.so.1.1", "libcrypto.so"):
-        try:
-            lib = ctypes.CDLL(name)
-            break
-        except OSError:
-            continue
-    if lib is None or not hasattr(lib, "EVP_EncryptInit_ex"):
-        return None
-    lib.EVP_CIPHER_CTX_new.restype = ctypes.c_void_p
-    lib.EVP_CIPHER_CTX_free.argtypes = [ctypes.c_void_p]
-    cipher_fn = {16: lib.EVP_aes_128_cbc, 32: lib.EVP_aes_256_cbc}[len(key)]
-    cipher_fn.restype = ctypes.c_void_p
-    lib.EVP_EncryptInit_ex.argtypes = [ctypes.c_void_p] * 3 + [ctypes.c_char_p] * 2
-    lib.EVP_CIPHER_CTX_set_padding.argtypes = [ctypes.c_void_p, ctypes.c_int]
-    lib.EVP_EncryptUpdate.argtypes = [
-        ctypes.c_void_p, ctypes.c_char_p, ctypes.POINTER(ctypes.c_int),
-        ctypes.c_char_p, ctypes.c_int,
+    fips = "00112233445566778899aabbccddeeff"
+    sp = "6bc1bee22e409f96e93d7e117393172aae2d8a571e03ac9c9eb76fac45af8e51"
+    cases = [
+        (bytes(range(16)), bytes(16), fips, "69c4e0d86a7b0430d8cdb78070b4c55a"),
+        (bytes(range(24)), bytes(16), fips, "dda97ca4864cdfe06eaf70a0ec0d7191"),
+        (bytes(range(32)), bytes(16), fips, "8ea2b7ca516745bfeafc49904b496089"),
+        (bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"), bytes(range(16)), sp,
+         "7649abac8119b246cee98e9b12e9197d5086cb9b507219ee95db113a917678b2"),
+        (bytes.fromhex("603deb1015ca71be2b73aef0857d77811f352c073b6108d72d9810a30914dff4"), bytes(range(16)), sp,
+         "f58c4c04d6e5f1ba779eabfb5f7bfbd69cfc4e967edb808d679f777bc6702c7d"),
     ]
-    ctx = lib.EVP_CIPHER_CTX_new()
-    assert ctx
-    try:
-        assert lib.EVP_EncryptInit_ex(ctx, cipher_fn(), None, key, iv) == 1
-        lib.EVP_CIPHER_CTX_set_padding(ctx, 0)
-        out = ctypes.create_string_buffer(len(data) + 16)
-        outl = ctypes.c_int(0)
-        assert lib.EVP_EncryptUpdate(ctx, out, ctypes.byref(outl), data, len(data)) == 1
-        return out.raw[: outl.value]
-    finally:
-        lib.EVP_CIPHER_CTX_free(ctx)
+    for key, iv, pt, ct in cases:
+        assert cbc_encrypt(key, iv, bytes.fromhex(pt)).hex() == ct
+        assert cbc_decrypt(key, iv, bytes.fromhex(ct)) == bytes.fromhex(pt)
+        assert cbc_decrypt(key, iv, bytes.fromhex(ct) + b"ragged") == bytes.fromhex(pt)  # tail dropped
 
 
 def test_hash_2b_pinned_against_independent_aes():
-    """Algorithm 2.B (ISO 32000-2) verified against an INDEPENDENT
-    re-implementation: hashlib SHA-2 plus OpenSSL's AES-CBC via ctypes,
-    written here from the spec text — the kernel's _hash_2b previously
-    had no cross-check other than itself (a spec deviation would have
-    passed the round-trip fixtures and only surfaced on real R6 PDFs)."""
+    """Algorithm 2.B (ISO 32000-2) against a re-implementation written
+    here from the spec text, plus digests pinned from an independent
+    pure-Python FIPS-197 AES: a spec deviation would pass the round-trip
+    fixtures and only surface on real R6 PDFs."""
     import hashlib
 
-    import pytest
-
+    from trafilatura_spark.kernel.aescipher import cbc_encrypt
     from trafilatura_spark.kernel.pdftext import _hash_2b
-
-    if _openssl_cbc_encrypt(bytes(16), bytes(16), bytes(16)) is None:
-        pytest.skip("system libcrypto unavailable")
 
     def independent_2b(pw: bytes, salt: bytes, udata: bytes = b"") -> bytes:
         digest = hashlib.sha256(pw + salt + udata).digest()
         rounds = 0
         while True:
             block = (pw + digest + udata) * 64
-            enc = _openssl_cbc_encrypt(digest[:16], digest[16:32], block)
+            enc = cbc_encrypt(digest[:16], digest[16:32], block)
             mod = sum(enc[:16]) % 3
             digest = [hashlib.sha256, hashlib.sha384, hashlib.sha512][mod](enc).digest()
             rounds += 1
             if rounds >= 64 and enc[-1] <= rounds - 32:
                 return digest[:32]
 
-    for pw, salt, udata in (
-        (b"", b"VALSALT8", b""),
-        (b"", b"KEYSALT8", b""),
-        (b"secret", b"\x01\x02\x03\x04\x05\x06\x07\x08", b""),
-        (b"", b"\x00" * 8, b"U" * 48),
+    for pw, salt, udata, pinned in (
+        (b"", b"VALSALT8", b"", "744b95a63afebe639e0fa22511348413d231238f4fad22a90911175a75e539ee"),
+        (b"", b"KEYSALT8", b"", "a907694c688cb6edb27c24665b71bf8fab2c71ccb2f48417c280b8762c5063b9"),
+        (b"secret", b"\x01\x02\x03\x04\x05\x06\x07\x08", b"",
+         "f73c954722fb8e39ecd42d6fbba64c7b7c9e2066d3d250ccc990bc183b4ab5b8"),
+        (b"", b"\x00" * 8, b"U" * 48, "01d55626e9756a2c743aeaeea3721470e74711557054cc4547afc7e9bab0e405"),
     ):
-        assert _hash_2b(pw, salt, udata) == independent_2b(pw, salt, udata)
+        assert _hash_2b(pw, salt, udata).hex() == pinned
+        assert independent_2b(pw, salt, udata).hex() == pinned
 
 
 def _aes_stream(okey: bytes, plaintext: bytes) -> bytes:
@@ -545,6 +511,41 @@ def test_aes256_wrong_password_stays_labeled():
     pdf = build_aes256_pdf(6, CONTENT, wrong_pw=True)
     assert decryption_key(pdf) is None
     assert bare_extract(pdf, Options(min_extracted_size=0)).tier == "pdf_encrypted"
+
+
+def test_aes_pdfs_labeled_encrypted_without_libcrypto(tmp_path):
+    "A worker whose libcrypto does not load labels every AES file, never errors; RC4 still opens."
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    pdfs = {
+        "aesv2": build_aesv2_pdf(CONTENT),
+        "aes256_r6": build_aes256_pdf(6, CONTENT),
+        "aes256_r5": build_aes256_pdf(5, CONTENT),
+        "rc4": build_encrypted_pdf(CONTENT, r=3, nbits=128),
+    }
+    for name, pdf in pdfs.items():
+        (tmp_path / name).write_bytes(pdf)
+    script = (
+        "import json, sys\n"
+        "from trafilatura_spark.kernel import Options, bare_extract, cdecompress\n"
+        "load = cdecompress._load\n"
+        "cdecompress._load = lambda *names: None if names[0].startswith('libcrypto') else load(*names)\n"
+        "from trafilatura_spark.kernel import aescipher\n"
+        "assert not aescipher.HAS_AES\n"
+        "print(json.dumps({name: bare_extract(open(sys.argv[1] + '/' + name, 'rb').read(),"
+        " Options(min_extracted_size=0)).tier for name in sys.argv[2:]}))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path), *pdfs],
+        cwd=Path(__file__).resolve().parents[1], capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert json.loads(proc.stdout.splitlines()[-1]) == {
+        "aesv2": "pdf_encrypted", "aes256_r6": "pdf_encrypted", "aes256_r5": "pdf_encrypted", "rc4": "pdf",
+    }
 
 
 def test_rc4_encrypted_cid_pdf_decrypts_tounicode_stream():

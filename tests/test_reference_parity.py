@@ -154,7 +154,7 @@ def test_link_density_threshold_parity():
     50% large, textless icon links exempt) and the div-level farm rules
     (short punctuated lists kept, big link farms pruned, long card links
     kept)."""
-    from trafilatura_spark.kernel.cleaning import link_density_test, link_density_test_tables
+    from trafilatura_spark.kernel.cleaning import _subtree_link_info, link_density_test, link_density_test_tables
     from trafilatura_spark.kernel.loader import load_html
     from trafilatura_spark.kernel.textutils import trim
 
@@ -178,7 +178,7 @@ def test_link_density_threshold_parity():
     def div_case(items):
         tree = load_html(_wrap(f"<div>{items}</div><p>real article sibling here</p>"))
         el = tree.find(".//div")
-        return link_density_test(el, trim(el.text_content()))[0]
+        return link_density_test(el, trim(el.text_content()), _subtree_link_info(el)[1])[0]
 
     short = "".join(f'<ref target="/p{i}">Recommended product number {i}: a nice gadget</ref> ' for i in range(3))
     assert div_case(short) is False  # 100-150 chars with punctuation: kept

@@ -1,183 +1,50 @@
-"""AES block cipher (FIPS-197) + CBC helpers, pure stdlib.
+"""AES-CBC for the PDF security handler (kernel/pdftext.py) via ctypes to the libcrypto hashlib
+links.  Without libcrypto HAS_AES is False and pdftext labels AES-encrypted files 'pdf_encrypted'."""
 
-Built for the PDF standard security handler (kernel/pdftext.py): AESV2
-(/V 4) streams are AES-128-CBC with a per-stream IV prefix, AESV3
-(/V 5) are AES-256-CBC, and the R6 password hash (ISO 32000-2
-Algorithm 2.B) needs forward AES-CBC as a hash mixer — so both
-directions are implemented.  No cryptography library exists in this
-environment; the cipher is written from the public FIPS-197 spec, with
-the S-box DERIVED from its GF(2^8) definition at import (multiplicative
-inverse + affine transform) rather than transcribed, and pinned against
-the official Appendix C known-answer vectors in tests/test_pdftext.py.
+from ctypes import POINTER, byref, c_char_p, c_int, c_void_p, create_string_buffer
 
-This code DECRYPTS documents the caller already possesses; it is not a
-general-purpose crypto library (no constant-time guarantees needed for
-offline batch decryption of owned files).
-"""
+from .cdecompress import _load
 
-from __future__ import annotations
-
-from typing import List
+_crypto = _load("libcrypto.so.3", "libcrypto.so")
+try:  # None (no library) has no EVP_* attributes either
+    _crypto.EVP_CIPHER_CTX_new.restype = _crypto.EVP_get_cipherbyname.restype = c_void_p
+    _crypto.EVP_CIPHER_CTX_free.argtypes = [c_void_p]
+    _crypto.EVP_CipherInit_ex.argtypes = [c_void_p, c_void_p, c_void_p, c_char_p, c_char_p, c_int]
+    _crypto.EVP_CIPHER_CTX_set_padding.argtypes = [c_void_p, c_int]
+    _crypto.EVP_CipherUpdate.argtypes = [c_void_p, c_char_p, POINTER(c_int), c_char_p, c_int]
+    _CIPHERS = {n // 8: _crypto.EVP_get_cipherbyname(b"aes-%d-cbc" % n) for n in (128, 192, 256)}
+except AttributeError:
+    _crypto = None
+HAS_AES = _crypto is not None and all(_CIPHERS.values())
 
 
-def _gf_mul(a: int, b: int) -> int:
-    "Multiply in GF(2^8) modulo the AES polynomial x^8+x^4+x^3+x+1."
-    p = 0
-    while b:
-        if b & 1:
-            p ^= a
-        a <<= 1
-        if a & 0x100:
-            a ^= 0x11B
-        b >>= 1
-    return p
-
-
-def _build_sbox() -> tuple:
-    inv = [0] * 256
-    for i in range(1, 256):
-        for j in range(1, 256):
-            if _gf_mul(i, j) == 1:
-                inv[i] = j
-                break
-    sbox = bytearray(256)
-    for i in range(256):
-        b = inv[i]
-        s = 0x63
-        for k in range(5):
-            s ^= ((b << k) | (b >> (8 - k))) & 0xFF
-        sbox[i] = s
-    invbox = bytearray(256)
-    for i, s in enumerate(sbox):
-        invbox[s] = i
-    return bytes(sbox), bytes(invbox)
-
-
-_SBOX, _INV_SBOX = _build_sbox()
-_RCON = [0] * 15
-_rc = 1
-for _i in range(1, 15):
-    _RCON[_i] = _rc
-    _rc = _gf_mul(_rc, 2)
-
-# multiplication tables for MixColumns / InvMixColumns
-_M2 = bytes(_gf_mul(i, 2) for i in range(256))
-_M3 = bytes(_gf_mul(i, 3) for i in range(256))
-_M9 = bytes(_gf_mul(i, 9) for i in range(256))
-_M11 = bytes(_gf_mul(i, 11) for i in range(256))
-_M13 = bytes(_gf_mul(i, 13) for i in range(256))
-_M14 = bytes(_gf_mul(i, 14) for i in range(256))
-
-
-def _expand_key(key: bytes) -> List[List[int]]:
-    "Key schedule: Nk words in, 4*(Nr+1) words out (FIPS-197 §5.2)."
-    nk = len(key) // 4
-    nr = nk + 6
-    w = [list(key[4 * i : 4 * i + 4]) for i in range(nk)]
-    for i in range(nk, 4 * (nr + 1)):
-        t = list(w[i - 1])
-        if i % nk == 0:
-            t = t[1:] + t[:1]
-            t = [_SBOX[x] for x in t]
-            t[0] ^= _RCON[i // nk]
-        elif nk > 6 and i % nk == 4:
-            t = [_SBOX[x] for x in t]
-        w.append([w[i - nk][j] ^ t[j] for j in range(4)])
-    return w
-
-
-class AES:
-    "One expanded key; 16-byte block encrypt/decrypt (state is flat r+4c)."
-
-    def __init__(self, key: bytes):
-        if len(key) not in (16, 24, 32):
-            raise ValueError("AES key must be 16/24/32 bytes")
-        self._w = _expand_key(key)
-        self._nr = len(key) // 4 + 6
-
-    def _round_key(self, rnd: int) -> List[int]:
-        # column-major state: byte (r, c) = word[rnd*4+c][r]
-        words = self._w[rnd * 4 : rnd * 4 + 4]
-        return [words[c][r] for c in range(4) for r in range(4)]
-
-    def encrypt_block(self, block: bytes) -> bytes:
-        s = list(block)
-        rk = self._round_key(0)
-        s = [s[i] ^ rk[i] for i in range(16)]
-        for rnd in range(1, self._nr + 1):
-            s = [_SBOX[b] for b in s]
-            # ShiftRows on column-major flat layout: out[c][r] = in[(c+r)%4][r]
-            s = [s[((i // 4 + i % 4) % 4) * 4 + i % 4] for i in range(16)]
-            if rnd < self._nr:
-                t = []
-                for c in range(4):
-                    a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-                    t += [
-                        _M2[a0] ^ _M3[a1] ^ a2 ^ a3,
-                        a0 ^ _M2[a1] ^ _M3[a2] ^ a3,
-                        a0 ^ a1 ^ _M2[a2] ^ _M3[a3],
-                        _M3[a0] ^ a1 ^ a2 ^ _M2[a3],
-                    ]
-                s = t
-            rk = self._round_key(rnd)
-            s = [s[i] ^ rk[i] for i in range(16)]
-        return bytes(s)
-
-    def decrypt_block(self, block: bytes) -> bytes:
-        s = list(block)
-        rk = self._round_key(self._nr)
-        s = [s[i] ^ rk[i] for i in range(16)]
-        for rnd in range(self._nr - 1, -1, -1):
-            # InvShiftRows: out[c][r] = in[(c-r)%4][r]
-            s = [s[((i // 4 - i % 4) % 4) * 4 + i % 4] for i in range(16)]
-            s = [_INV_SBOX[b] for b in s]
-            rk = self._round_key(rnd)
-            s = [s[i] ^ rk[i] for i in range(16)]
-            if rnd > 0:
-                t = []
-                for c in range(4):
-                    a0, a1, a2, a3 = s[4 * c : 4 * c + 4]
-                    t += [
-                        _M14[a0] ^ _M11[a1] ^ _M13[a2] ^ _M9[a3],
-                        _M9[a0] ^ _M14[a1] ^ _M11[a2] ^ _M13[a3],
-                        _M13[a0] ^ _M9[a1] ^ _M14[a2] ^ _M11[a3],
-                        _M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3],
-                    ]
-                s = t
-        return bytes(s)
+def _cbc(key: bytes, iv: bytes, data: bytes, encrypt: int) -> bytes:
+    "One unpadded EVP AES-CBC pass: whole blocks only, a ragged tail is dropped."
+    if not HAS_AES or len(key) not in _CIPHERS or len(iv) != 16:
+        raise ValueError("needs libcrypto, a 16/24/32-byte key and a 16-byte IV")
+    ctx, out, outl = _crypto.EVP_CIPHER_CTX_new(), create_string_buffer(len(data) + 16), c_int(0)
+    try:
+        ok = ctx and _crypto.EVP_CipherInit_ex(ctx, _CIPHERS[len(key)], None, key, iv, encrypt) == 1
+        ok = ok and _crypto.EVP_CIPHER_CTX_set_padding(ctx, 0) == 1
+        if not (ok and _crypto.EVP_CipherUpdate(ctx, out, byref(outl), data, len(data)) == 1):
+            raise ValueError("EVP AES-CBC failed")
+        return out.raw[: outl.value]
+    finally:
+        _crypto.EVP_CIPHER_CTX_free(ctx)
 
 
 def cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     "AES-CBC, NO padding (len must be a multiple of 16)."
-    aes = AES(key)
-    out = []
-    prev = iv
-    for i in range(0, len(data), 16):
-        block = bytes(a ^ b for a, b in zip(data[i : i + 16], prev))
-        prev = aes.encrypt_block(block)
-        out.append(prev)
-    return b"".join(out)
+    return _cbc(key, iv, data, 1)
 
 
 def cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     "AES-CBC, NO padding removal; truncates a ragged tail block."
-    aes = AES(key)
-    out = []
-    prev = iv
-    for i in range(0, len(data) - len(data) % 16, 16):
-        block = data[i : i + 16]
-        out.append(bytes(a ^ b for a, b in zip(aes.decrypt_block(block), prev)))
-        prev = block
-    return b"".join(out)
+    return _cbc(key, iv, data, 0)
 
 
 def pdf_stream_decrypt(key: bytes, data: bytes) -> bytes:
-    """AESV2/AESV3 stream layout: 16-byte IV prefix + CBC ciphertext +
-    PKCS#7 padding.  Returns b'' for malformed (too-short) input."""
-    if len(data) < 32:
-        return b""
-    plain = cbc_decrypt(key, data[:16], data[16:])
+    "AESV2/AESV3 stream: 16-byte IV + CBC ciphertext + PKCS#7 pad; b'' if too short."
+    plain = cbc_decrypt(key, data[:16], data[16:]) if len(data) >= 32 else b""
     pad = plain[-1] if plain else 0
-    if 1 <= pad <= 16 and plain[-pad:] == bytes([pad]) * pad:
-        plain = plain[:-pad]
-    return plain
+    return plain[:-pad] if 1 <= pad <= 16 and plain[-pad:] == bytes([pad]) * pad else plain

@@ -174,20 +174,13 @@ def collect_link_info(links: list[Element]) -> tuple[int, int, int, list[str]]:
 
 
 def link_density_test(
-    element: Element, text: str, favor_precision: bool = False,
-    links: Optional[list[Element]] = None,
+    element: Element, text: str, links: list[Element], favor_precision: bool = False
 ) -> tuple[bool, list[str]]:
     """Boilerplate predicate for link-rich sections (htmlprocessing.py:126-172).
 
-    ``links`` may carry the pre-collected descendant <ref> list from
-    ``_subtree_link_info`` (the graphic early-exit is then the caller's
-    job); with the default None the original self-contained scans run."""
-    if links is None:
-        links = element.findall(".//ref")
-        if not links:
-            return False, []
-        if element.find(".//graphic") is not None:
-            return False, []
+    ``links`` is the non-empty descendant <ref> list from
+    ``_subtree_link_info``; the reference's no-link and graphic early
+    exits are the caller's job."""
     mylist: list[str] = []
     if len(links) == 1:
         len_threshold = 10 if favor_precision else 100
@@ -242,7 +235,7 @@ def delete_by_link_density(
         if not links or has_graphic:
             continue
         elemtext = trim(text)
-        result, templist = link_density_test(elem, elemtext, favor_precision, links)
+        result, templist = link_density_test(elem, elemtext, links, favor_precision)
         if result or (
             backtracking and templist and 0 < len(elemtext) < len_threshold and len(elem) >= depth_threshold
         ):

@@ -395,9 +395,16 @@ def handle_table(table_elem: Element, potential_tags: set, options: Options) -> 
 
     strip_tags(table_elem, "thead", "tbody", "tfoot")
 
+    # one walk: each outermost nested table is taken whole and not entered,
+    # so a deep nest is not re-collected once per level
     nested_elems: set = set()
-    for nested_table in table_elem.iterdescendants("table"):
-        nested_elems.update(nested_table.iter())
+    stack = list(table_elem)
+    while stack:
+        node = stack.pop()
+        if node.tag == "table":
+            nested_elems.update(node.iter())
+        else:
+            stack.extend(node)
 
     direct_rows = [c for c in table_elem if c.tag == "tr"]
     col_counts = [

@@ -39,13 +39,16 @@ PDFs: the standard security handler is implemented for the EMPTY user
 password — the common permissions-only encryption — across RC4 (/V 1-2,
 ISO 32000-1 §7.6.3), AES-128 AESV2 (/V 4) and AES-256 AESV3 (/V 5,
 /R 5-6 incl. the Algorithm 2.B iterated hash), all gated on /U
-verification; AES itself is a from-scratch FIPS-197 implementation
-(kernel/aescipher.py).  Job-supplied real passwords are tried as USER
-then OWNER on every revision — for /V 5 including the /O+/OE owner leg
-(owner hashes take the 48-byte /U string as trailing input) — after
-SASLprep (RFC 4013 via stdlib stringprep) and the 127-byte UTF-8
-truncation ISO 32000-2 7.6.4.3.3 prescribes.  Files whose password
-does not verify are refused and the kernel labels them
+verification.  Hash primitives come from hashlib, Flate from zlib and
+AES-CBC from the system libcrypto through a ctypes binding
+(kernel/aescipher.py); without libcrypto every AES-encrypted file is
+labeled tier='pdf_encrypted'.  RC4, which OpenSSL 3's default provider
+no longer offers, stays in Python (_rc4).  Job-supplied real passwords
+are tried as USER then OWNER on every revision — for /V 5 including
+the /O+/OE owner leg (owner hashes take the 48-byte /U string as
+trailing input) — after SASLprep (RFC 4013 via stdlib stringprep) and
+the 127-byte UTF-8 truncation ISO 32000-2 7.6.4.3.3 prescribes.  Files
+whose password does not verify are refused and the kernel labels them
 tier='pdf_encrypted' instead of emitting key-stream garbage.
 
 The Spark face: operators/extract.py routes %PDF- payloads here before
@@ -58,6 +61,8 @@ from __future__ import annotations
 import re
 import zlib
 from typing import Dict, Iterator, List, NamedTuple, Optional, Tuple, Union
+
+from .aescipher import HAS_AES, cbc_decrypt, cbc_encrypt, pdf_stream_decrypt
 
 PDF_MAGIC = b"%PDF-"
 
@@ -168,8 +173,6 @@ def _hash_2b(pw: bytes, salt: bytes, udata: bytes = b"") -> bytes:
     "ISO 32000-2 Algorithm 2.B iterated password hash (R6)."
     import hashlib
 
-    from .aescipher import cbc_encrypt
-
     k = hashlib.sha256(pw + salt + udata).digest()
     count = 0
     while True:
@@ -267,10 +270,8 @@ def decryption_key(
             return None
 
         if v == 5 and r in (5, 6):
-            from .aescipher import cbc_decrypt
-
             ue = _dict_bytes_value(body, b"UE")
-            if not ue or len(u) < 48:
+            if not ue or len(u) < 48 or not HAS_AES:
                 return None
             # ISO 32000-2 7.6.4.3.3: the password is SASLprep'd (RFC
             # 4013) then UTF-8-encoded and truncated to 127 bytes before
@@ -325,6 +326,8 @@ def decryption_key(
         if v == 4:
             # crypt filter: only the standard /StdCF with AESV2 or V2 (RC4)
             if b"/AESV2" in body:
+                if not HAS_AES:
+                    return None
                 aes = True
             elif b"/V2" not in body:
                 return None
@@ -400,8 +403,6 @@ def _object_key(crypt: PdfCrypt, num: int, gen: int) -> bytes:
 def _decrypt_stream(crypt: PdfCrypt, num: int, gen: int, raw: bytes) -> bytes:
     okey = _object_key(crypt, num, gen)
     if crypt.aes:
-        from .aescipher import pdf_stream_decrypt
-
         return pdf_stream_decrypt(okey, raw)
     return _rc4(okey, raw)
 
@@ -1109,7 +1110,7 @@ def extract_pdf_info(
     decryption_key() alongside is_encrypted() to label those.  Callers
     that already derived the file key (bare_extract gates on
     decryption_key() first) pass it as `crypt` — for /R 6 files the
-    Algorithm 2.B hash costs thousands of pure-Python AES block ops, so
+    Algorithm 2.B hash runs at least 64 rounds of SHA-2 and AES-CBC, so
     re-deriving per document would double that.
 
     Diagnostics: ``unmapped_cid`` is True when text was SHOWN through a
