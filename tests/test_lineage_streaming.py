@@ -255,7 +255,7 @@ def test_streaming_matches_batch(spark, small_df, tmp_path):
     }
     batch_rows = {
         (r.conv_id, r.turn_idx): (r.extracted_text, r.tier)
-        for r in extract_transcripts(small_df, num_partitions=4).collect()
+        for r in extract_transcripts(small_df).collect()
     }
     assert stream_rows == batch_rows
 

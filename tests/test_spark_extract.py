@@ -7,7 +7,7 @@ import pytest
 
 from trafilatura_spark.fixtures import generate_rows, transcripts_df
 from trafilatura_spark.kernel import DEFAULT_OPTIONS
-from trafilatura_spark.operators.extract import extract_one_result, extract_transcripts
+from trafilatura_spark.operators.extract import extract_one_result, extract_transcripts, salted_repartition
 
 N_CONVS = 30
 
@@ -15,7 +15,7 @@ N_CONVS = 30
 @pytest.fixture(scope="module")
 def spark_output(spark):
     df = transcripts_df(spark, N_CONVS, num_slices=4)
-    out = extract_transcripts(df, num_partitions=8)
+    out = extract_transcripts(salted_repartition(df, 8))
     rows = out.orderBy("conv_id", "turn_idx").collect()
     return rows
 
@@ -75,7 +75,7 @@ def test_every_turn_has_row(spark, spark_output):
 def test_plan_shape(spark):
     "The physical plan keeps scan-side work out of Python: one Arrow stage."
     df = transcripts_df(spark, 5, num_slices=2)
-    out = extract_transcripts(df, num_partitions=4)
+    out = extract_transcripts(salted_repartition(df, 4))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan or "MapInArrow" in plan
 
@@ -122,9 +122,9 @@ def test_timeout_in_the_python_worker(spark, monkeypatch):
 
     from trafilatura_spark.operators import extract
 
-    def with_2s_deadline(options=DEFAULT_OPTIONS, passthrough_cols=None):
+    def with_2s_deadline(options=DEFAULT_OPTIONS):
         row_fn = partial(extract.extract_one_result, options=options, timeout=2.0)
-        return extract.map_batches(row_fn, extract.CONTENT_COLUMNS, passthrough_cols)
+        return extract.map_batches(row_fn, extract.CONTENT_COLUMNS)
 
     monkeypatch.setattr(extract, "make_extract_batch_fn", with_2s_deadline)
     nested = "<table><tr><td>x " * 1000 + "text" + "</td></tr></table>" * 1000

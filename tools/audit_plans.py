@@ -124,7 +124,12 @@ def main() -> int:
     rs = re.search(r"ReadSchema: struct<([^>]*)>", p)
     cols = rs.group(1) if rs else ""
     check("extract scan pruned to needed cols", bool(rs) and "lang" not in cols and "source" not in cols, cols[:200])
-    check("extract no pre-UDF shuffle by default", "Exchange" not in p.split("MapInPandas")[-1])
+    check("extract no pre-UDF shuffle", "Exchange" not in p.split("MapInPandas")[-1])
+    # the registry's extraction entries: only their input spread, never a
+    # keyed shuffle in front of the kernel
+    for name, fn in Q.SPARK_QUERIES.items():
+        if name.startswith("extract_documents_"):
+            check(f"{name} no keyed shuffle (rebalance-only)", only_rebalance_exchanges(plan_of(fn(spark, sf_dir))))
 
     # jaccard-via-LSH: the per-doc counts join must NOT be broadcast in
     # the static plan (AQE may still pick broadcast at tiny SF — audit

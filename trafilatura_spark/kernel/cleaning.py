@@ -226,11 +226,24 @@ def delete_by_link_density(
     deletions = []
     len_threshold = 200 if favor_precision else 100
     depth_threshold = 1 if favor_precision else 3
+    # a node with no <ref> descendants can never be deleted
+    # (link_density_test returns (False, []) and backtracking requires a
+    # non-empty templist), so only ancestors of a <ref> are walked: one
+    # upward pass per ref, stopping at an ancestor an earlier ref added,
+    # inside the same walk that collects the candidates
+    linked, candidates = set(), []
+    for elem in subtree.iter(tagname, "ref"):
+        if elem.tag == tagname:
+            candidates.append(elem)
+        if elem.tag == "ref":
+            node = elem.getparent()
+            while node is not None and node not in linked:
+                linked.add(node)
+                node = node.getparent()
 
-    for elem in subtree.iter(tagname):
-        # fused single walk; a node with no <ref> descendants can never be
-        # deleted (link_density_test returns (False, []) and backtracking
-        # requires a non-empty templist), so its text is never needed
+    for elem in candidates:
+        if elem not in linked:
+            continue
         text, links, has_graphic = _subtree_link_info(elem)
         if not links or has_graphic:
             continue

@@ -802,39 +802,28 @@ def _identity_cid_cmap(
     return mapping, [2]
 
 
-def _composite_nomap_fonts(data: bytes) -> frozenset:
-    """Resource names of composite (Type0 / Identity-H) fonts that have NO
-    /ToUnicode CMap.  Their show strings carry CIDs with no text mapping
-    this reader can resolve (predefined CMap tables are out of scope), so
-    the interpreter suppresses them — decoding 2-byte CIDs byte-per-glyph
+def _font_maps(data: bytes, key: Optional["PdfCrypt"] = None) -> Tuple[Dict[str, CMap], frozenset]:
+    """One walk of the /Font dict references over one object table.
+
+    ``fonts``: resource font name -> ToUnicode CMap, from the object
+    graph: /Font << /F1 N 0 R >> dicts name fonts, font objects reference
+    their /ToUnicode stream.  Names are global last-wins — per-page
+    resource scoping is out of scope for this labeled simple reader.
+    With a resolved ``key`` (PdfCrypt), stream bodies are decrypted per
+    object first.
+
+    ``nomap``: resource names of composite (Type0 / Identity-H) fonts
+    that have NO /ToUnicode CMap and were not recovered into ``fonts``.
+    Their show strings carry CIDs with no text mapping this reader can
+    resolve (predefined CMap tables are out of scope), so the
+    interpreter suppresses them — decoding 2-byte CIDs byte-per-glyph
     would emit garbage — and callers label the document
     tier='pdf_no_text_map' when that is why no text came out."""
-    objs: Dict[int, bytes] = {}
-    for m in _OBJ_RE.finditer(data):
-        objs[int(m.group(1))] = m.group(3)
-    names = set()
-    for fd in _FONT_DICT_RE.finditer(data):
-        for ref in _FONT_REF_RE.finditer(fd.group(1)):
-            body = objs.get(int(ref.group(2)))
-            if body is None:
-                continue
-            composite = _TYPE0_RE.search(body) or _IDENTITY_RE.search(body)
-            if composite and not _TOUNICODE_RE.search(body):
-                names.add(ref.group(1).decode("latin-1"))
-    return frozenset(names)
-
-
-def _font_cmaps(data: bytes, key: Optional["PdfCrypt"] = None) -> Dict[str, CMap]:
-    """Resource font name -> ToUnicode CMap, from the object graph:
-    /Font << /F1 N 0 R >> dicts name fonts, font objects reference their
-    /ToUnicode stream.  Names are global last-wins — per-page resource
-    scoping is out of scope for this labeled simple reader.  With a
-    resolved ``key`` (PdfCrypt), stream bodies are decrypted per object
-    first."""
     objs: Dict[int, Tuple[int, bytes]] = {}
     for m in _OBJ_RE.finditer(data):
         objs[int(m.group(1))] = (int(m.group(2)), m.group(3))
     fonts: Dict[str, CMap] = {}
+    composite_nomap = set()
     for fd in _FONT_DICT_RE.finditer(data):
         for ref in _FONT_REF_RE.finditer(fd.group(1)):
             entry = objs.get(int(ref.group(2)))
@@ -842,13 +831,14 @@ def _font_cmaps(data: bytes, key: Optional["PdfCrypt"] = None) -> Dict[str, CMap
                 continue
             tu = _TOUNICODE_RE.search(entry[1])
             if not tu:
+                name = ref.group(1).decode("latin-1")
+                type0, identity = _TYPE0_RE.search(entry[1]), _IDENTITY_RE.search(entry[1])
+                if type0 or identity:
+                    composite_nomap.add(name)
                 # Identity-encoded composite font without ToUnicode: try
                 # recovering CID -> text from the embedded TrueType
                 # program (round-6; _identity_cid_cmap docstring)
-                name = ref.group(1).decode("latin-1")
-                if name not in fonts and (
-                    _TYPE0_RE.search(entry[1]) and _IDENTITY_RE.search(entry[1])
-                ):
+                if name not in fonts and type0 and identity:
                     cmap = _identity_cid_cmap(entry[1], objs, key)
                     if cmap:
                         fonts[name] = cmap
@@ -867,7 +857,9 @@ def _font_cmaps(data: bytes, key: Optional["PdfCrypt"] = None) -> Dict[str, CMap
             cmap = _parse_cmap(_inflate(raw))
             if cmap:
                 fonts[ref.group(1).decode("latin-1")] = cmap
-    return fonts
+    # fonts recovered via the embedded-TrueType path are mapped now —
+    # only the genuinely unmappable keep the pdf_no_text_map label
+    return fonts, frozenset(composite_nomap - set(fonts))
 
 
 # --- text interpreter --------------------------------------------------------
@@ -1131,10 +1123,7 @@ def extract_pdf_info(
             key = decryption_key(data)
             if key is None:
                 return PdfTextInfo("", False, False)
-        fonts = _font_cmaps(data, key)
-        # fonts recovered via the embedded-TrueType path are mapped now —
-        # only the genuinely unmappable keep the pdf_no_text_map label
-        nomap = frozenset(_composite_nomap_fonts(data) - set(fonts))
+        fonts, nomap = _font_maps(data, key)
         if key is None:
             # unencrypted: whole-file stream scan (also catches streams of
             # truncated objects with no closing endobj)

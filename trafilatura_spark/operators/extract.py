@@ -7,9 +7,11 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
   batch function and label the turn (tier null_input / discarded_size,
   extracted_text NULL) instead of dropping it; only the passthrough
   columns and `text` are selected, so column pruning reaches the scan.
-- conv_id-salted repartition: `hash(conv_id, pmod(turn_idx, salt))` so a
-  single million-turn conversation spreads over many partitions (AQE
-  balances bytes, not lxml-CPU; salting balances work).
+- the operators never repartition: whoever knows the input decides.  A
+  caller whose input is skewed (one million-turn conversation in one
+  split) applies `salted_repartition`, `hash(conv_id, pmod(turn_idx,
+  salt))`, first (AQE balances bytes, not lxml-CPU; salting balances
+  work).
 - mapInPandas over Arrow batches: Spark sees only columnar Arrow; the
   per-document DOM work happens inside the batch loop (no per-row Python
   crossing the JVM boundary).  Every operator runs the one loop
@@ -147,17 +149,17 @@ def extract_one_result(
     return ExtractionResult(None, tier, 0, 0)
 
 
-def map_batches(row_fn, columns: list, passthrough: Optional[list] = None):
+def map_batches(row_fn, columns: list):
     """The per-row loop of every extraction operator: a mapInPandas
-    function that calls ``row_fn`` once per ``text`` and emits the
-    passthrough columns plus one column per ``columns`` spec entry.
+    function that calls ``row_fn`` once per ``text`` and emits every
+    other column of the incoming frame plus one column per ``columns``
+    spec entry.
 
     Each column's value is taken from a row's result as soon as the row
     finishes, and the kernel's string memos are cleared with it, so
     neither a result (nor the DOM trees it holds) nor a memoized string
     outlives its row: a worker holds its Arrow batch, the output columns
     built from it, and one document."""
-    passthrough = passthrough or DEFAULT_PASSTHROUGH
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for chunk in iterator:
@@ -168,7 +170,7 @@ def map_batches(row_fn, columns: list, passthrough: Optional[list] = None):
                     column.append(get(result))
                 del result
                 clear_string_memos()
-            out = chunk[passthrough].copy()
+            out = chunk.drop(columns="text")
             for (name, dtype, _, _), column in zip(columns, values):
                 # integer columns are non-null, so int32 matches IntegerType
                 out[name] = pd.array(column, dtype="int32") if isinstance(dtype, IntegerType) else column
@@ -177,32 +179,19 @@ def map_batches(row_fn, columns: list, passthrough: Optional[list] = None):
     return batch
 
 
-def map_turns(
-    df: DataFrame,
-    fn,
-    columns: list,
-    passthrough: Optional[list] = None,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Run the batch function ``fn`` (map_batches) over ``df``: prune to
-    the passthrough columns plus ``text``, salt-repartition when
-    ``num_partitions`` is given, and declare the output schema as the
-    passthrough columns' input fields plus the ``columns`` spec."""
-    passthrough = passthrough or DEFAULT_PASSTHROUGH
-    pruned = df.select(*dict.fromkeys(passthrough + ["text"]))
-    if num_partitions is not None:
-        pruned = salted_repartition(pruned, num_partitions)
-    fields = [df.schema[c] for c in passthrough]
+def map_turns(df: DataFrame, fn, columns: list, passthrough: Optional[list] = None) -> DataFrame:
+    """Run the batch function ``fn`` (map_batches) over ``df`` pruned to
+    the passthrough columns plus ``text``, and declare the output schema
+    as the passthrough columns' input fields plus the ``columns`` spec."""
+    pruned = df.select(*dict.fromkeys((passthrough or DEFAULT_PASSTHROUGH) + ["text"]))
+    fields = [f for f in pruned.schema if f.name != "text"]
     fields += [StructField(name, dtype, nullable) for name, dtype, nullable, _ in columns]
     return pruned.mapInPandas(fn, schema=StructType(fields))
 
 
-def make_extract_batch_fn(
-    options: Options = DEFAULT_OPTIONS,
-    passthrough_cols: Optional[list] = None,
-):
-    "mapInPandas function emitting passthrough columns + CONTENT_COLUMNS."
-    return map_batches(lambda text: extract_one_result(text, options), CONTENT_COLUMNS, passthrough_cols)
+def make_extract_batch_fn(options: Options = DEFAULT_OPTIONS):
+    "mapInPandas function emitting the passthrough columns + CONTENT_COLUMNS."
+    return map_batches(lambda text: extract_one_result(text, options), CONTENT_COLUMNS)
 
 
 def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
@@ -211,7 +200,9 @@ def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> D
 
     Extraction is per-turn, so co-locating a conversation is unnecessary;
     the salt prevents the opposite failure (one giant conv_id in one
-    partition when a later stage partitions by conv_id alone).
+    partition when a later stage partitions by conv_id alone).  The
+    extraction operators never call it: a caller that knows its input is
+    skewed or badly split applies it in front of them.
     """
     salt = F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS))
     if num_partitions:
@@ -222,27 +213,15 @@ def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> D
 def extract_transcripts(
     df: DataFrame,
     options: Options = DEFAULT_OPTIONS,
-    num_partitions: Optional[int] = None,
     passthrough_cols: Optional[list] = None,
 ) -> DataFrame:
     """Full extraction operator: passthrough columns + CONTENT_COLUMNS,
     one output row per input turn (rows the reference would discard
     carry extracted_text=NULL plus a tier label)."""
-    # Partitioning policy: extraction is per-turn (no co-location needed),
-    # so the default trusts the input partitioning — for file/Iceberg
-    # sources, spark.sql.files.maxPartitionBytes already yields balanced
-    # splits, and skipping the pre-UDF shuffle measured >2x faster here.
-    # Pass num_partitions to engage the conv_id-salted repartition when
-    # the input is skewed (e.g. one giant conversation per input split)
-    # or badly sized.
-    fn = make_extract_batch_fn(options, passthrough_cols)
-    return map_turns(df, fn, CONTENT_COLUMNS, passthrough_cols, num_partitions)
+    return map_turns(df, make_extract_batch_fn(options), CONTENT_COLUMNS, passthrough_cols)
 
 
-def make_extract_with_metadata_batch_fn(
-    options: Options = DEFAULT_OPTIONS,
-    passthrough_cols: Optional[list] = None,
-):
+def make_extract_with_metadata_batch_fn(options: Options = DEFAULT_OPTIONS):
     """Batch function emitting extraction AND metadata columns in one
     mapInPandas pass — the reference's bare_extraction(with_metadata=True)
     shape.  One table scan, one Arrow crossing, and ONE HTML PARSE per
@@ -252,34 +231,22 @@ def make_extract_with_metadata_batch_fn(
     from .metadata_op import JOINED_METADATA_COLUMNS
 
     options = options.copy(with_metadata=True)
-    return map_batches(
-        lambda text: extract_one_result(text, options),
-        CONTENT_COLUMNS + JOINED_METADATA_COLUMNS,
-        passthrough_cols,
-    )
+    return map_batches(lambda text: extract_one_result(text, options), CONTENT_COLUMNS + JOINED_METADATA_COLUMNS)
 
 
 def extract_with_metadata(
     df: DataFrame,
     options: Options = DEFAULT_OPTIONS,
-    num_partitions: Optional[int] = None,
     passthrough_cols: Optional[list] = None,
 ) -> DataFrame:
     "Combined content + metadata extraction in a single Arrow stage."
     from .metadata_op import JOINED_METADATA_COLUMNS
 
-    fn = make_extract_with_metadata_batch_fn(options, passthrough_cols)
-    return map_turns(df, fn, CONTENT_COLUMNS + JOINED_METADATA_COLUMNS, passthrough_cols, num_partitions)
+    fn = make_extract_with_metadata_batch_fn(options)
+    return map_turns(df, fn, CONTENT_COLUMNS + JOINED_METADATA_COLUMNS, passthrough_cols)
 
 
-def assemble_conversations(
-    extracted: DataFrame,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "extracted_text",
-    separator: str = "\n\n",
-    role_col: str = None,
-) -> DataFrame:
+def assemble_conversations(extracted: DataFrame, role_col: str = None) -> DataFrame:
     """Assemble per-turn extraction output back into ONE training
     document per conversation — the last mile of the transcript
     pipeline: turns join in ``turn_idx`` order separated by blank lines,
@@ -291,34 +258,34 @@ def assemble_conversations(
     extraction via passthrough_cols) prefixes each turn "role: text" —
     the chat-style training-document format.
 
-    100 TB shape: one shuffle keyed by conv_id (the same key the
-    extraction stage already salts/partitions by, so co-location is
-    reusable); ordering happens INSIDE each group via array_sort over
-    (turn_idx, text) structs — no global sort, no window."""
+    100 TB shape: one shuffle keyed by conv_id; ordering happens INSIDE
+    each group via array_sort over (turn_idx, text) structs — no global
+    sort, no window."""
     # A NULL role must not null out a kept turn via concat's
     # null-propagation (n_kept counts non-null TEXT, so the assembled
     # document would silently lose a counted turn): fall back to the
     # bare text when the role is missing.
+    text = F.col("extracted_text")
     text_expr = (
         F.when(
             F.col(role_col).isNotNull(),
-            F.concat(F.col(role_col), F.lit(": "), F.col(text_col)),
-        ).otherwise(F.col(text_col))
+            F.concat(F.col(role_col), F.lit(": "), text),
+        ).otherwise(text)
         if role_col
-        else F.col(text_col)
+        else text
     )
     turns = F.array_sort(
-        F.collect_list(F.struct(F.col(idx_col).alias("i"), text_expr.alias("t")))
+        F.collect_list(F.struct(F.col("turn_idx").alias("i"), text_expr.alias("t")))
     )
     return (
-        extracted.groupBy(conv_col)
+        extracted.groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
-            F.count(text_col).alias("n_kept"),
+            F.count(text).alias("n_kept"),
             turns.alias("_turns"),
         )
         .select(
-            F.col(conv_col),
+            "conv_id",
             "n_turns",
             "n_kept",
             F.array_join(
@@ -326,7 +293,7 @@ def assemble_conversations(
                     F.filter(F.col("_turns"), lambda s: s["t"].isNotNull()),
                     lambda s: s["t"],
                 ),
-                separator,
+                "\n\n",
             ).alias("conversation_text"),
         )
     )

@@ -1,9 +1,9 @@
 """Distributed metadata extraction: struct-per-turn over Arrow batches.
 
 The reference's metadata path (metadata.py:458-563) is a deterministic
-per-document scalar function — here one more batched column family on
-the same salted partitioning as content extraction (SURVEY.md §2.7
-Spark mapping)."""
+per-document scalar function — here one more column family through the
+same batch loop as content extraction (`map_batches` / `map_turns`),
+over the input's own partitioning (SURVEY.md §2.7 Spark mapping)."""
 
 from __future__ import annotations
 
@@ -60,10 +60,10 @@ def _metadata_of(text: Optional[str]):
     return extract_metadata(wrap_if_fragment(text)) if isinstance(text, str) else None
 
 
-def make_metadata_batch_fn(passthrough_cols: Optional[list] = None):
-    "mapInPandas function emitting passthrough columns + METADATA_COLUMNS."
-    return map_batches(_metadata_of, METADATA_COLUMNS, passthrough_cols)
+def make_metadata_batch_fn():
+    "mapInPandas function emitting the passthrough columns + METADATA_COLUMNS."
+    return map_batches(_metadata_of, METADATA_COLUMNS)
 
 
 def extract_metadata_columns(df: DataFrame, passthrough_cols: Optional[list] = None) -> DataFrame:
-    return map_turns(df, make_metadata_batch_fn(passthrough_cols), METADATA_COLUMNS, passthrough_cols)
+    return map_turns(df, make_metadata_batch_fn(), METADATA_COLUMNS, passthrough_cols)

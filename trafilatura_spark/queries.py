@@ -32,7 +32,8 @@ def _spread(df: DataFrame) -> DataFrame:
     Every table here is one parquet file with one row group, so its scan
     is one task, and a narrow operator over it (minhash signatures, the
     Gopher/C4/PII projections, chunking, URL normalization, the IVF
-    build) would run its whole map side on one core.  Whether to
+    build, the extraction kernel) would run its whole map side on one
+    core.  Whether to
     repartition is the caller's decision, made from what it knows about
     its input: the operators never repartition, and at production scale
     a splittable many-file scan already feeds every core.  Entries whose
@@ -805,6 +806,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- extraction ------------------------------------------------------------------
 
+def _documents_as_turns(spark: SparkSession, sf_dir: str, *parts) -> DataFrame:
+    """The spread ``documents`` table as extraction input: one turn per
+    document, conv_id = doc_id as a string, turn_idx 0, and a ``text``
+    built by concatenating ``parts`` (columns of ``documents``)."""
+    return _spread(_t(spark, sf_dir, "documents")).select(
+        F.col("doc_id").cast("string").alias("conv_id"),
+        F.lit(0).cast("int").alias("turn_idx"),
+        F.concat(*parts).alias("text"),
+    )
+
+
 def extract_documents_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable extraction: wrap each document's text in a
     single-paragraph page and run the FULL kernel cascade through
@@ -813,12 +825,8 @@ def extract_documents_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly — so the whole parse→cascade→serialize path is value-checked."""
     from .operators.extract import extract_transcripts
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(F.lit("<p>"), F.col("text"), F.lit("</p>")).alias("text"),
-    )
-    out = extract_transcripts(docs, num_partitions=32)
+    docs = _documents_as_turns(spark, sf_dir, F.lit("<p>"), F.col("text"), F.lit("</p>"))
+    out = extract_transcripts(docs)
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("extracted_text"),
@@ -855,20 +863,18 @@ def extract_documents_article(spark: SparkSession, sf_dir: str) -> DataFrame:
     the heading handler and the serializer's newline policy."""
     from .operators.extract import extract_transcripts
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<article><h2>Doc "),
-            F.col("doc_id"),
-            F.lit("</h2><p>"),
-            F.col("text"),
-            F.lit("</p><p>"),
-            F.col("text"),
-            F.lit(f" {_PAD}</p></article>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<article><h2>Doc "),
+        F.col("doc_id"),
+        F.lit("</h2><p>"),
+        F.col("text"),
+        F.lit("</p><p>"),
+        F.col("text"),
+        F.lit(f" {_PAD}</p></article>"),
     )
-    out = extract_transcripts(docs, num_partitions=32)
+    out = extract_transcripts(docs)
     return out.select(F.col("conv_id").cast("long").alias("doc_id"), F.col("extracted_text"))
 
 
@@ -889,22 +895,20 @@ def extract_documents_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     serializer's '- item' rendering through the full cascade."""
     from .operators.extract import extract_transcripts
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<article><h2>Doc "),
-            F.col("doc_id"),
-            F.lit("</h2><ul><li>alpha "),
-            F.col("lang"),
-            F.lit("</li><li>beta "),
-            F.col("source"),
-            F.lit("</li></ul><p>"),
-            F.col("text"),
-            F.lit(f" {_PAD}</p></article>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<article><h2>Doc "),
+        F.col("doc_id"),
+        F.lit("</h2><ul><li>alpha "),
+        F.col("lang"),
+        F.lit("</li><li>beta "),
+        F.col("source"),
+        F.lit("</li></ul><p>"),
+        F.col("text"),
+        F.lit(f" {_PAD}</p></article>"),
     )
-    out = extract_transcripts(docs, num_partitions=32)
+    out = extract_transcripts(docs)
     return out.select(F.col("conv_id").cast("long").alias("doc_id"), F.col("extracted_text"))
 
 
@@ -928,21 +932,19 @@ def extract_documents_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kernel.settings import Options
     from .operators.extract import extract_transcripts
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<article><h2>Doc "),
-            F.col("doc_id"),
-            F.lit("</h2><p>Alpha <b>beta "),
-            F.col("lang"),
-            F.lit("</b> gamma. "),
-            F.col("text"),
-            F.lit(f" {_PAD}</p></article>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<article><h2>Doc "),
+        F.col("doc_id"),
+        F.lit("</h2><p>Alpha <b>beta "),
+        F.col("lang"),
+        F.lit("</b> gamma. "),
+        F.col("text"),
+        F.lit(f" {_PAD}</p></article>"),
     )
     opts = Options(format="markdown", formatting=True)
-    out = extract_transcripts(docs, options=opts, num_partitions=32)
+    out = extract_transcripts(docs, options=opts)
     return out.select(F.col("conv_id").cast("long").alias("doc_id"), F.col("extracted_text"))
 
 
@@ -966,18 +968,16 @@ def extract_documents_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kernel.settings import Options
     from .operators.extract import extract_transcripts
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<article><h2>Doc "),
-            F.col("doc_id"),
-            F.lit("</h2><p>Alpha 1 &lt; 2 &amp; 3 gamma. "),
-            F.col("text"),
-            F.lit(f" {_PAD}</p></article>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<article><h2>Doc "),
+        F.col("doc_id"),
+        F.lit("</h2><p>Alpha 1 &lt; 2 &amp; 3 gamma. "),
+        F.col("text"),
+        F.lit(f" {_PAD}</p></article>"),
     )
-    out = extract_transcripts(docs, options=Options(format="xml"), num_partitions=32)
+    out = extract_transcripts(docs, options=Options(format="xml"))
     return out.select(F.col("conv_id").cast("long").alias("doc_id"), F.col("extracted_text"))
 
 
@@ -1004,18 +1004,16 @@ def extract_documents_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kernel.settings import Options
     from .operators.extract import extract_transcripts
 
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<article><h2>Doc "),
-            F.col("doc_id"),
-            F.lit("</h2><p>Alpha gamma. "),
-            F.col("text"),
-            F.lit(f" {_PAD}</p></article>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<article><h2>Doc "),
+        F.col("doc_id"),
+        F.lit("</h2><p>Alpha gamma. "),
+        F.col("text"),
+        F.lit(f" {_PAD}</p></article>"),
     )
-    out = extract_transcripts(docs, options=Options(format="json"), num_partitions=32)
+    out = extract_transcripts(docs, options=Options(format="json"))
     return out.select(F.col("conv_id").cast("long").alias("doc_id"), F.col("extracted_text"))
 
 
@@ -1038,22 +1036,20 @@ def extract_documents_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.metadata_op import extract_metadata_columns
 
     day = F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0")
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id"),
-            F.lit(" – Source "),
-            F.col("source"),
-            F.lit('</title><meta name="keywords" content="'),
-            F.col("lang"),
-            F.lit('"/><meta property="article:published_time" content="2024-03-'),
-            day,
-            F.lit('T08:30:00Z"/></head><body><p>'),
-            F.col("text"),
-            F.lit("</p></body></html>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<html><head><title>Doc "),
+        F.col("doc_id"),
+        F.lit(" – Source "),
+        F.col("source"),
+        F.lit('</title><meta name="keywords" content="'),
+        F.col("lang"),
+        F.lit('"/><meta property="article:published_time" content="2024-03-'),
+        day,
+        F.lit('T08:30:00Z"/></head><body><p>'),
+        F.col("text"),
+        F.lit("</p></body></html>"),
     )
     out = extract_metadata_columns(docs)
     return out.select(
@@ -1080,24 +1076,22 @@ def extract_documents_with_metadata(spark: SparkSession, sf_dir: str) -> DataFra
     from .operators.extract import extract_with_metadata
 
     day = F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0")
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id"),
-            F.lit(" – Source "),
-            F.col("source"),
-            F.lit('</title><meta name="keywords" content="'),
-            F.col("lang"),
-            F.lit('"/><meta property="article:published_time" content="2024-03-'),
-            day,
-            F.lit('T08:30:00Z"/></head><body><article><p>'),
-            F.col("text"),
-            F.lit(f" {_PAD}</p></article></body></html>"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("<html><head><title>Doc "),
+        F.col("doc_id"),
+        F.lit(" – Source "),
+        F.col("source"),
+        F.lit('</title><meta name="keywords" content="'),
+        F.col("lang"),
+        F.lit('"/><meta property="article:published_time" content="2024-03-'),
+        day,
+        F.lit('T08:30:00Z"/></head><body><article><p>'),
+        F.col("text"),
+        F.lit(f" {_PAD}</p></article></body></html>"),
     )
-    out = extract_with_metadata(docs, num_partitions=32)
+    out = extract_with_metadata(docs)
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("extracted_text"),
@@ -1129,16 +1123,14 @@ def extract_documents_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.extract import extract_transcripts
 
     clean = F.regexp_replace(F.col("text"), r"[^ -~]|[()\\]", " ")
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.concat(
-            F.lit("%PDF-1.4\nstream\nBT ("),
-            clean,
-            F.lit(") Tj ET\nendstream\n%%EOF"),
-        ).alias("text"),
+    docs = _documents_as_turns(
+        spark,
+        sf_dir,
+        F.lit("%PDF-1.4\nstream\nBT ("),
+        clean,
+        F.lit(") Tj ET\nendstream\n%%EOF"),
     )
-    out = extract_transcripts(docs, num_partitions=32)
+    out = extract_transcripts(docs)
     return out.select(
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("extracted_text"),
