@@ -231,22 +231,48 @@ def test_ttf_cmap_inversion_total_with_sfnt_prefix(data):
     assert isinstance(_ttf_unicode_by_gid(font), dict)
 
 
-@given(html_fragment())
-@settings(max_examples=150, deadline=None)
-def test_subtree_link_info_equivalence(fragment):
-    """The fused link-density walk must agree exactly with the three
-    separate scans it replaced (text_content / findall('.//ref') /
-    find('.//graphic')) on arbitrary converted trees."""
-    from trafilatura_spark.kernel.cleaning import _subtree_link_info, convert_tags
-    from trafilatura_spark.kernel.loader import load_html
-    from trafilatura_spark.kernel.settings import DEFAULT_OPTIONS
+# whitespace-only and Unicode-whitespace runs (no-break space, ideographic
+# space, U+001C) are where a trimmed-length sum would go off by one
+link_text = st.one_of(st.none(), st.text(alphabet=st.sampled_from(" \n\t\xa0\u3000\x1cxé,"), max_size=14))
 
-    tree = load_html("<html><body><div id='x'>" + fragment + "</div></body></html>")
-    if tree is None:
-        return
-    tree = convert_tags(tree, DEFAULT_OPTIONS)  # produces <ref>/<graphic> vocabulary
-    for root in [tree] + tree.findall(".//ref")[:3] + [tree.find(".//cell") or tree]:
-        text, links, has_graphic = _subtree_link_info(root)
-        assert text == root.text_content()
-        assert links == root.findall(".//ref")
-        assert has_graphic == (root.find(".//graphic") is not None)
+
+@st.composite
+def link_tree(draw, depth=0):
+    from trafilatura_spark.kernel.dom import Element
+
+    elem = Element(draw(st.sampled_from(["div", "p", "hi", "ref", "a", "graphic"])))
+    elem.text = draw(link_text)
+    if depth < 4:
+        for child in draw(st.lists(link_tree(depth=depth + 1), max_size=3)):
+            child.tail = draw(link_text)
+            elem.append(child)
+    return elem
+
+
+@given(link_tree(), st.booleans())
+@settings(max_examples=300, deadline=None)
+def test_link_records_match_their_definitions(root, leaves_first):
+    """Every element's LinkRecord equals the naive subtree scans, for both
+    link tags and whichever order the records are asked for in."""
+    from trafilatura_spark.kernel.cleaning import link_records
+    from trafilatura_spark.kernel.textutils import trim
+
+    elements = list(root.iter())
+    for link_tag in ("ref", "a"):
+        record = link_records(root, link_tag)
+        for elem in reversed(elements) if leaves_first else elements:
+            rec = record(elem)
+            links = elem.findall(f".//{link_tag}")
+            graphic = elem.find(".//graphic") is not None
+            if rec is None:
+                assert not links and not graphic
+                continue
+            text = elem.text_content()
+            lengths = [len(trim(link.text_content())) for link in links]
+            nonempty = [n for n in lengths if n]
+            assert (rec.length, rec.lead, rec.trail) == (len(trim(text)), text[:1].isspace(), text[-1:].isspace())
+            assert (rec.links, rec.linklen) == (len(links), sum(nonempty))
+            assert (rec.nonempty, rec.short) == (len(nonempty), sum(n < 10 for n in nonempty))
+            if len(links) == 1:  # link_density_test reads the only link's length as the sum
+                assert rec.linklen == lengths[0]
+            assert rec.graphic == graphic

@@ -154,9 +154,8 @@ def test_link_density_threshold_parity():
     50% large, textless icon links exempt) and the div-level farm rules
     (short punctuated lists kept, big link farms pruned, long card links
     kept)."""
-    from trafilatura_spark.kernel.cleaning import _subtree_link_info, link_density_test, link_density_test_tables
+    from trafilatura_spark.kernel.cleaning import link_dense_tables, link_density_test, link_records
     from trafilatura_spark.kernel.loader import load_html
-    from trafilatura_spark.kernel.textutils import trim
 
     MED = '<ref target="/x">' + "x" * 250 + "</ref>"
     BIG = '<ref target="/x">' + "x" * 600 + "</ref>"
@@ -170,15 +169,16 @@ def test_link_density_threshold_parity():
     ]
     for fragment, expected in table_cases:
         tree = load_html(_wrap(fragment))
-        assert link_density_test_tables(tree.find(".//table")) is expected, fragment[:60]
+        assert (link_dense_tables(tree) == [tree.find(".//table")]) is expected, fragment[:60]
 
     icon = f"<table><cell>{'data ' * 50}<ref target=\"/x\"><graphic src=\"/i.png\"/></ref></cell></table>"
-    assert link_density_test_tables(load_html(_wrap(icon)).find(".//table")) is False
+    assert link_dense_tables(load_html(_wrap(icon))) == []
 
     def div_case(items):
         tree = load_html(_wrap(f"<div>{items}</div><p>real article sibling here</p>"))
         el = tree.find(".//div")
-        return link_density_test(el, trim(el.text_content()), _subtree_link_info(el)[1])[0]
+        rec = link_records(tree, "ref")(el)
+        return link_density_test(el, rec.length, rec)[0]
 
     short = "".join(f'<ref target="/p{i}">Recommended product number {i}: a nice gadget</ref> ' for i in range(3))
     assert div_case(short) is False  # 100-150 chars with punctuation: kept

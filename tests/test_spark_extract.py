@@ -127,7 +127,8 @@ def test_timeout_in_the_python_worker(spark, monkeypatch):
         return extract.map_batches(row_fn, extract.CONTENT_COLUMNS)
 
     monkeypatch.setattr(extract, "make_extract_batch_fn", with_2s_deadline)
-    nested = "<table><tr><td>x " * 1000 + "text" + "</td></tr></table>" * 1000
+    # 2000 levels: ~8 s of CPU unbounded (1000 levels now finish in ~1.5 s)
+    nested = "<table><tr><td>x " * 2000 + "text" + "</td></tr></table>" * 2000
     normal = "<article>" + "".join(f"<p>Paragraph {i} with enough words to count.</p>" for i in range(20)) + "</article>"
     df = spark.createDataFrame([("c", 0, nested), ("c", 1, normal)], "conv_id string, turn_idx int, text string")
     out = extract_transcripts(df.coalesce(1))

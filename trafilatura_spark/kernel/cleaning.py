@@ -8,7 +8,8 @@ convert_tags, handle_textnode, process_node).
 from __future__ import annotations
 
 import re as _re
-from typing import Iterable, Optional
+from collections import namedtuple
+from typing import Callable, Iterable, Optional
 from urllib.parse import urlsplit
 
 from .dedup_state import duplicate_test
@@ -31,6 +32,8 @@ REND_TAG_MAPPING = {
 PRESERVE_IMG_CLEANING = {"figure", "picture", "source"}
 
 CODE_INDICATORS = ["{", '("', "('", "\n    "]
+
+LIST_TAGS = frozenset({"dl", "ol", "ul"})
 
 
 def tree_cleaning(tree: Element, options: Options) -> Element:
@@ -123,100 +126,133 @@ def prune_unwanted_nodes(
     return tree
 
 
-def _subtree_link_info(root: Element) -> tuple[str, list[Element], bool]:
-    """One doc-order walk replacing the three separate subtree scans the
-    link-density predicates need (``text_content()`` + ``findall('.//ref')``
-    + ``find('.//graphic')``): returns (inner text, descendant <ref>
-    elements in document order, whether any descendant <graphic> exists).
-    Byte-identical text to ``root.text_content()``; same node list as
-    ``findall`` (descendants only, nested refs included)."""
-    parts: list = []
-    links: list[Element] = []
-    has_graphic = False
-    emit = parts.append
-    stack: list = []
-    children = root._children
-    for i in range(len(children) - 1, -1, -1):
-        c = children[i]
-        if c.tail:
-            stack.append(c.tail)
-        stack.append(c)
-    if root.text:
-        stack.append(root.text)
-    pop = stack.pop
-    while stack:
-        item = pop()
-        if item.__class__ is str:
-            emit(item)
-            continue
-        tag = item.tag
-        if tag == "ref":
-            links.append(item)
-        elif tag == "graphic":
-            has_graphic = True
-        children = item._children
-        for i in range(len(children) - 1, -1, -1):
-            c = children[i]
-            if c.tail:
-                stack.append(c.tail)
-            stack.append(c)
-        if item.text:
-            stack.append(item.text)
-    return "".join(parts), links, has_graphic
+# An element's subtree: length = len(trim(text_content())), lead / trail = it
+# starts / ends with whitespace (a parent sums lengths by trim's rule from
+# these); over descendant links, their count and the sum, count and count under
+# 10 of non-empty trimmed link texts (htmlprocessing.py:115-123); any <graphic>
+LinkRecord = namedtuple("LinkRecord", "length lead trail links linklen nonempty short graphic")
 
 
-def collect_link_info(links: list[Element]) -> tuple[int, int, int, list[str]]:
-    "Heuristics on link text (htmlprocessing.py:115-123)."
-    mylist = [e for e in (trim(elem.text_content()) for elem in links) if e]
-    lengths = list(map(len, mylist))
-    shortelems = sum(1 for length in lengths if length < 10)
-    return sum(lengths), len(mylist), shortelems, mylist
+def _ws_length(s: Optional[str]) -> tuple[int, bool, bool]:
+    "(len(trim(s)), s starts with whitespace, s ends with whitespace)."
+    if not s:
+        return 0, False, False
+    return len(" ".join(s.split())), s[0].isspace(), s[-1].isspace()
+
+
+def _ws_join(n: int, lead: bool, trail: bool, m: int, mlead: bool, mtrail: bool) -> tuple[int, bool, bool]:
+    """``_ws_length(a + b)``: trim puts one space between two words only where
+    whitespace separates them.  Without words (n == 0), lead == trail == bool(a)."""
+    if not m:
+        return n, lead or (not n and mlead), trail or mtrail
+    if not n:
+        return m, lead or mlead, mtrail
+    return n + m + (trail or mlead), lead, mtrail
+
+
+def link_records(root: Element, link_tag: str) -> Callable[[Element], Optional[LinkRecord]]:
+    """Lookup of the ``LinkRecord`` of elements under ``root`` (links are
+    ``ref`` for cleaning, ``a`` for readability); None for an element with
+    no link or <graphic> below it.  Records are built on demand, memoized,
+    children first, and each unmarked child subtree is walked once, by its
+    parent: linear in elements and characters.  Valid until a subtree it
+    describes is mutated."""
+    marked: Optional[set] = None  # elements with a link or <graphic> below
+    records: dict = {}
+
+    def mark() -> set:
+        # one upward pass per link or graphic, stopping at a marked element
+        found, stop = set(), root._parent
+        for node in root.iter(link_tag, "graphic"):
+            node = node._parent
+            while node is not stop and node not in found:
+                found.add(node)
+                node = node._parent
+        return found
+
+    def build(node: Element) -> LinkRecord:
+        n, lead, trail = _ws_length(node.text)
+        links = linklen = nonempty = short = 0
+        graphic = False
+        for child in node._children:
+            sub = records.get(child)
+            if sub is None:
+                m, mlead, mtrail = _ws_length(child.text_content())
+            else:
+                m, mlead, mtrail = sub.length, sub.lead, sub.trail
+                links += sub.links
+                linklen += sub.linklen
+                nonempty += sub.nonempty
+                short += sub.short
+                graphic = graphic or sub.graphic
+            if child.tag == link_tag:
+                links += 1
+                if m:
+                    linklen += m
+                    nonempty += 1
+                    short += m < 10
+            elif child.tag == "graphic":
+                graphic = True
+            n, lead, trail = _ws_join(n, lead, trail, m, mlead, mtrail)
+            if child.tail:
+                n, lead, trail = _ws_join(n, lead, trail, *_ws_length(child.tail))
+        return LinkRecord(n, lead, trail, links, linklen, nonempty, short, graphic)
+
+    def lookup(elem: Element) -> Optional[LinkRecord]:
+        nonlocal marked
+        if marked is None:  # at the first lookup: a pass without candidates walks nothing
+            marked = mark()
+        if elem not in marked:
+            return None
+        if elem not in records:
+            # iterative: nesting depth exceeds the recursion limit
+            order, stack = [], [elem]
+            while stack:
+                node = stack.pop()
+                order.append(node)
+                stack.extend(c for c in node._children if c in marked and c not in records)
+            for node in reversed(order):
+                records[node] = build(node)
+        return records[elem]
+
+    return lookup
 
 
 def link_density_test(
-    element: Element, text: str, links: list[Element], favor_precision: bool = False
-) -> tuple[bool, list[str]]:
-    """Boilerplate predicate for link-rich sections (htmlprocessing.py:126-172).
-
-    ``links`` is the non-empty descendant <ref> list from
-    ``_subtree_link_info``; the reference's no-link and graphic early
-    exits are the caller's job."""
-    mylist: list[str] = []
-    if len(links) == 1:
-        len_threshold = 10 if favor_precision else 100
-        link_text = trim(links[0].text_content())
-        if len(link_text) > len_threshold and len(link_text) > len(text) * 0.9:
-            return True, []
-    if element.tag == "p":
-        limitlen = 60 if element.getnext() is None else 30
-    elif element.getnext() is None:
-        limitlen = 300
-    else:
-        limitlen = 100
-    elemlen = len(text)
+    element: Element, elemlen: int, record: LinkRecord, favor_precision: bool = False
+) -> tuple[bool, bool]:
+    """Boilerplate predicate for link-rich sections (htmlprocessing.py:126-172)
+    over the trimmed text length and the ``LinkRecord`` (at least one link);
+    the second value says whether the reference's list of non-empty link
+    texts is non-empty, the only use callers have for it."""
+    # one link: its trimmed length is the link-text sum
+    if record.links == 1 and record.linklen > max(10 if favor_precision else 100, elemlen * 0.9):
+        return True, False
+    parent = element._parent
+    last = parent is None or parent._children[-1] is element
+    limitlen = (60 if last else 30) if element.tag == "p" else (300 if last else 100)
     if elemlen < limitlen:
-        linklen, elemnum, shortelems, mylist = collect_link_info(links)
-        if elemnum == 0:
-            return True, mylist
-        if linklen > elemlen * 0.8 or (elemnum > 1 and shortelems / elemnum > 0.8):
-            return True, mylist
-    elif len(links) > 4:
-        linklen, elemnum, _, farmlist = collect_link_info(links)
-        if linklen > len(text) * LINK_FARM_RATIO and linklen < 100 * elemnum:
-            return True, farmlist
-    return False, mylist
+        if not record.nonempty:
+            return True, False
+        return record.linklen > elemlen * 0.8 or (
+            record.nonempty > 1 and record.short / record.nonempty > 0.8
+        ), True
+    if record.links > 4 and elemlen * LINK_FARM_RATIO < record.linklen < 100 * record.nonempty:
+        return True, True
+    return False, False
 
 
-def link_density_test_tables(element: Element) -> bool:
-    "Boilerplate predicate for link-rich tables (htmlprocessing.py:175-189)."
-    text, links, _ = _subtree_link_info(element)
-    if not links:
-        return False
-    elemlen = len(trim(text))
-    if elemlen < 200:
-        return False
-    linklen, _, _, _ = collect_link_info(links)
-    return linklen > 0.8 * elemlen if elemlen < 1000 else linklen > 0.5 * elemlen
+def link_dense_tables(tree: Element) -> list[Element]:
+    "Tables that are link-rich boilerplate (htmlprocessing.py:175-189), from one record table."
+    record = link_records(tree, "ref")
+    tables = []
+    for table in tree.iter("table"):
+        rec = record(table)
+        if rec is None or not rec.links or rec.length < 200:
+            continue
+        if rec.linklen > (0.8 if rec.length < 1000 else 0.5) * rec.length:
+            tables.append(table)
+    return tables
 
 
 def delete_by_link_density(
@@ -226,31 +262,14 @@ def delete_by_link_density(
     deletions = []
     len_threshold = 200 if favor_precision else 100
     depth_threshold = 1 if favor_precision else 3
-    # a node with no <ref> descendants can never be deleted
-    # (link_density_test returns (False, []) and backtracking requires a
-    # non-empty templist), so only ancestors of a <ref> are walked: one
-    # upward pass per ref, stopping at an ancestor an earlier ref added,
-    # inside the same walk that collects the candidates
-    linked, candidates = set(), []
-    for elem in subtree.iter(tagname, "ref"):
-        if elem.tag == tagname:
-            candidates.append(elem)
-        if elem.tag == "ref":
-            node = elem.getparent()
-            while node is not None and node not in linked:
-                linked.add(node)
-                node = node.getparent()
-
-    for elem in candidates:
-        if elem not in linked:
+    record = link_records(subtree, "ref")  # valid: deletions wait until the end
+    for elem in subtree.iter(tagname):
+        rec = record(elem)
+        if rec is None or not rec.links or rec.graphic:
             continue
-        text, links, has_graphic = _subtree_link_info(elem)
-        if not links or has_graphic:
-            continue
-        elemtext = trim(text)
-        result, templist = link_density_test(elem, elemtext, links, favor_precision)
+        result, has_link_text = link_density_test(elem, rec.length, rec, favor_precision)
         if result or (
-            backtracking and templist and 0 < len(elemtext) < len_threshold and len(elem) >= depth_threshold
+            backtracking and has_link_text and 0 < rec.length < len_threshold and len(elem) >= depth_threshold
         ):
             parent = elem.getparent()
             # paragraph holding a list item's content: keep (GH #788 in reference)
@@ -313,16 +332,23 @@ def process_node(elem: Element, options: Options) -> Optional[Element]:
 
 # --- tag conversion (htmlprocessing.py:286-447) ------------------------------
 
-def _convert_lists(elem: Element) -> None:
+def _convert_lists(elem: Element, covered: set) -> None:
+    "Retag a list and its li/dd/dt; the lists below go to ``covered`` and skip the walk."
     elem.set("rend", elem.tag)
     elem.tag = "list"
+    if elem in covered:
+        return
     i = 1
-    for subelem in elem.iterdescendants("dd", "dt", "li"):
-        if subelem.tag in ("dd", "dt"):
-            subelem.set("rend", f"{subelem.tag}-{i}")
-            if subelem.tag == "dd":
-                i += 1
-        subelem.tag = "item"
+    for subelem in elem.iterdescendants():
+        tag = subelem.tag
+        if tag in LIST_TAGS:
+            covered.add(subelem)
+        elif tag in ("dd", "dt", "li"):
+            if tag != "li":
+                subelem.set("rend", f"{tag}-{i}")
+                if tag == "dd":
+                    i += 1
+            subelem.tag = "item"
 
 
 def _is_code_text(text: Optional[str]) -> bool:
@@ -371,7 +397,6 @@ def _convert_lb(elem: Element) -> None:
 
 
 CONVERSIONS = {
-    "dl": _convert_lists, "ol": _convert_lists, "ul": _convert_lists,
     "h1": _convert_headings, "h2": _convert_headings, "h3": _convert_headings,
     "h4": _convert_headings, "h5": _convert_headings, "h6": _convert_headings,
     "br": _convert_lb, "hr": _convert_lb,
@@ -470,12 +495,16 @@ def convert_tags(tree: Element, options: Options, url: Optional[str] = None) -> 
                 elem.tag = "hi"
             else:
                 rend_matches.append(elem)
-        elif tag in CONVERSIONS:
+        elif tag in CONVERSIONS or tag in LIST_TAGS:
             conv_matches.append(elem)
     if rend_matches:
         _splice_all(tree, rend_matches)
+    covered: set = set()  # lists below a list converted earlier in this loop
     for elem in conv_matches:
-        CONVERSIONS[elem.tag](elem)
+        if elem.tag in LIST_TAGS:
+            _convert_lists(elem, covered)
+        else:
+            CONVERSIONS[elem.tag](elem)
 
     if options.images:
         for elem in tree.iterdescendants("img"):

@@ -16,7 +16,7 @@ from urllib.parse import urljoin
 from .cleaning import (
     delete_by_link_density,
     handle_textnode,
-    link_density_test_tables,
+    link_dense_tables,
     process_node,
     prune_unwanted_nodes,
 )
@@ -558,8 +558,7 @@ def prune_unwanted_sections(
         tree = delete_by_link_density(tree, "list", backtracking=False, favor_precision=favor_precision)
         tree = delete_by_link_density(tree, "p", backtracking=False, favor_precision=favor_precision)
     if "table" in potential_tags or favor_precision:
-        boilerplate_tables = [el for el in tree.iter("table") if link_density_test_tables(el)]
-        for elem in boilerplate_tables:
+        for elem in link_dense_tables(tree):
             delete_element(elem, keep_tail=False)
     if favor_precision:
         while len(tree) > 0 and tree[-1].tag == "head":

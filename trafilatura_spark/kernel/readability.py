@@ -15,6 +15,7 @@ import re
 from functools import lru_cache
 from typing import Optional
 
+from .cleaning import link_records
 from .dom import Element, delete_element
 from .textutils import trim
 
@@ -48,43 +49,6 @@ VIDEO_RE = re.compile(r"https?:\/\/(?:www\.)?(?:youtube|vimeo)\.com", re.I)
 
 def _text_length(elem: Element) -> int:
     return len(trim(elem.text_content()))
-
-
-def _text_and_links(elem: Element) -> tuple:
-    """One doc-order subtree walk returning (inner text, descendant <a>
-    elements) — replaces the text_content() + findall('.//a') pair the
-    link-density path otherwise runs as two traversals.  Text is
-    byte-identical to ``elem.text_content()``; the node list matches
-    ``findall`` (descendants only, nested links included)."""
-    parts: list = []
-    links: list = []
-    emit = parts.append
-    stack: list = []
-    children = elem._children
-    for i in range(len(children) - 1, -1, -1):
-        c = children[i]
-        if c.tail:
-            stack.append(c.tail)
-        stack.append(c)
-    if elem.text:
-        stack.append(elem.text)
-    pop = stack.pop
-    while stack:
-        item = pop()
-        if item.__class__ is str:
-            emit(item)
-            continue
-        if item.tag == "a":
-            links.append(item)
-        children = item._children
-        for i in range(len(children) - 1, -1, -1):
-            c = children[i]
-            if c.tail:
-                stack.append(c.tail)
-            stack.append(c)
-        if item.text:
-            stack.append(item.text)
-    return "".join(parts), links
 
 
 def _clean_stats(elem: Element) -> tuple:
@@ -222,12 +186,15 @@ class ReadabilityExtractor:
         return max(candidates.values(), key=lambda c: c.score)
 
     def _link_density(self, elem: Element) -> float:
-        text, links = _text_and_links(elem)
-        total = len(trim(text)) or 1
-        link_length = sum(_text_length(link) for link in links)
-        return link_length / total
+        rec = self._links(elem)
+        return 0.0 if rec is None else rec.linklen / (rec.length or 1)
 
     def _score_paragraphs(self) -> dict:
+        # one record table per pass, read up to the end of _sanitize's header
+        # loop: until then subtrees only move whole and headers go ancestors
+        # first.  self.doc is a whole tree (a copy, then the output div), so
+        # a candidate grandparent never lies above it
+        self._links = link_records(self.doc, "a")
         candidates: dict = {}
         for elem in list(self.doc.iter("p", "pre", "td")):
             parent_node = elem.getparent()
