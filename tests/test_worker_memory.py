@@ -3,8 +3,11 @@
 Spark bounds the batch (``spark.sql.execution.arrow.maxBytesPerBatch``);
 the batch loop (operators/extract.py map_batches) releases each row's
 result and clears the kernel's string memos (kernel/textutils.py
-clear_string_memos) after the row, so nothing a document allocated
-survives it in a reused Python worker.
+clear_string_memos) after the row, so no reference to a document
+survives it in a reused Python worker.  A document's DOM trees are
+reference cycles (``Element._parent`` <-> ``_children``): they live
+until the next cyclic collection, which is why the driver-side test
+calls ``gc.collect()`` before it measures.
 
 The driver-side test runs each batch function over distinct large pages
 under tracemalloc.  The Spark test runs two jobs in one local[1] session

@@ -1,14 +1,20 @@
-"""Zip re-read guard (operators/worker_setup.py).
+"""Python-worker setup (operators/worker_setup.py): the zip re-read guard
+and the import-time heap freeze.
 
 On CPython < 3.12 every ``importlib.invalidate_caches()`` — which
 PySpark's worker runs at the start of each task — re-reads the central
 directory of every zip archive on the worker path.  The guard skips the
-re-read of an archive that has not changed.  The unit test checks the
-guard in this process; the Spark test counts the re-reads a reused
-local[1] Python worker still makes after each extraction operator, or
-the streaming per-conversation state function, ran in it.
+re-read of an archive that has not changed.  PySpark's daemon runs a
+full ``gc.collect()`` after each task; importing operators/extract.py
+freezes the import-time heap so that collection stops walking it.
+
+The unit tests check the guard in this process and the freeze in a
+fresh one; the Spark test probes a reused local[1] Python worker after
+each extraction operator, or the streaming per-conversation state
+function, ran in it: the re-reads it still makes, its freeze count and
+the objects the collector still tracks.
 ``PYTHONPATH=. python tests/test_worker_setup.py SCRATCH_DIR`` prints
-those counts as JSON.
+those probes as JSON.
 """
 
 import importlib
@@ -25,9 +31,7 @@ from trafilatura_spark.operators.worker_setup import install_zip_reread_guard
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-pytestmark = pytest.mark.skipif(
-    sys.version_info >= (3, 12), reason="CPython 3.12+ invalidates zipimport caches lazily"
-)
+ZIP_REREADS = sys.version_info < (3, 12)  # 3.12+ invalidates zipimport caches lazily
 
 
 def _write_zip(path, modules: dict) -> None:
@@ -49,6 +53,7 @@ def _count_reads(monkeypatch) -> list:
     return reads
 
 
+@pytest.mark.skipif(not ZIP_REREADS, reason="CPython 3.12+ invalidates zipimport caches lazily")
 def test_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
     # start from the stock method; monkeypatch restores whatever was installed
     current = zipimport.zipimporter.invalidate_caches
@@ -84,7 +89,28 @@ def test_guard_rereads_only_changed_archives(tmp_path, monkeypatch):
         sys.path_importer_cache.pop(archive, None)
 
 
-# -- Spark: re-reads left in a reused Python worker ---------------------------
+FREEZE_PROBE = """
+import gc
+import trafilatura_spark.operators.extract
+from trafilatura_spark.operators.worker_setup import freeze_import_heap
+frozen = gc.get_freeze_count()
+freeze_import_heap()
+print(frozen, gc.get_freeze_count())
+"""
+
+
+def test_importing_the_extraction_module_freezes_the_heap_once():
+    env = dict(os.environ, PYTHONPATH=REPO)
+    proc = subprocess.run(
+        [sys.executable, "-c", FREEZE_PROBE], cwd=REPO, env=env, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    frozen, again = map(int, proc.stdout.split())
+    assert frozen > 0, "importing operators/extract.py must freeze the heap"
+    assert again == frozen, "a second freeze_import_heap() is a no-op"
+
+
+# -- Spark: what a reused Python worker still pays per task -------------------
 
 
 def _wrap_reads(iterator):
@@ -108,7 +134,9 @@ def _wrap_reads(iterator):
 
 def _report_reads(iterator):
     """Probe 2: the reads counted since probe 1, i.e. by this task's
-    setup, and whether this worker imported the streaming module."""
+    setup, whether this worker imported the streaming module, its freeze
+    count and the objects the collector still tracks."""
+    import gc
     import zipimport as zi
 
     import pandas as pd
@@ -119,6 +147,8 @@ def _report_reads(iterator):
         "pid": [os.getpid()],
         "reads": [getattr(zi._read_directory, "calls", -1)],
         "streaming": [STREAMING_MODULE in sys.modules],
+        "frozen": [gc.get_freeze_count()],
+        "tracked": [len(gc.get_objects())],
     })
 
 
@@ -153,7 +183,8 @@ def _drain_running_state(df, local_dir: str) -> None:
 def probe_rereads(local_dir: str) -> dict:
     """For each case, a fresh local[1] session runs one job, then the two
     probes in the same reused worker; returns case -> (reads, pids,
-    whether the worker imported the streaming module)."""
+    whether the worker imported the streaming module, freeze count,
+    tracked objects)."""
     from pyspark.sql import SparkSession
 
     from trafilatura_spark.operators.extract import extract_transcripts, extract_with_metadata
@@ -188,14 +219,20 @@ def probe_rereads(local_dir: str) -> dict:
             run(df)
             probe = spark.range(1).coalesce(1)
             first = probe.mapInPandas(_wrap_reads, "pid long, reads long").collect()[0]
-            second = probe.mapInPandas(_report_reads, "pid long, reads long, streaming boolean").collect()[0]
-            out[name] = {"reads": second.reads, "pids": [first.pid, second.pid], "streaming": second.streaming}
+            second = probe.mapInPandas(
+                _report_reads, "pid long, reads long, streaming boolean, frozen long, tracked long"
+            ).collect()[0]
+            out[name] = {
+                "reads": second.reads, "pids": [first.pid, second.pid], "streaming": second.streaming,
+                "frozen": second.frozen, "tracked": second.tracked,
+            }
         finally:
             spark.stop()
     return out
 
 
 def test_no_zip_rereads_after_extraction_operators(tmp_path):
+    "Also: the same workers froze their import-time heap, the identity one did not."
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYTHONPATH=REPO)
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), str(tmp_path)],
@@ -205,14 +242,19 @@ def test_no_zip_rereads_after_extraction_operators(tmp_path):
     counts = json.loads(proc.stdout.strip().splitlines()[-1])
     for name, rec in counts.items():
         assert rec["pids"][0] == rec["pids"][1], f"{name}: probes ran in two workers {rec}"
-    # the probe sees the stock re-reads when no package batch function ran
-    assert counts["identity"]["reads"] > 0, counts
+    # the probe sees the stock re-reads and an unfrozen heap when no
+    # package batch function ran
+    assert counts["identity"]["reads"] > 0 or not ZIP_REREADS, counts
+    assert counts["identity"]["frozen"] == 0, counts
     # one local[1] worker runs every task, so the probed worker is the one
     # that ran the state function
     assert counts["conversation_running_state"]["streaming"], counts
     for name in ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns",
                  "conversation_running_state"):
         assert counts[name]["reads"] == 0, f"{name}: {counts[name]}"
+        # the daemon's collection after each task walks only what is left tracked
+        assert counts[name]["frozen"] >= 50_000, f"{name}: {counts[name]}"
+        assert counts[name]["tracked"] <= 5_000, f"{name}: {counts[name]}"
 
 
 if __name__ == "__main__":

@@ -15,7 +15,9 @@ the same command resumes from the manifest (only missing buckets run).
 
 `--synthetic N` generates the deterministic N-conversation fixture
 corpus instead of reading --input (smoke runs on a bare cluster).
-Prints ONE summary JSON line on success.
+`--profile` turns on Spark's Python UDF profiler and prints its cProfile
+tables after the run, before the summary line.
+Prints ONE summary JSON line, the last line of stdout, on success.
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 
-def main() -> int:
+def parse_args(argv=None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", help="input path (parquet) or catalog table (iceberg)")
     ap.add_argument("--table-format", default="parquet", choices=["parquet", "iceberg"],
@@ -64,11 +66,30 @@ def main() -> int:
     ap.add_argument("--scrub-pii", action="store_true",
                     help="with --assemble: replace emails/IPv4s/phone numbers in the "
                          "conversation text with typed placeholders; adds n_pii")
-    args = ap.parse_args()
+    ap.add_argument("--profile", action="store_true",
+                    help="set spark.sql.pyspark.udf.profiler=perf and print the "
+                         "extraction batch functions' cProfile tables after the "
+                         "run, before the summary line.  The profile covers the "
+                         "UDF body only: it cannot see a Python worker's work "
+                         "between tasks, such as PySpark's full gc.collect() "
+                         "after every task")
+    args = ap.parse_args(argv)
     if not args.input and not args.synthetic:
         ap.error("one of --input / --synthetic is required")
+    return args
 
-    spark = SparkSession.builder.appName("trafilatura-spark-extract").getOrCreate()
+
+def session_conf(args: argparse.Namespace) -> dict:
+    "Spark settings the command line adds to the session."
+    return {"spark.sql.pyspark.udf.profiler": "perf"} if args.profile else {}
+
+
+def main() -> int:
+    args = parse_args()
+    builder = SparkSession.builder.appName("trafilatura-spark-extract")
+    for key, value in session_conf(args).items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from trafilatura_spark.kernel import Options
@@ -124,6 +145,8 @@ def main() -> int:
         )
         convs.write.mode("overwrite").parquet(conv_path)
         summary.update(conversations=spark.read.parquet(conv_path).count())
+    if args.profile:
+        spark.profile.show(type="perf")
     print(json.dumps(summary))
     spark.stop()
     return 0

@@ -25,10 +25,16 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - worker memory is one Arrow batch (spark.sql.execution.arrow.maxBytesPerBatch)
   with the output columns built from it, plus the one document being
   extracted: map_batches drops each row's result and clears the kernel's
-  string memos after the row.
+  string memos after the row.  A document's DOM trees are reference
+  cycles, so they are freed by the next cyclic collection, not at once.
 - importing the package installs worker_setup's zip re-read guard in the
   worker: on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
   otherwise re-reads spark-core's jar and pyspark.zip in every task.
+- the end of this module freezes the import-time heap (worker_setup's
+  freeze_import_heap): a worker imports it when it unpickles any
+  extraction batch function, before any batch exists, and from then on
+  PySpark's full collection after every task walks only what the task
+  left instead of the ~80k objects pandas, pyspark and the kernel hold.
 """
 
 from __future__ import annotations
@@ -50,6 +56,7 @@ from ..kernel import DEFAULT_OPTIONS, ExtractionResult, Options, bare_extract
 from ..kernel.extract import serialize_result
 from ..kernel.settings import ExtractionTimeout, arm_deadline, disarm_deadline
 from ..kernel.textutils import clear_string_memos
+from .worker_setup import freeze_import_heap
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
 # single-block fragments, so turns are wrapped identically everywhere
@@ -156,10 +163,11 @@ def map_batches(row_fn, columns: list):
     spec entry.
 
     Each column's value is taken from a row's result as soon as the row
-    finishes, and the kernel's string memos are cleared with it, so
-    neither a result (nor the DOM trees it holds) nor a memoized string
-    outlives its row: a worker holds its Arrow batch, the output columns
-    built from it, and one document."""
+    finishes, and the kernel's string memos are cleared with it, so no
+    reference to a result or a memoized string outlives its row: a
+    worker holds its Arrow batch, the output columns built from it, and
+    one document.  The result's DOM trees are reference cycles and wait
+    for the next cyclic collection."""
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for chunk in iterator:
@@ -352,3 +360,7 @@ def postprocess_conversations(
             text_col, pii_scrubbed(text)
         )
     return convs
+
+
+# last: everything above is loaded, and no batch data exists yet
+freeze_import_heap()
