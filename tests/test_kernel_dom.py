@@ -144,3 +144,66 @@ def test_text_content_matches_itertext_join():
     )
     for el in tree.iter():
         assert el.text_content() == "".join(el.itertext())
+
+
+# -- parents are weak references: trees are acyclic -----------------------------
+
+def test_a_moved_element_reports_its_new_parent():
+    body = parse_body("<div><p>a</p></div><section></section>")
+    div, section = body[0], body[1]
+    p = div[0]
+    section.append(p)
+    assert p.getparent() is section and len(div) == 0
+    div.insert(0, p)
+    assert p.getparent() is div and len(section) == 0
+    span = Element("span")
+    p.addnext(span)
+    assert span.getparent() is div and span.getprevious() is p and p.getnext() is span
+
+
+def test_a_removed_element_reports_no_parent():
+    body = parse_body("<div><p>a</p>tail<p>b</p></div>")
+    div = body[0]
+    first, second = div[0], div[1]
+    div.remove(first)
+    delete_element(second)
+    assert first.getparent() is None and second.getparent() is None
+    assert second.getprevious() is None and list(second.iterancestors()) == []
+
+
+def test_an_element_whose_tree_above_was_dropped_reports_no_parent():
+    import weakref
+
+    tree = parse_html("<html><body><div><p>a</p><p>b</p></div></body></html>")
+    p = tree.find(".//p")
+    assert [el.tag for el in p.iterancestors()] == ["div", "body", "html"]
+    root = weakref.ref(tree)
+    del tree
+    # unlike lxml, holding an element does not keep its ancestors alive
+    assert root() is None
+    assert p.getparent() is None and p.getnext() is None
+    assert list(p.iterancestors()) == [] and list(p.itersiblings()) == []
+    delete_element(p)  # a no-op on a root, as on a detached element
+    assert p.text == "a"
+
+
+def test_a_deep_tree_is_freed_by_reference_counting():
+    import gc
+    import weakref
+
+    gc.collect()
+    gc.disable()
+    try:
+        root = Element("div")
+        node = root
+        for _ in range(25_000):
+            child = Element("div")
+            node.append(child)
+            node = child
+        copy = root.copy_tree()
+        refs = [weakref.ref(el) for el in (root, node, copy, copy.find(".//div"))]
+        del root, node, child, copy
+        assert [ref() for ref in refs] == [None] * 4
+        assert gc.collect() == 0
+    finally:
+        gc.enable()

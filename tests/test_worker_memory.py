@@ -5,9 +5,9 @@ the batch loop (operators/extract.py map_batches) releases each row's
 result and clears the kernel's string memos (kernel/textutils.py
 clear_string_memos) after the row, so no reference to a document
 survives it in a reused Python worker.  A document's DOM trees are
-reference cycles (``Element._parent`` <-> ``_children``): they live
-until the next cyclic collection, which is why the driver-side test
-calls ``gc.collect()`` before it measures.
+acyclic (``Element._parent`` is a weak reference), so they are freed by
+reference counting when the row ends: the tracemalloc test measures
+without running the cyclic collector first.
 
 The driver-side test runs each batch function over distinct large pages
 under tracemalloc.  The Spark test runs two jobs in one local[1] session
@@ -75,7 +75,6 @@ def test_no_document_memory_outlives_the_batch_loop(factory):
         for out in batch_fn(iter([pages.iloc[:5], pages.iloc[5:]])):
             assert len(out) == 5
         del out
-        gc.collect()
         held = tracemalloc.get_traced_memory()[0] - before
     finally:
         tracemalloc.stop()

@@ -162,12 +162,12 @@ def link_records(root: Element, link_tag: str) -> Callable[[Element], Optional[L
 
     def mark() -> set:
         # one upward pass per link or graphic, stopping at a marked element
-        found, stop = set(), root._parent
+        found, stop = set(), root.getparent()
         for node in root.iter(link_tag, "graphic"):
-            node = node._parent
+            node = node.getparent()
             while node is not stop and node not in found:
                 found.add(node)
-                node = node._parent
+                node = node.getparent()
         return found
 
     def build(node: Element) -> LinkRecord:
@@ -228,7 +228,7 @@ def link_density_test(
     # one link: its trimmed length is the link-text sum
     if record.links == 1 and record.linklen > max(10 if favor_precision else 100, elemlen * 0.9):
         return True, False
-    parent = element._parent
+    parent = element.getparent()
     last = parent is None or parent._children[-1] is element
     limitlen = (60 if last else 30) if element.tag == "p" else (300 if last else 100)
     if elemlen < limitlen:

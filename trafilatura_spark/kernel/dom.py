@@ -5,6 +5,13 @@ node convention (element.text = text before first child, element.tail =
 text after the element's end tag).  The extraction cascade mutates trees
 heavily; this module provides the mutation primitives it needs.
 
+Trees are acyclic: a parent holds its children, a child holds only a
+weak reference to its parent.  A document's trees are therefore freed by
+reference counting when the last reference to their root goes, not by
+the cyclic garbage collector.  Unlike lxml, where any element keeps its
+whole document alive, an element whose tree above it was dropped
+reports no parent and behaves as a root.
+
 Built on stdlib ``html.parser``; no lxml/libxml2.  Parse-recovery rules
 (implied end tags, void elements) follow the WHATWG HTML spec closely
 enough for the well-formed-ish documents the pipeline targets.
@@ -17,6 +24,7 @@ mutation helpers in /root/reference/trafilatura/xml.py:98-156.
 from __future__ import annotations
 
 import re
+import weakref
 from html.parser import HTMLParser
 from typing import Callable, Iterator, Optional
 
@@ -46,11 +54,17 @@ _P_CLOSERS = _BLOCK_STARTERS
 
 _WS_ONLY = re.compile(r"^\s*$")
 
+_ref = weakref.ref
+
 
 class Element:
-    """Mutable tree node with lxml-style text/tail semantics."""
+    """Mutable tree node with lxml-style text/tail semantics.
 
-    __slots__ = ("tag", "attrib", "text", "tail", "_children", "_parent")
+    ``_parent`` is a ``weakref.ref`` to the parent, or None for a detached
+    node; read it through ``getparent()``.  Unlike lxml, holding a node
+    does not keep its ancestors alive (see the module docstring)."""
+
+    __slots__ = ("tag", "attrib", "text", "tail", "_children", "_parent", "__weakref__")
 
     def __init__(self, tag: str, attrib: Optional[dict] = None):
         self.tag = tag
@@ -58,7 +72,7 @@ class Element:
         self.text: Optional[str] = None
         self.tail: Optional[str] = None
         self._children: list["Element"] = []
-        self._parent: Optional["Element"] = None
+        self._parent: Optional[weakref.ref] = None
 
     # --- container protocol -------------------------------------------------
     def __len__(self) -> int:
@@ -82,9 +96,10 @@ class Element:
 
     # --- structure -----------------------------------------------------------
     def append(self, child: "Element") -> None:
-        if child._parent is not None:
-            child._parent._children.remove(child)
-        child._parent = self
+        parent = child.getparent()
+        if parent is not None:
+            parent._children.remove(child)
+        child._parent = _ref(self)
         self._children.append(child)
 
     def extend(self, children) -> None:
@@ -92,9 +107,10 @@ class Element:
             self.append(c)
 
     def insert(self, idx: int, child: "Element") -> None:
-        if child._parent is not None:
-            child._parent._children.remove(child)
-        child._parent = self
+        parent = child.getparent()
+        if parent is not None:
+            parent._children.remove(child)
+        child._parent = _ref(self)
         self._children.insert(idx, child)
 
     def remove(self, child: "Element") -> None:
@@ -105,24 +121,26 @@ class Element:
         return self._children.index(child)
 
     def addnext(self, sibling: "Element") -> None:
-        parent = self._parent
+        parent = self.getparent()
         if parent is None:
             return
         idx = parent._children.index(self)
         parent.insert(idx + 1, sibling)
 
     def getparent(self) -> Optional["Element"]:
-        return self._parent
+        "The parent, or None for a detached element or one whose tree above was dropped."
+        ref = self._parent
+        return None if ref is None else ref()
 
     def getprevious(self) -> Optional["Element"]:
-        p = self._parent
+        p = self.getparent()
         if p is None:
             return None
         i = p._children.index(self)
         return p._children[i - 1] if i > 0 else None
 
     def getnext(self) -> Optional["Element"]:
-        p = self._parent
+        p = self.getparent()
         if p is None:
             return None
         i = p._children.index(self)
@@ -172,15 +190,15 @@ class Element:
 
     def iterancestors(self, *tags: str) -> Iterator["Element"]:
         want = _tagfilter(tags)
-        node = self._parent
+        node = self.getparent()
         while node is not None:
             if want(node.tag):
                 yield node
-            node = node._parent
+            node = node.getparent()
 
     def itersiblings(self, *tags: str, preceding: bool = False) -> Iterator["Element"]:
         want = _tagfilter(tags)
-        p = self._parent
+        p = self.getparent()
         if p is None:
             return
         i = p._children.index(self)
@@ -287,6 +305,7 @@ class Element:
         while stack:
             src, dst = pop()
             dst_children = dst._children
+            dst_ref = _ref(dst)  # one ref, shared by all of dst's children
             for child in src._children:
                 c = cls.__new__(cls)
                 c.tag = child.tag
@@ -294,7 +313,7 @@ class Element:
                 c.attrib = a.copy() if a else {}
                 c.text, c.tail = child.text, child.tail
                 c._children = []
-                c._parent = dst
+                c._parent = dst_ref
                 dst_children.append(c)
                 if child._children:
                     stack.append((child, c))
@@ -332,7 +351,7 @@ def SubElement(parent: Element, tag: str, attrib: Optional[dict] = None, **extra
 def delete_element(element: Element, keep_tail: bool = True) -> None:
     """Remove element and its children; tail text joins the previous
     sibling (or parent text).  Mirrors reference xml.py:98-114."""
-    parent = element._parent
+    parent = element.getparent()
     if parent is None:
         return
     if keep_tail and element.tail:
@@ -354,9 +373,9 @@ def strip_tags(tree: Element, *tags: str) -> None:
     into the parent at the element's position (lxml etree.strip_tags).
 
     Single traversal; depth is computed per MATCH from its parent chain
-    (matches are few, so the walk itself carries no per-node depth
-    tuples) and matches splice deepest-first in stable document order,
-    so nested matches are handled without rescanning."""
+    (the walk itself carries no per-node depth tuples) and matches splice
+    deepest-first in stable document order, so nested matches are
+    handled without rescanning."""
     tagset = frozenset(t for group in tags for t in ([group] if isinstance(group, str) else group))
     matches: list = []
     stack = tree._children[::-1]
@@ -378,23 +397,30 @@ def splice_matches(tree: Element, matches: list) -> None:
     if not matches:
         return
     if len(matches) > 1:
+        # depth below tree, memoized per ancestor: each parent link is
+        # followed once however many matches share it
+        depth = {tree: -1}
         depths = []
         for el in matches:
-            d = 0
-            p = el._parent
-            while p is not None and p is not tree:
+            path = []
+            p = el.getparent()
+            while p is not None and p not in depth:
+                path.append(p)
+                p = p.getparent()
+            d = -1 if p is None else depth[p]
+            for node in reversed(path):
                 d += 1
-                p = p._parent
-            depths.append(-d)
+                depth[node] = d
+            depths.append(-(d + 1))
         matches = [el for _, el in sorted(zip(depths, matches), key=lambda pair: pair[0])]
     for el in matches:
-        if el._parent is not None:
+        if el.getparent() is not None:
             _splice(el)
 
 
 def _splice(el: Element) -> None:
     "Replace el by its own text + children + tail inside its parent."
-    parent = el._parent
+    parent = el.getparent()
     idx = parent._children.index(el)
     prev = parent._children[idx - 1] if idx > 0 else None
 
@@ -422,7 +448,7 @@ def strip_elements(tree: Element, *tags: str, with_tail: bool = True) -> None:
     "Remove matching elements with their subtrees (lxml etree.strip_elements)."
     tagset = frozenset(tags)
     for el in list(tree.iterdescendants()):
-        if el.tag in tagset and el._parent is not None:
+        if el.tag in tagset and el.getparent() is not None:
             delete_element(el, keep_tail=not with_tail)
 
 
@@ -457,7 +483,7 @@ class _TreeBuilder(HTMLParser):
             return
         last = self._last
         cur = self._stack[-1]
-        if last is not None and last._parent is cur:
+        if last is not None and last.getparent() is cur:
             last.tail = (last.tail or "") + data
         else:
             cur.text = (cur.text or "") + data

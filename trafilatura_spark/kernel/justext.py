@@ -139,7 +139,10 @@ def make_paragraphs(tree: Element) -> list:
             start_paragraph()
             path.pop()
 
-    walk(tree)
+    try:
+        walk(tree)
+    finally:
+        walk = None  # the closure refers to itself through its cell: break that cycle
     if current[0].text_nodes and current[0].text:
         paragraphs.append(current[0])
     return paragraphs

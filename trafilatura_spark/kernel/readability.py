@@ -241,7 +241,7 @@ class ReadabilityExtractor:
 
     def _remove_unlikely_candidates(self) -> None:
         for elem in list(self.doc.iterdescendants()):
-            if elem._parent is None:
+            if elem.getparent() is None:
                 continue
             a = elem.attrib
             if not a:

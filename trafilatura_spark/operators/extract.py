@@ -25,8 +25,9 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - worker memory is one Arrow batch (spark.sql.execution.arrow.maxBytesPerBatch)
   with the output columns built from it, plus the one document being
   extracted: map_batches drops each row's result and clears the kernel's
-  string memos after the row.  A document's DOM trees are reference
-  cycles, so they are freed by the next cyclic collection, not at once.
+  string memos after the row.  A document's DOM trees are acyclic (a
+  node's parent is a weak reference), so reference counting frees them
+  there, with the rest of the row's objects.
 - importing the package installs worker_setup's zip re-read guard in the
   worker: on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
   otherwise re-reads spark-core's jar and pyspark.zip in every task.
@@ -166,8 +167,9 @@ def map_batches(row_fn, columns: list):
     finishes, and the kernel's string memos are cleared with it, so no
     reference to a result or a memoized string outlives its row: a
     worker holds its Arrow batch, the output columns built from it, and
-    one document.  The result's DOM trees are reference cycles and wait
-    for the next cyclic collection."""
+    one document.  The kernel creates no reference cycles (its DOM trees
+    hold parents weakly), so dropping the result frees the row's trees
+    at once, without the cyclic collector."""
 
     def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for chunk in iterator:

@@ -31,6 +31,20 @@ from pyspark.sql import DataFrame, SparkSession
 
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "text"]
 
+# The north rule's transcript columns and their types, declared so that
+# building a parquet read infers no schema (inference is a Spark job).
+# turn_idx is declared BIGINT, which reads INT32 and INT64 files alike (a
+# declared INT fails on an INT64 file at task time), and is narrowed to
+# INT by the read's projection.
+TRANSCRIPT_TYPES = {
+    "conv_id": "STRING",
+    "turn_idx": "BIGINT",
+    "role": "STRING",
+    "text": "STRING",
+    "tool": "STRING",
+    "ts": "TIMESTAMP",
+}
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     "True when the Iceberg Spark runtime is on the JVM classpath."
@@ -59,7 +73,10 @@ def read_transcripts(
       attempt saw (consistent lineage across retries).
 
     Column pruning happens HERE so every downstream operator inherits a
-    minimal scan (ReadSchema only carries what the cascade needs)."""
+    minimal scan (ReadSchema only carries what the cascade needs).  A
+    parquet read declares the ``TRANSCRIPT_TYPES`` of its columns, so
+    building it runs no Spark job; a column outside them raises
+    ValueError."""
     cols = columns or TRANSCRIPT_COLUMNS
     if table_format == "iceberg":
         if not iceberg_available(spark):
@@ -74,7 +91,13 @@ def read_transcripts(
             reader = reader.option("snapshot-id", snapshot)
         return reader.load(source).select(*cols)
     if table_format == "parquet":
-        return spark.read.parquet(source).select(*cols)
+        unknown = [c for c in cols if c not in TRANSCRIPT_TYPES]
+        if unknown:
+            raise ValueError(f"columns {unknown} are not transcript columns {list(TRANSCRIPT_TYPES)}")
+        ddl = ", ".join(f"{c} {TRANSCRIPT_TYPES[c]}" for c in cols)
+        return spark.read.schema(ddl).parquet(source).selectExpr(
+            *("CAST(turn_idx AS INT) AS turn_idx" if c == "turn_idx" else c for c in cols)
+        )
     raise ValueError(f"unknown table_format {table_format!r}")
 
 
