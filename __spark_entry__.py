@@ -23,7 +23,7 @@ from trafilatura_spark.queries import ORACLE_SQL, SPARK_QUERIES  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: per-turn main-content extraction over the synthetic
     transcript corpus — the input's own balanced partitioning (a caller
-    with skewed input applies salted_repartition first) -> mapInPandas
+    with skewed input applies salted_repartition first) -> mapInArrow
     cascade -> stable (conv_id, turn_idx) ordering."""
     from trafilatura_spark.fixtures import transcripts_df
     from trafilatura_spark.operators.extract import extract_transcripts

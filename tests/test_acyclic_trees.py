@@ -12,7 +12,7 @@ and assert that a collection afterwards finds nothing to free.
 
 import gc
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from trafilatura_spark.fixtures import _genre_large_doc, generate_rows
@@ -48,14 +48,17 @@ def _page(k: int) -> str:
     )
 
 
-def _frame() -> pd.DataFrame:
+def _batch() -> pa.RecordBatch:
     rows = [(c, t, text) for c, t, _role, text, _tool, _ts in generate_rows(12)]
     rows += [(f"page{k}", 0, _page(k)) for k in range(4)]
     rows += [(f"large{k}", 0, _genre_large_doc(k)) for k in range(2)]
-    return pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
+    conv_ids, turn_idxs, texts = zip(*rows)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(conv_ids), pa.array(turn_idxs, pa.int32()), pa.array(texts)], names=["conv_id", "turn_idx", "text"]
+    )
 
 
-FRAME = _frame()
+BATCH = _batch()
 
 
 @pytest.mark.parametrize("name", list(OPTIONS))
@@ -64,16 +67,16 @@ def test_batch_functions_leave_no_cyclic_garbage(name):
     # a first pass imports lazily imported kernel modules and fills the
     # per-worker memos; neither is per-document
     for batch_fn in batch_fns:
-        for _ in batch_fn(iter([FRAME])):
+        for _ in batch_fn(iter([BATCH])):
             pass
     gc.collect()
     gc.disable()
     try:
         for batch_fn in batch_fns:
-            for out in batch_fn(iter([FRAME.iloc[:40], FRAME.iloc[40:]])):
+            for out in batch_fn(iter([BATCH.slice(0, 40), BATCH.slice(40)])):
                 assert len(out)
         del out
         garbage = gc.collect()
     finally:
         gc.enable()
-    assert garbage == 0, f"{garbage} objects of {len(FRAME)} documents were reference cycles"
+    assert garbage == 0, f"{garbage} objects of {len(BATCH)} documents were reference cycles"

@@ -1,16 +1,20 @@
 """The one extraction batch loop (operators/extract.py map_batches) and
 the module names the benchmark harness (perfbench/) swaps and reads.
 
-Driver-side: the batch functions are called on pandas frames directly;
-the operator check builds a plan on the session fixture without running
-it.
+Driver-side: the batch functions are called on Arrow record batches
+directly; the operator check builds a plan on the session fixture
+without running it.
 """
 
+import os
+import subprocess
+import sys
 import weakref
 from operator import attrgetter
 
-import pandas as pd
-from pyspark.sql.types import StringType
+import pyarrow as pa
+import pytest
+from pyspark.sql.types import ArrayType, IntegerType, LongType, StringType
 
 from trafilatura_spark.fixtures import generate_rows
 from trafilatura_spark.operators import extract, metadata_op
@@ -22,9 +26,19 @@ class _Result:
         self.text = text
 
 
-def _turns(n_convs: int = 3) -> pd.DataFrame:
-    rows = [(c, t, text) for c, t, _role, text, _tool, _ts in generate_rows(n_convs)]
-    return pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCHEMA = "conv_id string, turn_idx int, text string"
+
+
+def _rows(n_convs: int) -> list:
+    return [(c, t, text) for c, t, _role, text, _tool, _ts in generate_rows(n_convs)]
+
+
+def _turns(n_convs: int = 3) -> pa.RecordBatch:
+    conv_ids, turn_idxs, texts = zip(*_rows(n_convs))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(conv_ids), pa.array(turn_idxs, pa.int32()), pa.array(texts)], names=["conv_id", "turn_idx", "text"]
+    )
 
 
 def test_each_row_result_is_released_before_the_next_row():
@@ -38,12 +52,67 @@ def test_each_row_result_is_released_before_the_next_row():
         alive.append(sum(ref() is not None for ref in refs))
         return result
 
-    pdf = _turns()
+    batch = _turns()
     columns = [("echo", StringType(), True, attrgetter("text"))]
-    out = list(map_batches(row_fn, columns)(iter([pdf, pdf])))
-    assert len(alive) == 2 * len(pdf)
+    out = list(map_batches(row_fn, columns)(iter([batch, batch])))
+    assert len(alive) == 2 * len(batch)
     assert max(alive) == 1, alive
-    assert out[0]["echo"].tolist() == pdf["text"].tolist()
+    assert out[0].column("echo").to_pylist() == batch.column("text").to_pylist()
+
+
+def test_passthrough_columns_are_the_input_arrays():
+    "conv_id and turn_idx go back to Spark zero-copy: the same Arrow buffers."
+    batch = _turns()
+    (out,) = map_batches(lambda text: _Result(text), [("echo", StringType(), True, attrgetter("text"))])(iter([batch]))
+    assert out.schema.names == ["conv_id", "turn_idx", "echo"]
+    for name in ("conv_id", "turn_idx"):
+        assert [b.address for b in out.column(name).buffers() if b] == [
+            b.address for b in batch.column(name).buffers() if b
+        ], name
+
+
+def test_output_column_types_without_a_builder_raise():
+    "Only string, non-null int32 and list<string> columns have builders."
+    with pytest.raises(TypeError, match="bigint"):
+        map_batches(_Result, [("n", LongType(), False, attrgetter("text"))])
+    with pytest.raises(TypeError, match="nullable output columns of type int"):
+        map_batches(_Result, [("n", IntegerType(), True, attrgetter("text"))])
+    with pytest.raises(TypeError, match="array<bigint>"):
+        map_batches(_Result, [("n", ArrayType(LongType()), True, attrgetter("text"))])
+
+
+NO_PANDAS_PROBE = """
+import sys
+from array import array
+
+import pyarrow as pa
+from pyarrow.lib import StringBuilder
+
+from trafilatura_spark.operators.extract import make_extract_batch_fn, make_extract_with_metadata_batch_fn
+from trafilatura_spark.operators.metadata_op import make_metadata_batch_fn
+
+texts = StringBuilder()
+for text in ["<p>" + "A sentence of words to keep. " * 20 + "</p>", None, "<html><head><title>T</title></head></html>"]:
+    texts.append(text)
+idx = pa.Array.from_buffers(pa.int32(), 3, [None, pa.py_buffer(array("i", [0, 1, 2]))])
+batch = pa.RecordBatch.from_arrays([idx, texts.finish()], names=["turn_idx", "text"])
+for factory in (make_extract_batch_fn, make_extract_with_metadata_batch_fn, make_metadata_batch_fn):
+    (out,) = factory()(iter([batch]))
+    assert out.num_rows == 3
+print("pandas" in sys.modules, "pyarrow.compute" in sys.modules)
+"""
+
+
+def test_batch_functions_run_without_pandas():
+    """Importing the package and running all three batch functions loads
+    no pandas, nor pyarrow.compute (~4k objects a worker would import
+    after its heap froze)."""
+    proc = subprocess.run(
+        [sys.executable, "-c", NO_PANDAS_PROBE], cwd=REPO, env=dict(os.environ, PYTHONPATH=REPO),
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split() == ["False", "False"]
 
 
 def test_benchmark_names_exist():
@@ -66,16 +135,17 @@ def test_swapped_bare_extract_is_the_one_the_batch_functions_call(monkeypatch):
         return real(*args, **kwargs)
 
     monkeypatch.setattr(extract, "bare_extract", counted)
-    pdf = _turns()
+    batch = _turns()
     for factory in (extract.make_extract_batch_fn, extract.make_extract_with_metadata_batch_fn):
         calls.clear()
-        (out,) = factory()(iter([pdf]))
-        gated = out["tier"].isin(["null_input", "discarded_size"])
-        assert len(calls) == (~gated).sum() > 0
+        (out,) = factory()(iter([batch]))
+        tiers = out.column("tier").to_pylist()
+        gated = sum(tier in ("null_input", "discarded_size") for tier in tiers)
+        assert len(calls) == len(tiers) - gated > 0
 
 
 def test_operators_call_the_factory_on_the_module(spark, monkeypatch):
-    df = spark.createDataFrame(_turns(1))
+    df = spark.createDataFrame(_rows(1), SCHEMA)
     for operator, name in (
         (extract.extract_transcripts, "make_extract_batch_fn"),
         (extract.extract_with_metadata, "make_extract_with_metadata_batch_fn"),

@@ -77,7 +77,7 @@ def test_plan_shape(spark):
     df = transcripts_df(spark, 5, num_slices=2)
     out = extract_transcripts(salted_repartition(df, 4))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan or "MapInArrow" in plan
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
 
 # a raise that lands in a GC finalizer (py4j's JavaObject weakref
@@ -211,3 +211,64 @@ def test_assemble_conversations_null_role_keeps_turn(spark):
     out = assemble_conversations(df, role_col="role").collect()[0]
     assert out.conversation_text == "user: hi\n\norphan line"
     assert out.n_turns == 2 and out.n_kept == 2
+
+
+@pytest.mark.parametrize("large_var_types", [False, True], ids=["string", "large_string"])
+def test_arrow_output_columns(spark, large_var_types):
+    """The mapInArrow batch loop's column builders, through Spark:
+    list<string> rows that are None, [] or values; a null text; int32
+    chars_kept; a timestamp passthrough with nulls that comes back equal
+    to the input; under both Arrow string layouts Spark can send."""
+    import datetime
+
+    import pyarrow as pa
+
+    from trafilatura_spark.operators.extract import extract_with_metadata, make_extract_batch_fn
+    from trafilatura_spark.operators.metadata_op import _metadata_of, extract_metadata_columns
+
+    words = "<p>" + "Enough words in this paragraph for the extractor to keep it. " * 6 + "</p>"
+    tagged = (
+        '<html><head><title>Tagged page</title><meta property="article:section" content="Science">'
+        '<meta name="keywords" content="alpha, beta"></head><body><article>' + words + "</article></body></html>"
+    )
+    plain = "<html><head><title>Plain page</title></head><body><article>" + words + "</article></body></html>"
+    ts = datetime.datetime(2024, 5, 17, 8, 30, 15, 123456)
+    rows = [("tagged", 0, tagged, ts), ("plain", 1, plain, None), ("null", 2, None, ts), ("short", 3, "<p>hi</p>", None)]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string, ts timestamp").coalesce(1)
+    passthrough = ["conv_id", "turn_idx", "ts"]
+
+    meta = {r[0]: _metadata_of(r[2]) for r in rows}
+    assert meta["tagged"].categories and meta["tagged"].tags, "the tagged page must carry list values"
+    assert meta["plain"].categories == [] and meta["null"] is None
+
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    spark.conf.set(conf, str(large_var_types).lower())
+    try:
+        content = {r.conv_id: r for r in extract_with_metadata(df, passthrough_cols=passthrough).collect()}
+        columns = {r.conv_id: r for r in extract_metadata_columns(df, passthrough_cols=passthrough).collect()}
+    finally:
+        spark.conf.unset(conf)
+
+    expected_ts = {r[0]: r[3] for r in rows}
+    for out in (content, columns):
+        assert sorted(out) == sorted(expected_ts)
+        assert {key: r.ts for key, r in out.items()} == expected_ts
+        assert {key: r.turn_idx for key, r in out.items()} == {r[0]: r[1] for r in rows}
+    for key, m in meta.items():
+        assert columns[key].categories == (m.categories if m else None), key
+        assert columns[key].tags == (m.tags if m else None), key
+        assert columns[key].title == (m.title if m else None), key
+    assert columns["tagged"].categories == ["Science"]
+    options = DEFAULT_OPTIONS.copy(with_metadata=True)
+    for key, _, text, _ in rows:
+        local = extract_one_result(text, options)
+        assert (content[key].extracted_text, content[key].tier, content[key].chars_kept) == (
+            local.text, local.tier, local.chars_kept), key
+    assert content["null"].extracted_text is None and content["null"].tier == "null_input"
+    assert content["tagged"].tags_joined == ",".join(meta["tagged"].tags)
+    assert content["plain"].chars_kept == len(content["plain"].extracted_text) > 0
+
+    # chars_kept crosses as int32, the Arrow type of the IntegerType map_turns declares
+    batch = pa.RecordBatch.from_arrays([pa.array([r[2] for r in rows])], names=["text"])
+    (out,) = make_extract_batch_fn()(iter([batch]))
+    assert out.schema.field("chars_kept").type == pa.int32()

@@ -23,7 +23,7 @@ import subprocess
 import sys
 import tracemalloc
 
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from trafilatura_spark.kernel.textutils import line_processing, trim
@@ -46,9 +46,10 @@ def _page(doc: int) -> str:
     )
 
 
-def _frame(docs) -> pd.DataFrame:
-    return pd.DataFrame(
-        {"conv_id": [f"c{d}" for d in docs], "turn_idx": [0] * len(docs), "text": [_page(d) for d in docs]}
+def _batch(docs) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array([f"c{d}" for d in docs]), pa.array([0] * len(docs), pa.int32()), pa.array([_page(d) for d in docs])],
+        names=["conv_id", "turn_idx", "text"],
     )
 
 
@@ -59,8 +60,9 @@ def _frame(docs) -> pd.DataFrame:
 )
 def test_no_document_memory_outlives_the_batch_loop(factory):
     batch_fn = factory()
-    warm, pages = _frame([0]), _frame(range(1, 11))
-    assert all(180_000 < len(t) < 240_000 for t in pages["text"])
+    warm, pages = _batch([0]), _batch(range(1, 11))
+    lengths = [len(t) for t in pages.column("text").to_pylist()]
+    assert all(180_000 < n < 240_000 for n in lengths)
     # start from empty string memos: earlier tests may hold these pages
     trim.cache_clear()
     line_processing.cache_clear()
@@ -72,13 +74,13 @@ def test_no_document_memory_outlives_the_batch_loop(factory):
     tracemalloc.start()
     try:
         before = tracemalloc.get_traced_memory()[0]
-        for out in batch_fn(iter([pages.iloc[:5], pages.iloc[5:]])):
+        for out in batch_fn(iter([pages.slice(0, 5), pages.slice(5)])):
             assert len(out) == 5
         del out
         held = tracemalloc.get_traced_memory()[0] - before
     finally:
         tracemalloc.stop()
-    assert held < 1 * MB, f"{held / MB:.1f} MB still held after 10 pages ({pages['text'].str.len().sum()} chars)"
+    assert held < 1 * MB, f"{held / MB:.1f} MB still held after 10 pages ({sum(lengths)} chars)"
 
 
 # -- Spark: peak RSS of a reused Python worker ---------------------------------
@@ -94,14 +96,22 @@ FIRST_PAGES = 3
 
 
 def _peak_rss(iterator):
-    "This worker's pid and peak resident set size in MB."
-    import pandas as pd
+    """mapInArrow probe: this worker's pid and peak resident set size in
+    kB.  It loads no pandas (which would add ~38 MB between the jobs), and
+    builds its row from buffers: ``pa.array`` imports pandas."""
+    from array import array
+
+    import pyarrow as pa
 
     for _ in iterator:
         pass
     with open("/proc/self/status") as f:
         hwm = next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
-    yield pd.DataFrame({"pid": [os.getpid()], "hwm_mb": [hwm / 1024]})
+    values = {"pid": os.getpid(), "hwm_kb": hwm}
+    yield pa.RecordBatch.from_arrays(
+        [pa.Array.from_buffers(pa.int64(), 1, [None, pa.py_buffer(array("q", [v]))]) for v in values.values()],
+        names=list(values),
+    )
 
 
 def probe_peaks(local_dir: str) -> dict:
@@ -131,8 +141,8 @@ def probe_peaks(local_dir: str) -> dict:
             )
             start += n
             rows = extract_with_metadata(pages).selectExpr("min(tier)", "sum(length(extracted_text))").collect()
-            peak = spark.range(1, numPartitions=1).mapInPandas(_peak_rss, "pid long, hwm_mb double").collect()[0]
-            out[name] = {"pid": peak.pid, "hwm_mb": peak.hwm_mb, "tier": rows[0][0], "chars": rows[0][1]}
+            peak = spark.range(1, numPartitions=1).mapInArrow(_peak_rss, "pid long, hwm_kb long").collect()[0]
+            out[name] = {"pid": peak.pid, "hwm_mb": peak.hwm_kb / 1024, "tier": rows[0][0], "chars": rows[0][1]}
         out["page_chars"] = spark.range(1).selectExpr(f"length({PAGES_SQL})").collect()[0][0]
     finally:
         spark.stop()

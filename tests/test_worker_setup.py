@@ -9,10 +9,11 @@ full ``gc.collect()`` after each task; importing operators/extract.py
 freezes the import-time heap so that collection stops walking it.
 
 The unit tests check the guard in this process and the freeze in a
-fresh one; the Spark test probes a reused local[1] Python worker after
+fresh one; the Spark tests probe a reused local[1] Python worker after
 each extraction operator, or the streaming per-conversation state
-function, ran in it: the re-reads it still makes, its freeze count and
-the objects the collector still tracks.
+function, ran in it: the re-reads it still makes, its freeze count, the
+objects the collector still tracks and whether it loaded pandas.  The
+probes are mapInArrow functions that load no pandas themselves.
 ``PYTHONPATH=. python tests/test_worker_setup.py SCRATCH_DIR`` prints
 those probes as JSON.
 """
@@ -113,11 +114,22 @@ def test_importing_the_extraction_module_freezes_the_heap_once():
 # -- Spark: what a reused Python worker still pays per task -------------------
 
 
-def _wrap_reads(iterator):
-    "Probe 1: count zipimport directory reads in this worker from now on."
-    import zipimport as zi
+def _longs(**values) -> "pa.RecordBatch":
+    """One row of int64 columns, built from buffers: the probes load no
+    pandas, and ``pa.array`` would import it."""
+    from array import array
 
-    import pandas as pd
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.Array.from_buffers(pa.int64(), 1, [None, pa.py_buffer(array("q", [int(v)]))]) for v in values.values()],
+        names=list(values),
+    )
+
+
+def _wrap_reads(iterator):
+    "Probe 1 (mapInArrow): count zipimport directory reads in this worker from now on."
+    import zipimport as zi
 
     real = zi._read_directory
 
@@ -129,27 +141,26 @@ def _wrap_reads(iterator):
     zi._read_directory = counted
     for _ in iterator:
         pass
-    yield pd.DataFrame({"pid": [os.getpid()], "reads": [-1]})
+    yield _longs(pid=os.getpid(), reads=-1)
 
 
 def _report_reads(iterator):
-    """Probe 2: the reads counted since probe 1, i.e. by this task's
-    setup, whether this worker imported the streaming module, its freeze
-    count and the objects the collector still tracks."""
+    """Probe 2 (mapInArrow): the reads counted since probe 1, i.e. by this
+    task's setup, whether this worker imported the streaming module and
+    pandas, its freeze count and the objects the collector still tracks."""
     import gc
     import zipimport as zi
 
-    import pandas as pd
-
     for _ in iterator:
         pass
-    yield pd.DataFrame({
-        "pid": [os.getpid()],
-        "reads": [getattr(zi._read_directory, "calls", -1)],
-        "streaming": [STREAMING_MODULE in sys.modules],
-        "frozen": [gc.get_freeze_count()],
-        "tracked": [len(gc.get_objects())],
-    })
+    yield _longs(
+        pid=os.getpid(),
+        reads=getattr(zi._read_directory, "calls", -1),
+        streaming=STREAMING_MODULE in sys.modules,
+        pandas="pandas" in sys.modules,
+        frozen=gc.get_freeze_count(),
+        tracked=len(gc.get_objects()),
+    )
 
 
 def _identity(iterator):
@@ -183,8 +194,8 @@ def _drain_running_state(df, local_dir: str) -> None:
 def probe_rereads(local_dir: str) -> dict:
     """For each case, a fresh local[1] session runs one job, then the two
     probes in the same reused worker; returns case -> (reads, pids,
-    whether the worker imported the streaming module, freeze count,
-    tracked objects)."""
+    whether the worker imported the streaming module and pandas, freeze
+    count, tracked objects)."""
     from pyspark.sql import SparkSession
 
     from trafilatura_spark.operators.extract import extract_transcripts, extract_with_metadata
@@ -218,30 +229,40 @@ def probe_rereads(local_dir: str) -> dict:
             df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string").coalesce(1)
             run(df)
             probe = spark.range(1).coalesce(1)
-            first = probe.mapInPandas(_wrap_reads, "pid long, reads long").collect()[0]
-            second = probe.mapInPandas(
-                _report_reads, "pid long, reads long, streaming boolean, frozen long, tracked long"
+            first = probe.mapInArrow(_wrap_reads, "pid long, reads long").collect()[0]
+            second = probe.mapInArrow(
+                _report_reads, "pid long, reads long, streaming long, pandas long, frozen long, tracked long"
             ).collect()[0]
             out[name] = {
-                "reads": second.reads, "pids": [first.pid, second.pid], "streaming": second.streaming,
-                "frozen": second.frozen, "tracked": second.tracked,
+                "reads": second.reads, "pids": [first.pid, second.pid], "streaming": bool(second.streaming),
+                "pandas": bool(second.pandas), "frozen": second.frozen, "tracked": second.tracked,
             }
         finally:
             spark.stop()
     return out
 
 
-def test_no_zip_rereads_after_extraction_operators(tmp_path):
-    "Also: the same workers froze their import-time heap, the identity one did not."
+@pytest.fixture(scope="module")
+def worker_probes(tmp_path_factory) -> dict:
+    "probe_rereads, run once in a subprocess with its own Spark sessions."
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYTHONPATH=REPO)
     proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), str(tmp_path)],
+        [sys.executable, os.path.abspath(__file__), str(tmp_path_factory.mktemp("worker_probes"))],
         cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     counts = json.loads(proc.stdout.strip().splitlines()[-1])
     for name, rec in counts.items():
         assert rec["pids"][0] == rec["pids"][1], f"{name}: probes ran in two workers {rec}"
+    return counts
+
+
+EXTRACTION_OPERATORS = ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns")
+
+
+def test_no_zip_rereads_after_extraction_operators(worker_probes):
+    "Also: the same workers froze their import-time heap, the identity one did not."
+    counts = worker_probes
     # the probe sees the stock re-reads and an unfrozen heap when no
     # package batch function ran
     assert counts["identity"]["reads"] > 0 or not ZIP_REREADS, counts
@@ -249,12 +270,22 @@ def test_no_zip_rereads_after_extraction_operators(tmp_path):
     # one local[1] worker runs every task, so the probed worker is the one
     # that ran the state function
     assert counts["conversation_running_state"]["streaming"], counts
-    for name in ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns",
-                 "conversation_running_state"):
+    for name in EXTRACTION_OPERATORS + ("conversation_running_state",):
         assert counts[name]["reads"] == 0, f"{name}: {counts[name]}"
-        # the daemon's collection after each task walks only what is left tracked
-        assert counts[name]["frozen"] >= 50_000, f"{name}: {counts[name]}"
+        # the daemon's collection after each task walks only what is left
+        # tracked; the frozen heap is pyarrow, pyspark and the kernel
+        assert counts[name]["frozen"] >= 30_000, f"{name}: {counts[name]}"
         assert counts[name]["tracked"] <= 5_000, f"{name}: {counts[name]}"
+
+
+def test_extraction_workers_never_load_pandas(worker_probes):
+    """The extraction operators run on Arrow alone: pandas (~38 MB of a
+    worker's RSS) is absent from the worker after each of them.  The
+    identity mapInPandas case shows that the probe sees it when loaded."""
+    counts = worker_probes
+    assert counts["identity"]["pandas"], counts
+    for name in EXTRACTION_OPERATORS:
+        assert not counts[name]["pandas"], f"{name}: {counts[name]}"
 
 
 if __name__ == "__main__":

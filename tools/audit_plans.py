@@ -9,7 +9,8 @@ For each audited query this checks, against the executed/analyzed plan:
 - per-document tables do NOT broadcast where that would OOM at scale
   (the Jaccard counts join must be a shuffle join under a non-AQE
   plan check),
-- Python stays off the hot path except the single MapInPandas stage.
+- Python stays off the hot path except the single Arrow batch stage
+  (MapInArrow for extraction, MapInPandas for n-gram lang-id).
 
 Usage: python tools/audit_plans.py [sf_dir]
 Prints one PASS/FAIL line per assertion and exits nonzero on failure.
@@ -23,6 +24,8 @@ import sys
 sys.path.insert(0, ".")
 
 CHECKS = []
+# physical nodes that run Python over Arrow batches
+PYTHON_MAP_NODES = ("MapInPandas", "MapInArrow")
 
 
 def check(name: str, ok: bool, detail: str = "") -> None:
@@ -32,6 +35,11 @@ def check(name: str, ok: bool, detail: str = "") -> None:
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def no_python_stage(p: str) -> bool:
+    "No Python UDF or Arrow batch node anywhere in the plan."
+    return "Python" not in p and not any(node in p for node in PYTHON_MAP_NODES)
 
 
 def only_rebalance_exchanges(p: str) -> bool:
@@ -110,7 +118,7 @@ def main() -> int:
     # q5: all three small dims broadcast, no python
     p = plan_of(Q.q5_supplier_volume(spark, sf_dir))
     check("q5 broadcasts small dims", p.count("BroadcastExchange") + p.count("BroadcastHashJoin") >= 3)
-    check("q5 no Python stage", "Python" not in p and "MapInPandas" not in p)
+    check("q5 no Python stage", no_python_stage(p))
 
     # extraction: single Arrow stage, scan-side column pruning
     from trafilatura_spark.fixtures import transcripts_df
@@ -120,11 +128,11 @@ def main() -> int:
         "CAST(doc_id AS STRING) AS conv_id", "0 AS turn_idx", "text"
     )
     p = plan_of(extract_transcripts(docs))
-    check("extract single MapInPandas stage", p.count("MapInPandas") == 1)
+    check("extract single MapInArrow stage", p.count("MapInArrow") == 1 and "MapInPandas" not in p)
     rs = re.search(r"ReadSchema: struct<([^>]*)>", p)
     cols = rs.group(1) if rs else ""
     check("extract scan pruned to needed cols", bool(rs) and "lang" not in cols and "source" not in cols, cols[:200])
-    check("extract no pre-UDF shuffle", "Exchange" not in p.split("MapInPandas")[-1])
+    check("extract no pre-UDF shuffle", "Exchange" not in p.split("MapInArrow")[-1])
     # the registry's extraction entries: only their input spread, never a
     # keyed shuffle in front of the kernel
     for name, fn in Q.SPARK_QUERIES.items():
@@ -197,7 +205,7 @@ def main() -> int:
     g = Q.text_quality_gopher(spark, sf_dir)
     g.collect()
     p = plan_of(g)
-    check("gopher no Python stage", "Python" not in p and "MapInPandas" not in p)
+    check("gopher no Python stage", no_python_stage(p))
     check("gopher no keyed shuffle (rebalance-only)", only_rebalance_exchanges(p))
     rs = re.search(r"FileScan parquet \[([^\]]*)\]", p)
     cols = rs.group(1) if rs else ""
@@ -216,7 +224,7 @@ def main() -> int:
     r.collect()
     p = plan_of(r)
     check("repetition no keyed shuffle (rebalance-only)", only_rebalance_exchanges(p))
-    check("repetition no Python / no cartesian", "Python" not in p and "CartesianProduct" not in p)
+    check("repetition no Python / no cartesian", no_python_stage(p) and "CartesianProduct" not in p)
 
     # Q17 shape: the per-part thresholds table is corpus-keyed — under a
     # non-AQE static plan it must NOT broadcast (same rule as the
@@ -247,7 +255,7 @@ def main() -> int:
     ):
         p = plan_of(fn(spark, sf_dir))
         check(f"{name} no keyed shuffle (rebalance-only)", only_rebalance_exchanges(p))
-        check(f"{name} no Python stage", "Python" not in p and "MapInPandas" not in p)
+        check(f"{name} no Python stage", no_python_stage(p))
 
     # minhash signatures: since the round-6 array_min projection rewrite
     # the signature stage itself must be shuffle-free — the FIRST
@@ -258,7 +266,7 @@ def main() -> int:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     p = plan_of(minhash_signatures(docs))
     check("minhash signatures shuffle-free (no Exchange)", "Exchange" not in p)
-    check("minhash signatures no Python stage", "Python" not in p and "MapInPandas" not in p)
+    check("minhash signatures no Python stage", no_python_stage(p))
 
     # simhash: same rewrite — the signature is a single-aggregate-pass
     # projection; simhash_pairs' first exchange is the banded hamming join
@@ -284,7 +292,7 @@ def main() -> int:
     check("line dedup map-side partial agg", "partial_" in p)
     check(
         "line dedup no Python / no cartesian",
-        "Python" not in p and "CartesianProduct" not in p,
+        no_python_stage(p) and "CartesianProduct" not in p,
     )
 
     # incremental cluster maintenance: the added-rows step must never

@@ -3,7 +3,7 @@
 A from-scratch reimplementation of trafilatura's extraction semantics
 (reference: adbar/trafilatura 2.2.0) designed for Spark execution over
 multi-turn transcript tables at web scale: vectorized Arrow batches via
-mapInPandas, conv_id-salted repartitioning, AQE skew handling, and
+mapInArrow, conv_id-salted repartitioning, AQE skew handling, and
 checkpoint-resumable per-partition lineage.
 """
 

@@ -28,6 +28,7 @@ PARAGRAPH_TAGS = frozenset(
 )
 HEADING_RE = re.compile(r"\bh\d\b")
 SELECT_PATH_RE = re.compile(r"(^select|\.select)")
+WHITESPACE_RE = re.compile(r"\s+")
 PREPROC_REMOVE = frozenset({"head", "script", "style"})
 
 # Stoplists live in kernel/stoplists.py: ~50 built-in function-word
@@ -48,7 +49,7 @@ from .stoplists import (
 
 
 class Paragraph:
-    __slots__ = ("dom_path", "text_nodes", "chars_count_in_links", "tags_count", "cf_class", "class_")
+    __slots__ = ("dom_path", "text_nodes", "chars_count_in_links", "tags_count", "cf_class", "class_", "_text")
 
     def __init__(self, path: str):
         self.dom_path = path
@@ -57,10 +58,16 @@ class Paragraph:
         self.tags_count = 0
         self.cf_class: Optional[str] = None
         self.class_: Optional[str] = None
+        self._text: Optional[str] = None
 
     @property
     def text(self) -> str:
-        return re.sub(r"\s+", " ", "".join(self.text_nodes)).strip()
+        """The whitespace-normalized text, computed once.  make_paragraphs
+        first reads it when the paragraph closes, and a closed paragraph's
+        text_nodes never change."""
+        if self._text is None:
+            self._text = WHITESPACE_RE.sub(" ", "".join(self.text_nodes)).strip()
+        return self._text
 
     @property
     def words(self) -> list:

@@ -52,8 +52,8 @@ whose password does not verify are refused and the kernel labels them
 tier='pdf_encrypted' instead of emitting key-stream garbage.
 
 The Spark face: operators/extract.py routes %PDF- payloads here before
-the HTML wrap, emitting tier='pdf' rows through the same mapInPandas
-batch as HTML turns.
+the HTML wrap, emitting tier='pdf' rows through the same mapInArrow
+batch loop as HTML turns.
 """
 
 from __future__ import annotations

@@ -12,13 +12,17 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
   split) applies `salted_repartition`, `hash(conv_id, pmod(turn_idx,
   salt))`, first (AQE balances bytes, not lxml-CPU; salting balances
   work).
-- mapInPandas over Arrow batches: Spark sees only columnar Arrow; the
-  per-document DOM work happens inside the batch loop (no per-row Python
-  crossing the JVM boundary).  Every operator runs the one loop
+- mapInArrow over Arrow record batches: Spark sees only columnar Arrow;
+  the per-document DOM work happens inside the batch loop (no per-row
+  Python crossing the JVM boundary).  Every operator runs the one loop
   `map_batches`; an output column is one entry of a column spec
   (CONTENT_COLUMNS here, METADATA_COLUMNS / JOINED_METADATA_COLUMNS in
-  metadata_op.py) that drives both the pandas frame and the mapInPandas
-  schema (`map_turns`).
+  metadata_op.py) that drives both the Arrow column builder and the
+  mapInArrow schema (`map_turns`).  Passthrough columns go back to Spark
+  as the input's own Arrow arrays.  Nothing on this path loads pandas
+  (~38 MB of a worker's peak RSS): output columns are built with Arrow
+  builders and buffers, never `pa.array`, which imports pandas to test
+  its argument.
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): a SIGALRM timer interrupts
   the kernel wherever it is (HTML or PDF), yielding tier='timeout'.
@@ -35,18 +39,21 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
   freeze_import_heap): a worker imports it when it unpickles any
   extraction batch function, before any batch exists, and from then on
   PySpark's full collection after every task walks only what the task
-  left instead of the ~80k objects pandas, pyspark and the kernel hold.
+  left instead of the objects pyarrow, pyspark and the kernel hold.
 """
 
 from __future__ import annotations
 
+from array import array
 from operator import attrgetter
 from typing import Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
+from pyarrow.lib import StringBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     IntegerType,
     StringType,
     StructField,
@@ -70,8 +77,8 @@ SALT_BUCKETS = 64
 DEFAULT_PASSTHROUGH = ["conv_id", "turn_idx"]
 
 # Output column spec: (name, Spark type, nullable, getter of one row's
-# result).  map_batches fills the pandas frame from it, map_turns
-# declares the mapInPandas schema from it.
+# result).  map_batches builds the Arrow columns from it, map_turns
+# declares the mapInArrow schema from it.
 CONTENT_COLUMNS = [
     ("extracted_text", StringType(), True, attrgetter("text")),
     ("tier", StringType(), False, attrgetter("tier")),
@@ -157,34 +164,95 @@ def extract_one_result(
     return ExtractionResult(None, tier, 0, 0)
 
 
+class _Int32s:
+    "Builder of a non-null int32 column: one C int per row, then its buffer as the Arrow array."
+
+    __slots__ = ("values",)
+
+    def __init__(self):
+        self.values = array("i")
+
+    def append(self, value: int) -> None:
+        self.values.append(value)
+
+    def finish(self) -> pa.Array:
+        return pa.Array.from_buffers(pa.int32(), len(self.values), [None, pa.py_buffer(self.values)])
+
+
+class _StringLists:
+    """Builder of a list<string> column whose rows are None or a list of
+    strings.  The array is assembled from its validity bitmap, offsets
+    and items: ``pa.ListArray.from_arrays(..., mask=)`` would import
+    pyarrow.compute (~4k objects) into the worker after its heap froze."""
+
+    __slots__ = ("items", "offsets", "valid")
+
+    def __init__(self):
+        self.items = StringBuilder()
+        self.offsets = array("i", [0])
+        self.valid = bytearray()  # one bit per row, set for a non-null list
+
+    def append(self, value: Optional[list]) -> None:
+        row = len(self.offsets) - 1
+        if not row & 7:
+            self.valid.append(0)
+        if value is not None:
+            self.valid[row >> 3] |= 1 << (row & 7)
+            for item in value:
+                self.items.append(item)
+        self.offsets.append(len(self.items))
+
+    def finish(self) -> pa.Array:
+        buffers = [pa.py_buffer(self.valid), pa.py_buffer(self.offsets)]
+        return pa.Array.from_buffers(pa.list_(pa.string()), len(self.offsets) - 1, buffers, children=[self.items.finish()])
+
+
+def _column_builder(dtype, nullable: bool):
+    """The Arrow builder class of an output column's Spark type: each has
+    ``append(value)`` and ``finish() -> pa.Array``.  None of them calls
+    ``pa.array``, which imports pandas to inspect its argument."""
+    if isinstance(dtype, StringType):
+        return StringBuilder
+    if isinstance(dtype, IntegerType) and not nullable:
+        return _Int32s
+    if dtype == ArrayType(StringType()):
+        return _StringLists
+    null = "nullable " if nullable else ""
+    raise TypeError(f"no Arrow builder for {null}output columns of type {dtype.simpleString()}")
+
+
 def map_batches(row_fn, columns: list):
-    """The per-row loop of every extraction operator: a mapInPandas
-    function that calls ``row_fn`` once per ``text`` and emits every
-    other column of the incoming frame plus one column per ``columns``
+    """The per-row loop of every extraction operator: a mapInArrow
+    function that calls ``row_fn`` once per ``text`` of each incoming
+    ``pyarrow.RecordBatch`` and yields a batch of every other input
+    column, as the input's own arrays, plus one column per ``columns``
     spec entry.
 
-    Each column's value is taken from a row's result as soon as the row
-    finishes, and the kernel's string memos are cleared with it, so no
-    reference to a result or a memoized string outlives its row: a
+    Each column's value is appended to its Arrow builder as soon as the
+    row finishes, and the kernel's string memos are cleared with it, so
+    no reference to a result or a memoized string outlives its row: a
     worker holds its Arrow batch, the output columns built from it, and
     one document.  The kernel creates no reference cycles (its DOM trees
     hold parents weakly), so dropping the result frees the row's trees
     at once, without the cyclic collector."""
+    builders = [_column_builder(dtype, nullable) for _, dtype, nullable, _ in columns]
+    getters = [get for _, _, _, get in columns]
+    names = [name for name, _, _, _ in columns]
 
-    def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batch(iterator: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for chunk in iterator:
-            values = [[] for _ in columns]
-            for text in chunk["text"]:
-                result = row_fn(text)
-                for column, (_, _, _, get) in zip(values, columns):
+            built = [builder() for builder in builders]
+            for text in chunk.column("text"):
+                result = row_fn(text.as_py())
+                for column, get in zip(built, getters):
                     column.append(get(result))
                 del result
                 clear_string_memos()
-            out = chunk.drop(columns="text")
-            for (name, dtype, _, _), column in zip(columns, values):
-                # integer columns are non-null, so int32 matches IntegerType
-                out[name] = pd.array(column, dtype="int32") if isinstance(dtype, IntegerType) else column
-            yield out
+            keep = [name for name in chunk.schema.names if name != "text"]
+            yield pa.RecordBatch.from_arrays(
+                [chunk.column(name) for name in keep] + [column.finish() for column in built],
+                names=keep + names,
+            )
 
     return batch
 
@@ -196,11 +264,11 @@ def map_turns(df: DataFrame, fn, columns: list, passthrough: Optional[list] = No
     pruned = df.select(*dict.fromkeys((passthrough or DEFAULT_PASSTHROUGH) + ["text"]))
     fields = [f for f in pruned.schema if f.name != "text"]
     fields += [StructField(name, dtype, nullable) for name, dtype, nullable, _ in columns]
-    return pruned.mapInPandas(fn, schema=StructType(fields))
+    return pruned.mapInArrow(fn, schema=StructType(fields))
 
 
 def make_extract_batch_fn(options: Options = DEFAULT_OPTIONS):
-    "mapInPandas function emitting the passthrough columns + CONTENT_COLUMNS."
+    "mapInArrow function emitting the passthrough columns + CONTENT_COLUMNS."
     return map_batches(lambda text: extract_one_result(text, options), CONTENT_COLUMNS)
 
 
@@ -233,7 +301,7 @@ def extract_transcripts(
 
 def make_extract_with_metadata_batch_fn(options: Options = DEFAULT_OPTIONS):
     """Batch function emitting extraction AND metadata columns in one
-    mapInPandas pass — the reference's bare_extraction(with_metadata=True)
+    mapInArrow pass — the reference's bare_extraction(with_metadata=True)
     shape.  One table scan, one Arrow crossing, and ONE HTML PARSE per
     document serve both outputs: bare_extract runs with with_metadata set
     and returns the metadata object extracted from the same parsed tree

@@ -61,7 +61,7 @@ def _metadata_of(text: Optional[str]):
 
 
 def make_metadata_batch_fn():
-    "mapInPandas function emitting the passthrough columns + METADATA_COLUMNS."
+    "mapInArrow function emitting the passthrough columns + METADATA_COLUMNS."
     return map_batches(_metadata_of, METADATA_COLUMNS)
 
 

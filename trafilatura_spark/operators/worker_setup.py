@@ -29,11 +29,16 @@ pyarrow, pyspark and the kernel loaded, ~46 ms per task on 5-200 KB
 pages on a 4-vCPU x86 VM.  ``freeze_import_heap`` collects once and
 freezes the survivors into the collector's permanent generation, which
 no later collection walks, so the daemon's collection walks only
-what the last task left (1-3k objects).  ``operators/extract.py`` calls it at the end of its
-module body: a worker imports that module when it unpickles any
-extraction batch function, before the task's first batch exists.
-Frozen objects are never collected, so the freeze must never run while
-batch data is alive: only at import, never per task or per batch.
+what the last task left (1-3k objects).  ``operators/extract.py`` calls
+it at the end of its module body: a worker imports that module when it
+unpickles any extraction batch function, before the task's first batch
+exists.  The extraction workers load no pandas, so
+``streaming/extract_stream.py``, which imports pandas for its
+``applyInPandasWithState`` function, freezes again at the end of its
+body: a worker that ran extraction first would otherwise walk pandas'
+~33k objects after every later task.  Frozen objects are never
+collected, so the freeze must never run while batch data is alive: only
+at import, never per task or per batch.
 """
 
 from __future__ import annotations
@@ -78,17 +83,20 @@ def install_zip_reread_guard() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-_heap_frozen = False
+_modules_at_freeze = 0  # len(sys.modules) when the heap was last frozen
 
 
 def freeze_import_heap() -> None:
-    "Collect once, then freeze the survivors out of every later collection; once per process."
-    global _heap_frozen
-    if _heap_frozen:
+    """Collect, then freeze the survivors out of every later collection.
+    A no-op unless modules were imported since the last freeze: each
+    module body that calls it freezes what the imports before it added,
+    once per process."""
+    global _modules_at_freeze
+    if len(sys.modules) == _modules_at_freeze:
         return
     gc.collect()
     gc.freeze()
-    _heap_frozen = True
+    _modules_at_freeze = len(sys.modules)
 
 
 install_zip_reread_guard()

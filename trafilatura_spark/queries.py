@@ -5,7 +5,7 @@ Relational-shell queries validate the engine's Catalyst-side plumbing
 (filters, aggregations, windows, joins over the star schema); training-
 pipeline queries (dedup / similarity / textstats) validate the
 first-class 100 TB operators; extraction queries run the kernel through
-mapInPandas (pinned-fixture oracle where no SQL twin exists).
+the mapInArrow batch loop (pinned-fixture oracle where no SQL twin exists).
 
 Float-bearing aggregates are rounded on both sides so value-hash
 comparison is stable across engines.
@@ -820,7 +820,7 @@ def _documents_as_turns(spark: SparkSession, sf_dir: str, *parts) -> DataFrame:
 def extract_documents_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable extraction: wrap each document's text in a
     single-paragraph page and run the FULL kernel cascade through
-    mapInPandas.  For this genre the reference semantics reduce to
+    the mapInArrow batch loop.  For this genre the reference semantics reduce to
     whitespace-collapsed text (trim + NFC), which the DuckDB twin states
     directly — so the whole parse→cascade→serialize path is value-checked."""
     from .operators.extract import extract_transcripts
@@ -1031,7 +1031,7 @@ def extract_documents_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checkable metadata extraction: build a deterministic page
     (title + keywords meta) around each document, run the FULL metadata
     kernel (title ladder incl. separator split, tag normalization)
-    through mapInPandas; the DuckDB twin states the expected values
+    through the mapInArrow batch loop; the DuckDB twin states the expected values
     directly in SQL."""
     from .operators.metadata_op import extract_metadata_columns
 
@@ -1069,7 +1069,7 @@ FROM documents
 
 
 def extract_documents_with_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked COMBINED extraction + metadata: one mapInPandas pass
+    """Oracle-checked COMBINED extraction + metadata: one mapInArrow pass
     emits both the extracted text and the metadata ladder (title, date,
     tags) — the single-scan shape of reference bare_extraction
     (with_metadata=True).  Value-checks all four outputs in SQL."""

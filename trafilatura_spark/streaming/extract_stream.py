@@ -1,4 +1,4 @@
-"""Streaming extraction: the same mapInPandas cascade over readStream.
+"""Streaming extraction: the same mapInArrow extraction batch loop over readStream.
 
 The reference is strictly batch (SURVEY.md §2.9); this extends the graft
 to continuous ingestion: a file-source (or any) streaming DataFrame of
@@ -25,6 +25,7 @@ from pyspark.sql.types import (
 
 from ..kernel import DEFAULT_OPTIONS, Options
 from ..operators.extract import extract_transcripts
+from ..operators.worker_setup import freeze_import_heap
 
 TRANSCRIPT_SCHEMA = StructType(
     [
@@ -66,7 +67,7 @@ def dedup_stream(
     This is the streaming face of the exact-dedup operator: at-least-once
     sources (Kafka, file backfills, retried upstream jobs) deliver
     duplicates; the extraction cost per duplicate is saved by deduping
-    BEFORE the mapInPandas cascade."""
+    BEFORE the extraction batch loop."""
     return stream_df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(list(keys))
 
 
@@ -161,3 +162,8 @@ def conversation_running_state(
             out_schema, state_schema, "update", GroupStateTimeout.EventTimeTimeout,
         )
     )
+
+
+# last: pandas is loaded here, after operators/extract.py froze the heap
+# in a worker that extracted first, and no batch data exists yet
+freeze_import_heap()
