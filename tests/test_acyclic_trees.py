@@ -2,7 +2,7 @@
 
 A DOM node holds its parent through a weak reference (kernel/dom.py), so
 a document's trees are freed by reference counting when the batch loop
-(operators/extract.py map_batches) drops the row's result.  Anything a
+(operators/arrow_batches.py map_batches) drops the row's result.  Anything a
 document allocates in a cycle (a back-pointer, a closure that refers to
 itself) would instead wait for the cyclic collector, which a reused
 PySpark worker runs inside the kernel on allocation thresholds and after

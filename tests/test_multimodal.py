@@ -1,21 +1,10 @@
-"""Multimodal plumbing: format sniffing (JVM-side) and batched feature
-extraction / resize / frame sampling (stubbed decode, real dataflow)."""
-
-import pytest
-
-
-@pytest.fixture()
-def media_df(spark):
-    rows = [
-        (1, b"\x89PNG\r\n\x1a\n" + b"x" * 64),
-        (2, b"\xff\xd8\xff\xe0" + b"y" * 64),
-        (3, b"\x00\x00\x00\x18ftypmp42" + b"v" * 256),
-    ]
-    return spark.createDataFrame(rows, ["media_id", "payload"])
+"""Binary media columns: format sniffing (JVM-side) and the header
+parsers for image dimensions and audio/video durations."""
 
 
 def test_media_pipeline(spark):
-    from trafilatura_spark.operators.multimodal import FEATURE_DIM, media_features
+    "attach_media_meta's six-way sniff, JVM-side: png, jpeg, gif, riff, mp4, unknown."
+    from trafilatura_spark.operators.multimodal import attach_media_meta
 
     rows = [
         (1, b"\x89PNG\r\n\x1a\n" + b"x" * 64),
@@ -26,59 +15,17 @@ def test_media_pipeline(spark):
         (6, b"not a known container"),
     ]
     df = spark.createDataFrame(rows, ["media_id", "payload"])
-    out = {r.media_id: r for r in media_features(df).collect()}
-
-    assert out[1].format == "png"
-    assert out[2].format == "jpeg"
-    assert out[3].format == "gif"
-    assert out[4].format == "riff"
-    assert out[5].format == "mp4"
-    assert out[6].format == "unknown"
-    for r in out.values():
-        assert len(r.feature) == FEATURE_DIM
-        assert all(0.0 <= v <= 1.0 for v in r.feature)
-
-    # deterministic across runs
-    again = {r.media_id: r.feature for r in media_features(df).collect()}
-    assert {k: v.feature for k, v in out.items()} == again
-
-
-def test_decode_real_is_explicit_stub():
-    import pytest
-
-    from trafilatura_spark.operators.multimodal import decode_real
-
-    with pytest.raises(NotImplementedError):
-        decode_real(b"")
-
-
-def test_media_resize_plumbing(spark, media_df):
-    from trafilatura_spark.operators.multimodal import media_resize
-
-    rows = media_resize(media_df, width=8, height=4).collect()
-    assert len(rows) == media_df.count()
-    for r in rows:
-        assert r.width == 8 and r.height == 4
-        assert isinstance(r.payload, (bytes, bytearray)) and len(r.payload) == 32
-    # deterministic: same input -> same resized payload
-    again = {r.media_id: bytes(r.payload) for r in media_resize(media_df, width=8, height=4).collect()}
-    assert all(bytes(r.payload) == again[r.media_id] for r in rows)
-
-
-def test_video_frame_sample_fanout(spark, media_df):
-    from trafilatura_spark.operators.multimodal import FEATURE_DIM, video_frame_sample
-
-    n_in = media_df.count()
-    rows = video_frame_sample(media_df, n_frames=3).collect()
-    assert len(rows) == n_in * 3  # 1 -> N fan-out
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r.media_id, set()).add(r.frame_idx)
-        assert len(r.frame_feature) == FEATURE_DIM
-    assert all(v == {0, 1, 2} for v in by_media.values())
-    # frames of the same video differ (per-frame decode), deterministically
-    one = [r for r in rows if r.media_id == rows[0].media_id]
-    assert len({tuple(r.frame_feature) for r in one}) == 3
+    meta = attach_media_meta(df)
+    assert meta.columns == ["media_id", "payload", "format", "n_bytes"]
+    out = {r.media_id: r for r in meta.collect()}
+    assert {k: r.format for k, r in out.items()} == {
+        1: "png", 2: "jpeg", 3: "gif", 4: "riff", 5: "mp4", 6: "unknown"
+    }
+    assert {k: r.n_bytes for k, r in out.items()} == {k: len(p) for k, p in rows}
+    assert all(bytes(out[k].payload) == p for k, p in rows)
+    # no Python stage: the sniff is built-in functions on the binary column
+    plan = meta._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan and "BatchEvalPython" not in plan
 
 
 def _png(w, h):
@@ -131,7 +78,10 @@ def test_image_dimensions_real_header_parse(spark):
     assert out[4].width is None and out[4].dim_source is None
     # png/gif rows must NOT pass through Python (only the jpeg branch does)
     plan = image_dimensions(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    # every branch names the id column after the caller's
+    renamed = image_dimensions(df.withColumnRenamed("media_id", "image_id"), id_col="image_id")
+    assert sorted((r.image_id, r.width) for r in renamed.collect()) == [(1, 800), (2, 320), (3, 1024), (4, None)]
 
 
 def _wav(seconds: float, sample_rate: int = 8000, block: int = 2):
@@ -196,4 +146,6 @@ def test_media_durations_real_header_parse(spark):
     assert abs(out[2].duration_s - 30.0) < 1e-6 and out[2].format == "mp4"
     assert out[3].duration_s is None and out[3].duration_source is None
     plan = media_durations(df)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
+    renamed = media_durations(df.withColumnRenamed("media_id", "clip_id"), id_col="clip_id")
+    assert sorted(r.clip_id for r in renamed.collect()) == [1, 2, 3]

@@ -200,7 +200,7 @@ def test_whitespace_prefixed_pdf_routes_to_pdf_reader():
 
 
 def test_extract_transcripts_pdf_rows_end_to_end(spark):
-    "A PDF turn flows through the mapInPandas cascade as tier='pdf'."
+    "A PDF turn flows through the mapInArrow cascade as tier='pdf'."
     from trafilatura_spark.operators.extract import extract_transcripts
 
     pdf_payload = build_pdf(CONTENT).decode("latin-1")

@@ -1,7 +1,7 @@
 """The extraction worker's memory bound: its Arrow batch plus one document.
 
 Spark bounds the batch (``spark.sql.execution.arrow.maxBytesPerBatch``);
-the batch loop (operators/extract.py map_batches) releases each row's
+the batch loop (operators/arrow_batches.py map_batches) releases each row's
 result and clears the kernel's string memos (kernel/textutils.py
 clear_string_memos) after the row, so no reference to a document
 survives it in a reused Python worker.  A document's DOM trees are

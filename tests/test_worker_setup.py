@@ -5,14 +5,16 @@ On CPython < 3.12 every ``importlib.invalidate_caches()`` — which
 PySpark's worker runs at the start of each task — re-reads the central
 directory of every zip archive on the worker path.  The guard skips the
 re-read of an archive that has not changed.  PySpark's daemon runs a
-full ``gc.collect()`` after each task; importing operators/extract.py
-freezes the import-time heap so that collection stops walking it.
+full ``gc.collect()`` after each task; importing the shared batch loop
+(operators/arrow_batches.py), as operators/extract.py does, freezes the
+import-time heap so that collection stops walking it.
 
 The unit tests check the guard in this process and the freeze in a
 fresh one; the Spark tests probe a reused local[1] Python worker after
-each extraction operator, or the streaming per-conversation state
-function, ran in it: the re-reads it still makes, its freeze count, the
-objects the collector still tracks and whether it loaded pandas.  The
+each extraction operator, the n-gram lang-id operator, or the streaming
+per-conversation state function, ran in it: the re-reads it still
+makes, its freeze count, the objects the collector still tracks and
+whether it loaded pandas.  The
 probes are mapInArrow functions that load no pandas themselves.
 ``PYTHONPATH=. python tests/test_worker_setup.py SCRATCH_DIR`` prints
 those probes as JSON.
@@ -200,6 +202,7 @@ def probe_rereads(local_dir: str) -> dict:
 
     from trafilatura_spark.operators.extract import extract_transcripts, extract_with_metadata
     from trafilatura_spark.operators.metadata_op import extract_metadata_columns
+    from trafilatura_spark.operators.textstats import lang_id_ngram
 
     page = (
         "<html><head><title>Probe page</title><meta name='author' content='A. Writer'></head>"
@@ -211,6 +214,7 @@ def probe_rereads(local_dir: str) -> dict:
         "extract_transcripts": lambda df: extract_transcripts(df).collect(),
         "extract_with_metadata": lambda df: extract_with_metadata(df).collect(),
         "extract_metadata_columns": lambda df: extract_metadata_columns(df).collect(),
+        "lang_id_ngram": lambda df: lang_id_ngram(df, id_col="turn_idx").collect(),
         "conversation_running_state": lambda df: _drain_running_state(df, local_dir),
     }
     out = {}
@@ -257,7 +261,8 @@ def worker_probes(tmp_path_factory) -> dict:
     return counts
 
 
-EXTRACTION_OPERATORS = ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns")
+# every batch function built on operators/arrow_batches.py map_batches
+ARROW_OPERATORS = ("extract_transcripts", "extract_with_metadata", "extract_metadata_columns", "lang_id_ngram")
 
 
 def test_no_zip_rereads_after_extraction_operators(worker_probes):
@@ -270,7 +275,7 @@ def test_no_zip_rereads_after_extraction_operators(worker_probes):
     # one local[1] worker runs every task, so the probed worker is the one
     # that ran the state function
     assert counts["conversation_running_state"]["streaming"], counts
-    for name in EXTRACTION_OPERATORS + ("conversation_running_state",):
+    for name in ARROW_OPERATORS + ("conversation_running_state",):
         assert counts[name]["reads"] == 0, f"{name}: {counts[name]}"
         # the daemon's collection after each task walks only what is left
         # tracked; the frozen heap is pyarrow, pyspark and the kernel
@@ -279,12 +284,13 @@ def test_no_zip_rereads_after_extraction_operators(worker_probes):
 
 
 def test_extraction_workers_never_load_pandas(worker_probes):
-    """The extraction operators run on Arrow alone: pandas (~38 MB of a
-    worker's RSS) is absent from the worker after each of them.  The
-    identity mapInPandas case shows that the probe sees it when loaded."""
+    """The extraction operators and the n-gram lang-id run on Arrow alone:
+    pandas (~38 MB of a worker's RSS) is absent from the worker after
+    each of them.  The identity mapInPandas case shows that the probe
+    sees it when loaded."""
     counts = worker_probes
     assert counts["identity"]["pandas"], counts
-    for name in EXTRACTION_OPERATORS:
+    for name in ARROW_OPERATORS:
         assert not counts[name]["pandas"], f"{name}: {counts[name]}"
 
 

@@ -163,7 +163,7 @@ def main() -> int:
 
     # full-coverage n-gram lang-id: one Arrow stage over a pruned scan
     p = plan_of(Q.text_lang_id_ngram(spark, sf_dir))
-    check("lang-id ngram single MapInPandas stage", p.count("MapInPandas") == 1)
+    check("lang-id ngram single MapInArrow stage", p.count("MapInArrow") == 1 and "MapInPandas" not in p)
     rs = re.search(r"ReadSchema: struct<([^>]*)>", p)
     cols = rs.group(1) if rs else ""
     check("lang-id ngram scan pruned", bool(rs) and "source" not in cols and "lang" not in cols, cols[:200])

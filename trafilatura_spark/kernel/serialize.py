@@ -232,7 +232,8 @@ def process_element(
     "Recursive flattening (reference xml.py:521-606)."
     in_cell = in_cell or element.tag == "cell"
     in_item = in_item or element.tag == "item"
-    if element.tag == "cell" and element.getprevious() is None:
+    # the first cell of its row; getprevious() would scan every sibling
+    if element.tag == "cell" and ((parent := element.getparent()) is None or parent[0] is element):
         returnlist.append("| ")
 
     if element.tag in NEWLINE_ELEMS and not in_cell and not in_item and _last_char(returnlist) not in SEPARATORS:

@@ -15,14 +15,12 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - mapInArrow over Arrow record batches: Spark sees only columnar Arrow;
   the per-document DOM work happens inside the batch loop (no per-row
   Python crossing the JVM boundary).  Every operator runs the one loop
-  `map_batches`; an output column is one entry of a column spec
-  (CONTENT_COLUMNS here, METADATA_COLUMNS / JOINED_METADATA_COLUMNS in
-  metadata_op.py) that drives both the Arrow column builder and the
-  mapInArrow schema (`map_turns`).  Passthrough columns go back to Spark
-  as the input's own Arrow arrays.  Nothing on this path loads pandas
-  (~38 MB of a worker's peak RSS): output columns are built with Arrow
-  builders and buffers, never `pa.array`, which imports pandas to test
-  its argument.
+  `map_batches` of arrow_batches.py; an output column is one entry of a
+  column spec (CONTENT_COLUMNS here, METADATA_COLUMNS /
+  JOINED_METADATA_COLUMNS in metadata_op.py) that drives both the Arrow
+  column builder and the mapInArrow schema (`map_turns`).  Passthrough
+  columns go back to Spark as the input's own Arrow arrays.  Nothing on
+  this path loads pandas.
 - preemptive per-document deadline replacing the reference CLI's 30 s/file
   process kill (cli_utils.py / settings.cfg:37): a SIGALRM timer interrupts
   the kernel wherever it is (HTML or PDF), yielding tier='timeout'.
@@ -35,36 +33,24 @@ Design (SURVEY.md §7 P1, BASELINE.json north_rule):
 - importing the package installs worker_setup's zip re-read guard in the
   worker: on CPython < 3.12 PySpark's per-task importlib.invalidate_caches()
   otherwise re-reads spark-core's jar and pyspark.zip in every task.
-- the end of this module freezes the import-time heap (worker_setup's
-  freeze_import_heap): a worker imports it when it unpickles any
-  extraction batch function, before any batch exists, and from then on
-  PySpark's full collection after every task walks only what the task
-  left instead of the objects pyarrow, pyspark and the kernel hold.
+- importing arrow_batches, last, freezes the import-time heap (see its
+  docstring): a worker imports this module when it unpickles any
+  extraction batch function, before any batch exists.
 """
 
 from __future__ import annotations
 
-from array import array
 from operator import attrgetter
-from typing import Iterator, Optional
+from typing import Optional
 
-import pyarrow as pa
-from pyarrow.lib import StringBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, StringType
 
 from ..kernel import DEFAULT_OPTIONS, ExtractionResult, Options, bare_extract
 from ..kernel.extract import serialize_result
 from ..kernel.settings import ExtractionTimeout, arm_deadline, disarm_deadline
-from ..kernel.textutils import clear_string_memos
-from .worker_setup import freeze_import_heap
+from .arrow_batches import map_batches, map_turns
 
 # fixed wrapping convention (FIXTURES.md): load_html rejects bare
 # single-block fragments, so turns are wrapped identically everywhere
@@ -74,7 +60,6 @@ WRAP_SUFFIX = "</body></html>"
 DEFAULT_TIMEOUT_SECS = 30.0
 # turn_idx buckets per conv_id in salted_repartition
 SALT_BUCKETS = 64
-DEFAULT_PASSTHROUGH = ["conv_id", "turn_idx"]
 
 # Output column spec: (name, Spark type, nullable, getter of one row's
 # result).  map_batches builds the Arrow columns from it, map_turns
@@ -162,109 +147,6 @@ def extract_one_result(
             disarm_deadline()
     # built once the timer is off: ExtractionResult.__init__ is kernel code
     return ExtractionResult(None, tier, 0, 0)
-
-
-class _Int32s:
-    "Builder of a non-null int32 column: one C int per row, then its buffer as the Arrow array."
-
-    __slots__ = ("values",)
-
-    def __init__(self):
-        self.values = array("i")
-
-    def append(self, value: int) -> None:
-        self.values.append(value)
-
-    def finish(self) -> pa.Array:
-        return pa.Array.from_buffers(pa.int32(), len(self.values), [None, pa.py_buffer(self.values)])
-
-
-class _StringLists:
-    """Builder of a list<string> column whose rows are None or a list of
-    strings.  The array is assembled from its validity bitmap, offsets
-    and items: ``pa.ListArray.from_arrays(..., mask=)`` would import
-    pyarrow.compute (~4k objects) into the worker after its heap froze."""
-
-    __slots__ = ("items", "offsets", "valid")
-
-    def __init__(self):
-        self.items = StringBuilder()
-        self.offsets = array("i", [0])
-        self.valid = bytearray()  # one bit per row, set for a non-null list
-
-    def append(self, value: Optional[list]) -> None:
-        row = len(self.offsets) - 1
-        if not row & 7:
-            self.valid.append(0)
-        if value is not None:
-            self.valid[row >> 3] |= 1 << (row & 7)
-            for item in value:
-                self.items.append(item)
-        self.offsets.append(len(self.items))
-
-    def finish(self) -> pa.Array:
-        buffers = [pa.py_buffer(self.valid), pa.py_buffer(self.offsets)]
-        return pa.Array.from_buffers(pa.list_(pa.string()), len(self.offsets) - 1, buffers, children=[self.items.finish()])
-
-
-def _column_builder(dtype, nullable: bool):
-    """The Arrow builder class of an output column's Spark type: each has
-    ``append(value)`` and ``finish() -> pa.Array``.  None of them calls
-    ``pa.array``, which imports pandas to inspect its argument."""
-    if isinstance(dtype, StringType):
-        return StringBuilder
-    if isinstance(dtype, IntegerType) and not nullable:
-        return _Int32s
-    if dtype == ArrayType(StringType()):
-        return _StringLists
-    null = "nullable " if nullable else ""
-    raise TypeError(f"no Arrow builder for {null}output columns of type {dtype.simpleString()}")
-
-
-def map_batches(row_fn, columns: list):
-    """The per-row loop of every extraction operator: a mapInArrow
-    function that calls ``row_fn`` once per ``text`` of each incoming
-    ``pyarrow.RecordBatch`` and yields a batch of every other input
-    column, as the input's own arrays, plus one column per ``columns``
-    spec entry.
-
-    Each column's value is appended to its Arrow builder as soon as the
-    row finishes, and the kernel's string memos are cleared with it, so
-    no reference to a result or a memoized string outlives its row: a
-    worker holds its Arrow batch, the output columns built from it, and
-    one document.  The kernel creates no reference cycles (its DOM trees
-    hold parents weakly), so dropping the result frees the row's trees
-    at once, without the cyclic collector."""
-    builders = [_column_builder(dtype, nullable) for _, dtype, nullable, _ in columns]
-    getters = [get for _, _, _, get in columns]
-    names = [name for name, _, _, _ in columns]
-
-    def batch(iterator: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for chunk in iterator:
-            built = [builder() for builder in builders]
-            for text in chunk.column("text"):
-                result = row_fn(text.as_py())
-                for column, get in zip(built, getters):
-                    column.append(get(result))
-                del result
-                clear_string_memos()
-            keep = [name for name in chunk.schema.names if name != "text"]
-            yield pa.RecordBatch.from_arrays(
-                [chunk.column(name) for name in keep] + [column.finish() for column in built],
-                names=keep + names,
-            )
-
-    return batch
-
-
-def map_turns(df: DataFrame, fn, columns: list, passthrough: Optional[list] = None) -> DataFrame:
-    """Run the batch function ``fn`` (map_batches) over ``df`` pruned to
-    the passthrough columns plus ``text``, and declare the output schema
-    as the passthrough columns' input fields plus the ``columns`` spec."""
-    pruned = df.select(*dict.fromkeys((passthrough or DEFAULT_PASSTHROUGH) + ["text"]))
-    fields = [f for f in pruned.schema if f.name != "text"]
-    fields += [StructField(name, dtype, nullable) for name, dtype, nullable, _ in columns]
-    return pruned.mapInArrow(fn, schema=StructType(fields))
 
 
 def make_extract_batch_fn(options: Options = DEFAULT_OPTIONS):
@@ -431,6 +313,3 @@ def postprocess_conversations(
         )
     return convs
 
-
-# last: everything above is loaded, and no batch data exists yet
-freeze_import_heap()

@@ -2,8 +2,9 @@
 
 The reference's metadata path (metadata.py:458-563) is a deterministic
 per-document scalar function — here one more column family through the
-same batch loop as content extraction (`map_batches` / `map_turns`),
-over the input's own partitioning (SURVEY.md §2.7 Spark mapping)."""
+same batch loop as content extraction (arrow_batches.py `map_batches` /
+`map_turns`), over the input's own partitioning (SURVEY.md §2.7 Spark
+mapping)."""
 
 from __future__ import annotations
 
@@ -13,7 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import ArrayType, StringType
 
 from ..kernel.metadata import extract_metadata
-from .extract import map_batches, map_turns, wrap_if_fragment
+from .arrow_batches import map_batches, map_turns
+from .extract import wrap_if_fragment
 
 METADATA_FIELDS = [
     ("title", StringType()),

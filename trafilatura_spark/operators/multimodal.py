@@ -1,56 +1,26 @@
-"""Multimodal columns: opaque binary payloads + typed metadata.
+"""Binary media columns: container sniffing and header-only metadata.
 
-Images/audio/video ride along as `binary` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample run as Arrow
-batch functions over mapInPandas.  The decode step is STUBBED in this
-container (no image/audio libraries available) behind a deterministic
-fake — the Spark-side plumbing (schema, partitioning, UDF signature,
-batch shape) is real and tested:
+Images/audio/video ride along as `binary` columns; no pixel or sample is
+decoded (no image/audio library is needed):
 
-- `attach_media_meta`: JVM-side metadata sniffing (magic numbers via
-  built-in functions on the binary column — no Python).
-- `media_features`: mapInPandas batch op producing fixed-width feature
-  vectors.  Swap `_decode_stub` for a real decoder (PIL/ffmpeg) on a
-  cluster that has one; the dataflow is unchanged.
+- `attach_media_meta`: JVM-side format and size sniffing (magic numbers
+  via built-in functions on the binary column — no Python).
+- `image_dimensions`: PNG/GIF dimensions by JVM-side header arithmetic,
+  JPEG by a stdlib SOF-segment scan.
+- `media_durations`: WAV/MP4 durations by stdlib RIFF chunk and ISO-BMFF
+  box walks.
+
+The scans run on the shared Arrow batch loop (arrow_batches.py) over the
+rows of their formats only; every other row never leaves the JVM.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator, Optional
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import FloatType, IntegerType
 
-FEATURE_DIM = 16
-
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("format", StringType(), True),
-        StructField("n_bytes", IntegerType(), False),
-    ]
-)
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("format", StringType(), True),
-        StructField("feature", ArrayType(FloatType()), False),
-    ]
-)
+from .arrow_batches import map_batches, map_turns
 
 # magic-number prefixes, hex-encoded (JVM-side sniffing, no Python)
 _MAGIC = {
@@ -79,147 +49,6 @@ def attach_media_meta(df: DataFrame, id_col: str = "media_id", bin_col: str = "p
         fmt.alias("format"),
         F.length(bin_col).cast("int").alias("n_bytes"),
     )
-
-
-def _decode_stub(payload: bytes) -> np.ndarray:
-    """Deterministic fake decoder: a real deployment replaces this with
-    PIL.Image.open / soundfile / ffmpeg frame sampling.  The stub derives
-    a stable FEATURE_DIM float vector from the payload digest so the
-    distributed plumbing is fully exercisable and testable."""
-    digest = hashlib.sha256(payload or b"").digest()
-    arr = np.frombuffer(digest[: FEATURE_DIM * 2], dtype=np.uint16).astype(np.float32)
-    return arr / 65535.0
-
-
-def decode_real(payload: bytes) -> np.ndarray:  # pragma: no cover
-    "Placeholder for the real decode path; libraries absent in this container."
-    raise NotImplementedError(
-        "real media decoding requires PIL/ffmpeg/soundfile, not present in this environment; "
-        "see _decode_stub for the deterministic stand-in"
-    )
-
-
-def make_feature_batch_fn(id_col: str = "media_id", bin_col: str = "payload"):
-    def feature_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            feats = [_decode_stub(p).tolist() for p in pdf[bin_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].values,
-                    "format": pdf["format"].values if "format" in pdf else None,
-                    "feature": feats,
-                }
-            )
-
-    return feature_batch
-
-
-def media_features(df: DataFrame, id_col: str = "media_id", bin_col: str = "payload") -> DataFrame:
-    """Binary payloads -> feature vectors via Arrow batches.  Upstream
-    metadata sniffing stays JVM-side; only the (stubbed) decode crosses
-    into Python, batched."""
-    with_meta = attach_media_meta(df, id_col, bin_col)
-    fn = make_feature_batch_fn(id_col, bin_col)
-    return with_meta.mapInPandas(fn, schema=FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("format", StringType(), True),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("payload", BinaryType(), False),
-    ]
-)
-
-
-def _resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resize: derives a width*height byte grid from
-    the payload digest (a real deployment decodes with PIL and re-encodes
-    at the target size).  Byte-level plumbing — binary in, binary out —
-    is what the Spark dataflow needs to be real for."""
-    digest = hashlib.sha256(payload or b"")
-    out = bytearray()
-    counter = 0
-    while len(out) < width * height:
-        block = hashlib.sha256(digest.digest() + counter.to_bytes(4, "big")).digest()
-        out.extend(block)
-        counter += 1
-    return bytes(out[: width * height])
-
-
-def media_resize(
-    df: DataFrame,
-    width: int = 32,
-    height: int = 32,
-    id_col: str = "media_id",
-    bin_col: str = "payload",
-) -> DataFrame:
-    """Resize operator plumbing: binary payload in, resized binary payload
-    out, metadata carried through.  Decode/re-encode is stubbed (no PIL
-    in this container) — swap _resize_stub for a real resampler; schema,
-    batching and partitioning are unchanged."""
-    with_meta = attach_media_meta(df, id_col, bin_col)
-
-    def resize_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].values,
-                    "format": pdf["format"].values,
-                    "width": np.full(len(pdf), width, dtype=np.int32),
-                    "height": np.full(len(pdf), height, dtype=np.int32),
-                    "payload": [_resize_stub(p, width, height) for p in pdf[bin_col]],
-                }
-            )
-
-    return with_meta.mapInPandas(resize_batch, schema=RESIZE_SCHEMA)
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("frame_feature", ArrayType(FloatType()), False),
-    ]
-)
-
-
-def video_frame_sample(
-    df: DataFrame,
-    n_frames: int = 4,
-    id_col: str = "media_id",
-    bin_col: str = "payload",
-) -> DataFrame:
-    """Frame-sampling plumbing: one input video row fans out to
-    ``n_frames`` output rows (the 1->N batch shape ffmpeg sampling
-    needs).  Frame decode is stubbed deterministically per
-    (payload, frame_idx); a real deployment replaces the stub with
-    ffmpeg keyframe extraction — the mapInPandas contract is identical."""
-
-    def frame_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            ids, idxs, feats = [], [], []
-            for media_id, payload in zip(pdf[id_col], pdf[bin_col]):
-                for f in range(n_frames):
-                    ids.append(media_id)
-                    idxs.append(f)
-                    feats.append(_decode_stub((payload or b"") + f.to_bytes(4, "big")).tolist())
-            yield pd.DataFrame({"media_id": ids, "frame_idx": pd.array(idxs, dtype="int32"), "frame_feature": feats})
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(frame_batch, schema=FRAME_SCHEMA)
-
-
-DIMENSIONS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("format", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("dim_source", StringType(), True),
-    ]
-)
 
 
 def _be32(bin_col, pos: int):
@@ -346,14 +175,12 @@ def mp4_duration(payload: bytes):
         return None
 
 
-DURATION_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("format", StringType(), True),
-        StructField("duration_s", FloatType(), True),
-        StructField("duration_source", StringType(), True),
-    ]
-)
+def _duration_of(payload: bytes):
+    "Seconds from a RIFF or an ISO-BMFF header; rows are already riff or mp4."
+    return wav_duration(payload) if payload[:4] == b"RIFF" else mp4_duration(payload)
+
+
+DURATION_COLUMNS = [("duration_s", FloatType(), True, lambda s: round(s, 6) if s is not None else None)]
 
 
 def media_durations(df: DataFrame, id_col: str = "media_id", bin_col: str = "payload") -> DataFrame:
@@ -361,33 +188,13 @@ def media_durations(df: DataFrame, id_col: str = "media_id", bin_col: str = "pay
     no decode (the same dataflow discipline as image_dimensions): RIFF
     chunk walks and ISO-BMFF box walks need a scan, so riff/mp4 rows go
     through ONE Arrow batch pass; every other format never leaves the
-    JVM (NULL projection).  At 100 TB the Python crossing reads only
-    (id, payload) of the audio/video-classified rows."""
+    JVM (NULL projection).  At 100 TB the Python crossing reads only the
+    payloads of the audio/video-classified rows; their id and format
+    pass through as the input's own arrays."""
     base = attach_media_meta(df, id_col, bin_col)
-
-    def batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            durs = [
-                wav_duration(p) if fmt == "riff" else mp4_duration(p)
-                for p, fmt in zip(pdf[bin_col], pdf["format"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "format": pdf["format"],
-                    "duration_s": pd.array(
-                        [round(d, 6) if d is not None else None for d in durs],
-                        dtype="Float32",
-                    ),
-                    "duration_source": "container-header",
-                }
-            )
-
-    av = (
-        base.filter(F.col("format").isin("riff", "mp4"))
-        .select(id_col, bin_col, "format")
-        .mapInPandas(batch, schema=DURATION_SCHEMA)
-    )
+    av_rows = base.filter(F.col("format").isin("riff", "mp4")).select(id_col, "format", F.col(bin_col).alias("text"))
+    av = map_turns(av_rows, map_batches(_duration_of, DURATION_COLUMNS), DURATION_COLUMNS, [id_col, "format"])
+    av = av.withColumn("duration_source", F.lit("container-header"))
     other = base.filter(~F.col("format").isin("riff", "mp4")).select(
         F.col(id_col),
         "format",
@@ -395,6 +202,12 @@ def media_durations(df: DataFrame, id_col: str = "media_id", bin_col: str = "pay
         F.lit(None).cast("string").alias("duration_source"),
     )
     return av.unionByName(other)
+
+
+JPEG_COLUMNS = [
+    ("width", IntegerType(), True, lambda dims: dims[0] if dims else None),
+    ("height", IntegerType(), True, lambda dims: dims[1] if dims else None),
+]
 
 
 def image_dimensions(df: DataFrame, id_col: str = "media_id", bin_col: str = "payload") -> DataFrame:
@@ -419,24 +232,9 @@ def image_dimensions(df: DataFrame, id_col: str = "media_id", bin_col: str = "pa
         F.lit("jvm-header").alias("dim_source"),
     )
 
-    def jpeg_batch(iterator: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in iterator:
-            dims = [jpeg_dimensions(p) for p in pdf[bin_col]]
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "format": "jpeg",
-                    "width": pd.array([d[0] if d else None for d in dims], dtype="Int32"),
-                    "height": pd.array([d[1] if d else None for d in dims], dtype="Int32"),
-                    "dim_source": "sof-scan",
-                }
-            )
-            yield out
-
-    jpeg = (
-        base.filter(F.col("format") == "jpeg")
-        .select(id_col, bin_col)
-        .mapInPandas(jpeg_batch, schema=DIMENSIONS_SCHEMA)
+    jpeg_rows = base.filter(F.col("format") == "jpeg").select(id_col, F.col(bin_col).alias("text"))
+    jpeg = map_turns(jpeg_rows, map_batches(jpeg_dimensions, JPEG_COLUMNS), JPEG_COLUMNS, [id_col]).select(
+        id_col, F.lit("jpeg").alias("format"), "width", "height", F.lit("sof-scan").alias("dim_source")
     )
     other = base.filter(~F.col("format").isin("png", "gif", "jpeg")).select(
         F.col(id_col),

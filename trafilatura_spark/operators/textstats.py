@@ -1,5 +1,6 @@
 """Text-analysis operators for training-data pipelines (column-level,
-JVM-side: pure pyspark.sql.functions, no Python UDFs).
+JVM-side: pure pyspark.sql.functions, no Python UDFs; the n-gram
+lang-id runs on the shared Arrow batch loop).
 
 Each operator has an exact ANSI-SQL twin used by the DuckDB oracle (see
 __spark_entry__.py); both sides alias columns identically.
@@ -9,8 +10,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from ..kernel.langid import LANG_WORDS
+from ..kernel.langid import LANG_WORDS, classify_language
+from .arrow_batches import map_batches, map_turns
 
 # english stopword regex for the quality-scoring ratio (token_stats);
 # language ID itself uses the shared 17-language LANG_WORDS vocabulary
@@ -122,35 +125,26 @@ def lang_id_sql(table: str = "documents", id_col: str = "doc_id", text_col: str 
     """
 
 
+def _language_of(text):
+    return classify_language(text) if text is not None else None
+
+
+LANG_NGRAM_COLUMNS = [("pred_lang", StringType(), True, lambda lang: lang)]
+
+
 def lang_id_ngram(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Character-n-gram language ID over ~53 languages — the kernel's
     Cavnar-Trenkle profile classifier (kernel/langprofiles.py) run as an
-    Arrow-batched mapInPandas column.  Complements the JVM-side 17-language
-    `lang_id` (which stays the cheap whole-table sweep with an exact
-    DuckDB twin); this variant is the full-coverage path, used when the
-    corpus is broader than the marker-word vocabulary.  Oracle: the rank
-    arithmetic has no SQL twin, so the DuckDB side joins the pinned
-    fixture parquet (tools/gen_langid_fixture.py) — a value match proves
-    the live run reproduces the generation-time labels exactly."""
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType(
-        [df.schema[id_col], StructField("pred_lang", StringType(), True)]
-    )
-
-    def batch(iterator):
-        from ..kernel.langid import classify_language
-
-        for pdf in iterator:
-            out = pdf[[id_col]].copy()
-            out["pred_lang"] = [
-                classify_language(t) if isinstance(t, str) else None
-                for t in pdf[text_col]
-            ]
-            yield out
-
-    return df.select(id_col, text_col).mapInPandas(batch, schema=schema)
+    Arrow-batched column on the shared batch loop (arrow_batches.py).
+    Complements the JVM-side 17-language `lang_id` (which stays the
+    cheap whole-table sweep with an exact DuckDB twin); this variant is
+    the full-coverage path, used when the corpus is broader than the
+    marker-word vocabulary.  Oracle: the rank arithmetic has no SQL
+    twin, so the DuckDB side joins the pinned fixture parquet
+    (tools/gen_langid_fixture.py) — a value match proves the live run
+    reproduces the generation-time labels exactly."""
+    fn = map_batches(_language_of, LANG_NGRAM_COLUMNS)
+    return map_turns(df.select(id_col, F.col(text_col).alias("text")), fn, LANG_NGRAM_COLUMNS, [id_col])
 
 
 # Gopher-style quality rules (Rae et al. 2021, §A1.1) — the published

@@ -29,10 +29,11 @@ pyarrow, pyspark and the kernel loaded, ~46 ms per task on 5-200 KB
 pages on a 4-vCPU x86 VM.  ``freeze_import_heap`` collects once and
 freezes the survivors into the collector's permanent generation, which
 no later collection walks, so the daemon's collection walks only
-what the last task left (1-3k objects).  ``operators/extract.py`` calls
-it at the end of its module body: a worker imports that module when it
-unpickles any extraction batch function, before the task's first batch
-exists.  The extraction workers load no pandas, so
+what the last task left (1-3k objects).  ``operators/arrow_batches.py``,
+the batch loop of every Python stage but the streaming state function,
+calls it at the end of its module body: a worker imports that module
+when it unpickles any batch function built on it, before the task's
+first batch exists.  Those workers load no pandas, so
 ``streaming/extract_stream.py``, which imports pandas for its
 ``applyInPandasWithState`` function, freezes again at the end of its
 body: a worker that ran extraction first would otherwise walk pandas'

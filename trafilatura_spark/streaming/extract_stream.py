@@ -164,6 +164,6 @@ def conversation_running_state(
     )
 
 
-# last: pandas is loaded here, after operators/extract.py froze the heap
+# last: pandas is loaded here, after operators/arrow_batches.py froze the heap
 # in a worker that extracted first, and no batch data exists yet
 freeze_import_heap()
