@@ -16,7 +16,7 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
-        # catalog metadata for bucketed-table tests; keep it out of the repo
+        # keep Spark's catalog directory out of the repo
         .config("spark.sql.warehouse.dir", "/tmp/tspark-test-warehouse")
         .appName("trafilatura-spark-tests")
         .getOrCreate()

@@ -92,12 +92,12 @@ def test_relative_canonical_joined():
         '<html><head><link rel="canonical" href="/article/medical-record"/>'
         '<meta name="twitter:url" content="https://example.org"/></head><body></body></html>'
     )
-    assert extract_url(load_html(doc)) == "https://example.org/article/medical-record"
+    assert extract_url(list(load_html(doc).iterdescendants())) == "https://example.org/article/medical-record"
     doc2 = (
         '<html><head><link rel="canonical" href="/p"/>'
         '<meta property="og:url" content="https://example.org"/></head><body></body></html>'
     )
-    assert extract_url(load_html(doc2)) == "https://example.org/p"
+    assert extract_url(list(load_html(doc2).iterdescendants())) == "https://example.org/p"
 
 
 def test_description_itemprop():

@@ -15,7 +15,7 @@ N_CONVS = 30
 @pytest.fixture(scope="module")
 def spark_output(spark):
     df = transcripts_df(spark, N_CONVS, num_slices=4)
-    out = extract_transcripts(salted_repartition(df, 8))
+    out = extract_transcripts(salted_repartition(df))
     rows = out.orderBy("conv_id", "turn_idx").collect()
     return rows
 
@@ -75,7 +75,7 @@ def test_every_turn_has_row(spark, spark_output):
 def test_plan_shape(spark):
     "The physical plan keeps scan-side work out of Python: one Arrow stage."
     df = transcripts_df(spark, 5, num_slices=2)
-    out = extract_transcripts(salted_repartition(df, 4))
+    out = extract_transcripts(salted_repartition(df))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 

@@ -234,23 +234,25 @@ def turn_text(conv_id: str, turn_idx: int) -> str:
     return genre(h % 100_000)
 
 
+def _conversation_rows(k: int, size: int, large_docs: bool) -> Iterator[tuple]:
+    "Conversation ``k``'s rows, its turns in a deterministic shuffled order."
+    conv_id = f"conv{k:08d}"
+    for turn_idx in sorted(range(size), key=lambda i: _h(conv_id, i, "shuffle")):
+        role = _ROLES[turn_idx % 3]
+        h = _h(conv_id, turn_idx, "genre")
+        if large_docs and h % 5000 == 0:
+            text = _genre_large_doc(h % 100_000)
+        else:
+            text = turn_text(conv_id, turn_idx)
+        tool = f"tool{h % 7}" if role == "tool" else None
+        yield (conv_id, turn_idx, role, text, tool, _EPOCH + timedelta(minutes=turn_idx))
+
+
 def generate_rows(n_convs: int, large_docs: bool = False) -> Iterator[tuple]:
     """Yield (conv_id, turn_idx, role, text, tool, ts) in shuffled turn order
     (stable-ordering logic must actually be exercised: FIXTURES.md §1)."""
     for k, size in enumerate(conversation_sizes(n_convs)):
-        conv_id = f"conv{k:08d}"
-        # deterministic shuffle: order turns by hash
-        order = sorted(range(size), key=lambda i: _h(conv_id, i, "shuffle"))
-        for turn_idx in order:
-            role = _ROLES[turn_idx % 3]
-            h = _h(conv_id, turn_idx, "genre")
-            if large_docs and h % 5000 == 0:
-                text = _genre_large_doc(h % 100_000)
-            else:
-                text = turn_text(conv_id, turn_idx)
-            tool = f"tool{h % 7}" if role == "tool" else None
-            ts = _EPOCH + timedelta(minutes=turn_idx)
-            yield (conv_id, turn_idx, role, text, tool, ts)
+        yield from _conversation_rows(k, size, large_docs)
 
 
 TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -284,18 +286,94 @@ def transcripts_df(spark, n_convs: int, large_docs: bool = False, num_slices: in
         lo, hi = bound
         sizes = list(conversation_sizes(hi))[lo:hi]
         for k, size in enumerate(sizes, start=lo):
-            conv_id = f"conv{k:08d}"
-            order = sorted(range(size), key=lambda i: _h(conv_id, i, "shuffle"))
-            for turn_idx in order:
-                role = _ROLES[turn_idx % 3]
-                h = _h(conv_id, turn_idx, "genre")
-                if large_docs and h % 5000 == 0:
-                    text = _genre_large_doc(h % 100_000)
-                else:
-                    text = turn_text(conv_id, turn_idx)
-                tool = f"tool{h % 7}" if role == "tool" else None
-                ts = _EPOCH + timedelta(minutes=turn_idx)
-                yield (conv_id, turn_idx, role, text, tool, ts)
+            yield from _conversation_rows(k, size, large_docs)
 
     rdd = spark.sparkContext.parallelize(ranges, len(ranges)).flatMap(gen_range)
     return spark.createDataFrame(rdd, schema)
+
+
+# --- metadata ladder corpus ---------------------------------------------------
+# Pages built from kernel/metadata.py's trigger vocabularies, so every
+# Metadata field is set on some page and each field's candidates come
+# from <head>, from <body>, or both.  Each piece is in or out of a page
+# by its own hash; ``{n}`` is the page number.
+
+_LADDER_METAS = (
+    '<meta property="og:title" content="{t}">', '<meta property="og:description" content="{s}">',
+    '<meta property="og:site_name" content="{site}">', '<meta property="og:image" content="https://{site}/i/{n}.jpg">',
+    '<meta property="og:type" content="article">', '<meta property="og:url" content="https://{site}/post/{n}">',
+    '<meta property="og:author" content="{a}">', '<meta name="author" content="{a}">',
+    '<meta name="description" content="{s}">', '<meta name="keywords" content="{w}, {w2}">',
+    '<meta name="twitter:site" content="@{w}">', '<meta name="twitter:url" content="https://{site}/t/{n}">',
+    '<meta name="dc.title" content="{t}">', '<meta name="twitter:image" content="https://{site}/tw/{n}.png">',
+    '<meta property="article:tag" content="{w2}">', '<meta property="article:author" content="{a}">',
+    '<meta property="article:publisher" content="{w} Press">', '<meta property="article:section" content="{w}">',
+    '<meta name="subject" content="{w2}">', '<meta itemprop="author" content="{a}">',
+    '<meta itemprop="headline" content="{t}">', '<meta itemprop="description" content="{s}">',
+    '<meta property="article:published_time" content="{d}">', '<meta name="article:modified_time" content="{d}">',
+    "<title>{t} | {site}</title>", "<title>Home - {w2}</title>", "<title>{w2} and {w}</title>",
+    "<title>www.{site} » {t}</title>",
+    '<script type="application/ld+json">{{"@type": "NewsArticle", "headline": "{t}", "datePublished": "{d}", '
+    '"author": {{"@type": "Person", "name": "{a}"}}, "publisher": {{"name": "{w} Media"}}}}</script>',
+    '<script type="application/ld+json">{{"@graph": [{{"@type": "BlogPosting", "description": "{s}", '
+    '"author": [{{"name": "{a}"}}], "headline": "{t}"}}]}}</script>',
+)
+_LADDER_LINKS = (
+    '<link rel="canonical" href="https://{site}/2019/05/{day}/{w}">', '<link rel="canonical" href="/2020/01/{day}/{w}">',
+    '<base href="https://{site}/base/">', '<link rel="alternate" hreflang="x-default" href="https://{site}/x/{n}">',
+    '<link rel="canonical" href="not a url">',
+)
+_LADDER_BODY = (
+    "<h1>{t}</h1>", "<h1>{w} {w2} today</h1>", "<h2>{s}</h2>", "<h2>{w2} notes</h2>", '<h2 class="entry-title">{t}</h2>',
+    '<h1 class="post-title">{t}</h1>', '<div class="post-title">{t}</div>', '<h3 id="page-title">{t}</h3>',
+    '<h2 itemprop="headline">{t}</h2>', '<span class="author">{a}</span>', '<a rel="author" href="/u/{n}">By {a}</a>',
+    '<div class="byline">{a}</div>', '<p class="author-name">{a}</p>', "<author>{a}</author>",
+    '<span itemprop="author">{a}</span>', '<div data-component="Byline">Words by {a}</div>',
+    '<span class="writer">{a}</span>', '<div class="comments"><span class="author">{a2}</span></div>',
+    '<section id="comments"><div class="byline">{a2}</div></section>',
+    '<div class="sidebar"><p class="author">{a2}</p></div>', '<figure><span class="author">{a2}</span></figure>',
+    '<div class="post-meta"><a href="/category/{w}/">{w}</a><a href="/about/">About</a></div>',
+    '<p class="postmeta"><a href="/categories/{w2}/">{w2}</a></p>',
+    '<footer class="entry-meta"><a href="/cat/{w}">{w}</a></footer>',
+    '<span class="cat-links"><a href="/category/{w2}/">{w2}</a></span>',
+    '<header class="entry-header"><a href="/category/{w}/">{w}</a></header>',
+    '<div class="row"><a href="/topics/{w}">{w}</a></div>',
+    '<div class="tags"><a href="/tag/{w}/">{w}</a><a href="/tags/{w2}/">{w2}</a></div>',
+    '<p class="entry-tags"><a href="/tag/{w2}/">{w2}</a></p>', '<div class="jp-relatedposts"><a href="/tag/{w}/">{w}</a></div>',
+    '<span class="tags-links"><a href="/tags/{w}/">{w}</a></span>', '<div class="topics"><a href="/misc/{w}/">{w}</a></div>',
+    '<a rel="license" href="https://creativecommons.org/licenses/by-sa/4.0/">CC</a>',
+    '<footer><a href="/legal">Licensed under Creative Commons BY-NC 3.0</a></footer>',
+    '<div class="site-footer"><a href="https://creativecommons.org/licenses/by-nc-nd/2.0/">terms</a></div>',
+    '<footer><a href="/imprint">Imprint</a></footer>', '<a rel="license" href="/license">Some License</a>',
+    '<time datetime="{d}">{d}</time>', '<abbr data-utime="1500000000" title="x">then</abbr>',
+    '<span class="post-date">{day} March 2021</span>', '<abbr title="{d}">date</abbr>', "<p>Copyright 2016 {w}</p>",
+)
+
+
+def ladder_page(n: int) -> str:
+    "One ladder page; ``n`` alone decides its content."
+    key = f"ladder{n:04d}"
+    h = _h(key, 0, "ladder")
+    w, w2 = _WORDS[h % 40], _WORDS[(h >> 6) % 40]
+    fill = dict(
+        n=n, w=w, w2=w2, t=_sentence(h % 10_000, 5)[:-1], s=_sentence((h >> 9) % 10_000, 12),
+        a=f"{_WORDS[(h >> 12) % 40].title()} {_WORDS[(h >> 18) % 40].title()}",
+        a2=f"{_WORDS[(h >> 24) % 40].title()} Other", site=f"{w}.example.org",
+        day=1 + (h >> 30) % 28, d=f"20{12 + (h >> 35) % 10}-0{1 + (h >> 39) % 9}-{10 + (h >> 43) % 18}",
+    )
+
+    def some(pieces, salt, odds):
+        return "".join(p for i, p in enumerate(pieces) if _h(key, i, salt) % odds == 0).format(**fill)
+
+    # every fifth page is bare (no metas, JSON-LD or <title>), so the
+    # title and author ladders run down to their last rungs
+    bare = n % 5 == 4
+    head = some(_LADDER_LINKS, "head links", 3) + ("" if bare else some(_LADDER_METAS, "head", 4))
+    late = some(_LADDER_LINKS, "body links", 4) + ("" if bare else some(_LADDER_METAS, "body", 6))
+    body = f"<p>{_paragraph(h % 5000, 2, 10)}</p>{some(_LADDER_BODY, 'body', 5)}"
+    return f"<!DOCTYPE html><html><head>{head}</head><body><article>{body}</article>{late}</body></html>"
+
+
+def ladder_rows(n_pages: int) -> list:
+    "(key, html) for ladder pages 0..n_pages-1."
+    return [(f"ladder{n:04d}", ladder_page(n)) for n in range(n_pages)]

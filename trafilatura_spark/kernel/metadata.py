@@ -66,7 +66,6 @@ METANAME_IMAGE = {
 }
 PROPERTY_AUTHOR = {"author", "article:author"}
 TWITTER_ATTRS = {"twitter:site", "application-name"}
-EXTRA_META = {"charset", "http-equiv", "property"}
 
 OG_PROPERTIES = {
     "og:title": "title",
@@ -211,21 +210,10 @@ def normalize_tags(tags: str) -> str:
     return ", ".join(filter(None, tags.split(", ")))
 
 
-def _head_metas(tree: Element):
-    head = tree.find("head")
-    metas = list(head.iterdescendants("meta")) if head is not None else []
-    # body-parsed metas too (parser may keep them in body for fragments);
-    # membership by identity (Element has no __eq__), via an id-set so the
-    # dedup is O(n) instead of O(n*m)
-    seen = {id(m) for m in metas}
-    metas += [m for m in tree.iterdescendants("meta") if id(m) not in seen]
-    return metas
-
-
-def extract_opengraph(tree: Element) -> dict:
+def extract_opengraph(metas: list) -> dict:
     "OpenGraph meta tags (metadata.py:185-204)."
     result = dict.fromkeys(("title", "author", "url", "description", "sitename", "image", "pagetype"))
-    for elem in _head_metas(tree):
+    for elem in metas:
         prop, content = elem.get("property"), elem.get("content")
         if not prop or not str(prop).startswith("og:"):
             continue
@@ -239,10 +227,10 @@ def extract_opengraph(tree: Element) -> dict:
     return result
 
 
-def examine_meta(tree: Element) -> Metadata:
+def examine_meta(elements: list) -> Metadata:
     "Search meta tags (metadata.py:206-299)."
-    og = extract_opengraph(tree)
-    metadata = Metadata(**{k: v for k, v in og.items() if k != "url"}, url=og.get("url"))
+    metas = [e for e in elements if e.tag == "meta"]
+    metadata = Metadata(**extract_opengraph(metas))
 
     if all((metadata.title, metadata.author, metadata.url, metadata.description,
             metadata.sitename, metadata.image)):
@@ -251,7 +239,7 @@ def examine_meta(tree: Element) -> Metadata:
     tags: list = []
     backup_sitename = None
 
-    for elem in _head_metas(tree):
+    for elem in metas:
         content_attr = HTML_STRIP_TAGS.sub("", elem.get("content", "") or "").strip()
         if not content_attr:
             continue
@@ -349,9 +337,9 @@ def _walk_jsonld(node, metadata: Metadata) -> None:
             _walk_jsonld(node[container], metadata)
 
 
-def extract_meta_json(tree: Element, metadata: Metadata) -> Metadata:
-    for elem in tree.iterdescendants("script"):
-        if elem.get("type") not in ("application/ld+json", "application/settings+json"):
+def extract_meta_json(elements: list, metadata: Metadata) -> Metadata:
+    for elem in elements:
+        if elem.tag != "script" or elem.get("type") not in ("application/ld+json", "application/settings+json"):
             continue
         if not elem.text:
             continue
@@ -380,12 +368,12 @@ _AUTHOR_DISCARD_CLASS_RE = re.compile(
 )
 
 
-def _title_xpath_matches(tree: Element) -> list:
-    "TITLE_XPATHS ladder; all three passes collected in one walk."
+def _title_xpath_matches(elements: list) -> list:
+    "TITLE_XPATHS ladder; all three passes collected in one pass."
     first = []
     second = []
     third = []
-    for el in tree.iterdescendants():
+    for el in elements:
         tag = el.tag
         if tag in ("h1", "h2"):
             if (
@@ -405,12 +393,12 @@ _AUTHOR_XPATH_TAGS_1 = frozenset(("a", "address", "div", "link", "p", "span", "s
 _AUTHOR_XPATH_TAGS_2 = frozenset(("a", "div", "h3", "h4", "p", "span"))
 
 
-def _author_xpath_matches(tree: Element) -> list:
-    "AUTHOR_XPATHS ladder; all three passes collected in one walk."
+def _author_xpath_matches(elements: list) -> list:
+    "AUTHOR_XPATHS ladder; all three passes collected in one pass."
     first = []
     second = []
     third = []
-    for el in tree.iterdescendants():
+    for el in elements:
         tag = el.tag
         if tag in _AUTHOR_XPATH_TAGS_1:
             if tag == "author":
@@ -442,11 +430,11 @@ def _author_xpath_matches(tree: Element) -> list:
 _AUTHOR_DISCARD_TAGS = frozenset(("a", "div", "section", "span"))
 
 
-def _author_discard_matches(tree: Element) -> list:
-    "Both discard passes collected in one walk."
+def _author_discard_matches(elements: list) -> list:
+    "Both discard passes collected in one pass."
     out: list = []
     out2: list = []
-    for el in tree.iterdescendants():
+    for el in elements:
         tag = el.tag
         if tag in _AUTHOR_DISCARD_TAGS:
             if (
@@ -461,7 +449,7 @@ def _author_discard_matches(tree: Element) -> list:
     return [out, out2]
 
 
-def extract_metainfo(tree: Element, match_passes: list, len_limit: int = 200) -> Optional[str]:
+def extract_metainfo(match_passes: list, len_limit: int = 200) -> Optional[str]:
     for matches in match_passes:
         for elem in matches:
             content = trim(" ".join(elem.itertext()))
@@ -470,12 +458,10 @@ def extract_metainfo(tree: Element, match_passes: list, len_limit: int = 200) ->
     return None
 
 
-def examine_title_element(tree: Element):
+def examine_title_element(elements: list):
+    "The first <title>, which is <head>'s when it has one (see extract_metadata)."
     title = ""
-    head = tree.find("head")
-    title_element = head.find(".//title") if head is not None else None
-    if title_element is None:
-        title_element = tree.find(".//title")
+    title_element = next((e for e in elements if e.tag == "title"), None)
     if title_element is not None:
         title = trim(title_element.text_content())
         match = HTMLTITLE_REGEX.match(title)
@@ -484,17 +470,17 @@ def examine_title_element(tree: Element):
     return title, None, None
 
 
-def extract_title(tree: Element) -> Optional[str]:
+def extract_title(elements: list) -> Optional[str]:
     "Title ladder (metadata.py:330-358)."
-    h1_results = list(tree.iterdescendants("h1"))
+    h1_results = [e for e in elements if e.tag == "h1"]
     if len(h1_results) == 1:
         title = trim(h1_results[0].text_content())
         if title:
             return title
-    title = extract_metainfo(tree, _title_xpath_matches(tree)) or ""
+    title = extract_metainfo(_title_xpath_matches(elements)) or ""
     if title:
         return title
-    title, first, second = examine_title_element(tree)
+    title, first, second = examine_title_element(elements)
     for t in (first, second, title):
         if t and "." not in t:
             return t
@@ -502,33 +488,38 @@ def extract_title(tree: Element) -> Optional[str]:
         title = trim(h1_result.text_content())
         if title:
             return title
-    h2s = list(tree.iterdescendants("h2"))
-    if h2s:
-        title = trim(h2s[0].text_content())
+    h2 = next((e for e in elements if e.tag == "h2"), None)
+    if h2 is not None:
+        title = trim(h2.text_content())
     return title or None
 
 
-def extract_author(tree: Element) -> Optional[str]:
+def extract_author(tree: Element, elements: list) -> Optional[str]:
     # the copy exists only so the discard-prune cannot damage the caller's
     # tree; when nothing matches the discard rules (most pages), pruning
-    # is a no-op and the read-only ladder can run on the original directly
-    if any(_author_discard_matches(tree)):
-        subtree = tree.copy_tree()
-        subtree = prune_unwanted_nodes(subtree, _author_discard_matches(subtree))
-    else:
-        subtree = tree
-    author = extract_metainfo(subtree, _author_xpath_matches(subtree), len_limit=120)
+    # is a no-op and the read-only ladder reads the caller's list directly
+    if any(_author_discard_matches(elements)):
+        copy = tree.copy_tree()
+        copied = list(copy.iterdescendants())
+        prune_unwanted_nodes(copy, _author_discard_matches(copied))
+        # the pruned copy's elements in document order: a pruned element
+        # is detached, so it and everything below it drop out
+        kept = {id(copy)}
+        elements = []
+        for el in copied:
+            if id(el.getparent()) in kept:
+                kept.add(id(el))
+                elements.append(el)
+    author = extract_metainfo(_author_xpath_matches(elements), len_limit=120)
     if author:
         author = normalize_authors(None, author)
     return author
 
 
-def extract_url(tree: Element, default_url: Optional[str] = None) -> Optional[str]:
+def extract_url(elements: list, default_url: Optional[str] = None) -> Optional[str]:
     "Canonical/base/alternate links (metadata.py:370-395)."
     url = None
-    head = tree.find("head")
-    links = list(head.iterdescendants("link", "base")) if head is not None else []
-    links += [l for l in tree.iterdescendants("link", "base") if l not in links]
+    links = [e for e in elements if e.tag in ("link", "base")]
     for selector in (
         lambda e: e.tag == "link" and e.get("rel") == "canonical",
         lambda e: e.tag == "base",
@@ -539,7 +530,7 @@ def extract_url(tree: Element, default_url: Optional[str] = None) -> Optional[st
         if url:
             break
     if url and url.startswith("/"):
-        for element in _head_metas(tree):
+        for element in (e for e in elements if e.tag == "meta"):
             attrtype = element.get("name") or element.get("property") or ""
             content = element.get("content") or ""
             if attrtype.startswith(("og:", "twitter:")) and content.startswith("http"):
@@ -562,8 +553,8 @@ def extract_domain(url: str) -> Optional[str]:
     return netloc or None
 
 
-def extract_sitename(tree: Element) -> Optional[str]:
-    _, *parts = examine_title_element(tree)
+def extract_sitename(elements: list) -> Optional[str]:
+    _, *parts = examine_title_element(elements)
     return next((part for part in parts if part and "." in part), None)
 
 
@@ -571,20 +562,20 @@ _CAT_META_RE = re.compile(r"^(?:post-?info|post-?meta|meta|entry-meta|entry-info
 _TAG_META_RE = re.compile(r"^(?:tag|postmeta|meta)")
 
 
-def _links_under(containers, tree) -> list:
+def _links_under(containers) -> list:
     out = []
     for el in containers:
         out.extend(a for a in el.iterdescendants("a") if "href" in a.attrib)
     return out
 
 
-def _catstag_matches(metatype: str, tree: Element) -> list:
+def _catstag_matches(metatype: str, elements: list) -> list:
     """CATEGORIES_XPATHS / TAGS_XPATHS ladders (xpaths.py:385-415).
-    The per-pass container lists are collected in ONE walk (the tree is
-    read-only here); link extraction per pass is unchanged."""
+    The per-pass container lists are collected in one pass; link
+    extraction per pass is unchanged."""
     if metatype == "category":
         containers: list = [[], [], [], [], [], []]
-        for e in tree.iterdescendants():
+        for e in elements:
             tag = e.tag
             if tag == "div":
                 cls = _fa(e, "class")
@@ -608,7 +599,7 @@ def _catstag_matches(metatype: str, tree: Element) -> list:
                     containers[4].append(e)
     else:
         containers = [[], [], [], []]
-        for e in tree.iterdescendants():
+        for e in elements:
             tag = e.tag
             cls = _fa(e, "class")
             if tag == "div":
@@ -620,21 +611,21 @@ def _catstag_matches(metatype: str, tree: Element) -> list:
                 containers[1].append(e)
             if cls == "entry-meta" or "topics" in cls or "tags-links" in cls:
                 containers[3].append(e)
-    return [_links_under(c, tree) for c in containers]
+    return [_links_under(c) for c in containers]
 
 
-def extract_catstags(metatype: str, tree: Element) -> list:
+def extract_catstags(metatype: str, elements: list) -> list:
     "Category/tag links gated by href pattern (metadata.py:404-422)."
     results: list = []
     regexpr = "/" + metatype.rstrip("y") + "(?:y|ies|s)?/"
-    for matches in _catstag_matches(metatype, tree):
+    for matches in _catstag_matches(metatype, elements):
         results.extend(
             elem.text_content() for elem in matches if re.search(regexpr, elem.attrib.get("href", ""))
         )
         if results:
             break
     if metatype == "category" and not results:
-        for element in _head_metas(tree):
+        for element in (e for e in elements if e.tag == "meta"):
             if (element.get("property") == "article:section"
                     or "subject" in (element.get("name") or "")) and element.get("content"):
                 results.append(element.attrib["content"])
@@ -654,12 +645,12 @@ def parse_license_element(element: Element, strict: bool = False) -> Optional[st
     return None
 
 
-def extract_license(tree: Element) -> Optional[str]:
-    "License links (metadata.py:425-455); containers collected in one walk."
+def extract_license(elements: list) -> Optional[str]:
+    "License links (metadata.py:425-455); containers collected in one pass."
     rel_license = []
     footers = []
     footer_divs = []
-    for el in tree.iterdescendants():
+    for el in elements:
         tag = el.tag
         if tag == "a":
             if el.get("rel") == "license" and "href" in el.attrib:
@@ -672,11 +663,7 @@ def extract_license(tree: Element) -> Optional[str]:
         result = parse_license_element(element, strict=False)
         if result is not None:
             return result
-    candidates = []
-    for footer in footers:
-        candidates.extend(a for a in footer.iterdescendants("a") if "href" in a.attrib)
-    for div in footer_divs:
-        candidates.extend(a for a in div.iterdescendants("a") if "href" in a.attrib)
+    candidates = _links_under(footers) + _links_under(footer_divs)
     return next(
         (
             result
@@ -920,30 +907,6 @@ _ANY_DIGIT_RE = re.compile(r"\d")
 _DATE_HINT_TAGS = frozenset(("span", "div", "p", "li", "em", "strong", "font"))
 
 
-def _scan_text(tree: Element, limit: int = 100_000) -> str:
-    """Raw-source-equivalent scan text: element text/tails, script
-    bodies, and date-bearing attribute values, space-separated.
-    htmldate's search_page receives the raw HTML string, so publish
-    stamps living in dataLayer pushes or content= attributes vote in
-    the free-text rung; joining on spaces also keeps element boundaries
-    as token boundaries (text_content() glues 'Berlin' + '2. Oktober'
-    into 'Berlin2.', hiding the day digit behind the regex's \\b)."""
-    parts = []
-    size = 0
-    for el in tree.iter("*"):
-        for piece in (
-            el.text,
-            el.tail,
-            *(el.get(a) for a in _SCAN_ATTRS),
-        ):
-            if piece:
-                parts.append(piece)
-                size += len(piece) + 1
-        if size >= limit:
-            break
-    return " ".join(parts)[:limit]
-
-
 def find_date(
     tree: Element,
     url: Optional[str] = None,
@@ -987,7 +950,7 @@ def find_date(
     abbr_els = []       # rung 2 (unix-time / title attrs)
     hint_els = []       # rung 3 (date-classed/-id'd elements, attrs present)
     link_canonical = None  # rung 4 fallback when no URL was passed
-    scan_parts = []     # rung 6/7 free-text scan (_scan_text equivalent)
+    scan_parts = []     # rung 6/7 free-text scan: texts, tails and _SCAN_ATTRS values
     scan_size = 0
     scan_open = True
     for el in tree.iter("*"):
@@ -1245,25 +1208,31 @@ def extract_metadata(
     if tree is None:
         return Metadata()
 
-    metadata = examine_meta(tree)
+    # Every field extractor but find_date reads this one document-order
+    # list, built per call; nothing may change the tree until it returns.
+    # The parser always makes <head> the root's first child, so <head>'s
+    # elements come first here: the first match in the list is the
+    # reference's head-first match.
+    elements = list(tree.iterdescendants())
+    metadata = examine_meta(elements)
     if metadata.author and " " not in metadata.author:
         metadata.author = None
 
     try:
-        metadata = extract_meta_json(tree, metadata)
+        metadata = extract_meta_json(elements, metadata)
     except Exception:
         pass
 
     if not metadata.title:
-        metadata.title = extract_title(tree)
+        metadata.title = extract_title(elements)
     if author_blacklist:
         metadata.author = check_authors(metadata.author, author_blacklist)
     if not metadata.author:
-        metadata.author = extract_author(tree)
+        metadata.author = extract_author(tree, elements)
     if author_blacklist:
         metadata.author = check_authors(metadata.author, author_blacklist)
     if not metadata.url:
-        metadata.url = extract_url(tree, default_url)
+        metadata.url = extract_url(elements, default_url)
     if metadata.url:
         metadata.hostname = extract_domain(metadata.url)
     # a JSON-LD/meta date set upstream is still subject to the window:
@@ -1276,7 +1245,7 @@ def extract_metadata(
             min_date=min_date, max_date=max_date,
         )
     if not metadata.sitename:
-        metadata.sitename = extract_sitename(tree)
+        metadata.sitename = extract_sitename(elements)
     if metadata.sitename:
         metadata.sitename = metadata.sitename.lstrip("@")
         if metadata.sitename and "." not in metadata.sitename and not metadata.sitename[0].isupper():
@@ -1286,10 +1255,10 @@ def extract_metadata(
         if mymatch:
             metadata.sitename = mymatch[1]
     if not metadata.categories:
-        metadata.categories = extract_catstags("category", tree)
+        metadata.categories = extract_catstags("category", elements)
     if not metadata.tags:
-        metadata.tags = extract_catstags("tag", tree)
-    metadata.license = extract_license(tree)
+        metadata.tags = extract_catstags("tag", elements)
+    metadata.license = extract_license(elements)
 
     # trim all string fields (Document.clean_and_trim analog)
     for attr in ("title", "author", "url", "hostname", "description", "sitename",

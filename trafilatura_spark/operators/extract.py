@@ -154,9 +154,10 @@ def make_extract_batch_fn(options: Options = DEFAULT_OPTIONS):
     return map_batches(lambda text: extract_one_result(text, options), CONTENT_COLUMNS)
 
 
-def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
+def salted_repartition(df: DataFrame) -> DataFrame:
     """Repartition on hash(conv_id, turn-bucket) so heavy conversations
-    spread across partitions (north_rule: conv_id-salted repartitioning).
+    spread across partitions (north_rule: conv_id-salted repartitioning);
+    the partition count is Spark's (``spark.sql.shuffle.partitions``).
 
     Extraction is per-turn, so co-locating a conversation is unnecessary;
     the salt prevents the opposite failure (one giant conv_id in one
@@ -165,8 +166,6 @@ def salted_repartition(df: DataFrame, num_partitions: Optional[int] = None) -> D
     skewed or badly split applies it in front of them.
     """
     salt = F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS))
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("conv_id"), salt)
     return df.repartition(F.col("conv_id"), salt)
 
 
