@@ -114,6 +114,20 @@ def test_wide_table_row_is_linear():
     assert cpu <= 3.0, f"{cpu:.2f} s of CPU for one 40,000-cell row"
 
 
+def test_wide_list_is_linear():
+    # one list of 40,000 items: handle_lists appends each leaf item twice,
+    # as the reference does, and the second append removed the item from
+    # the end of a list by a scan of the whole list, ~13-15 s of CPU;
+    # re-appending the last child returns at once, ~1.9 s on one x86 core
+    ul = "<html><body><article><ul>" + "".join(f"<li>item {i}</li>" for i in range(40_000)) + "</ul></article></body></html>"
+    t0 = time.process_time()
+    r = extract_one_result(ul, DEFAULT_OPTIONS, timeout=None)
+    cpu = time.process_time() - t0
+    assert (r.tier, r.chars_kept) == ("readability", 508889)
+    assert hashlib.sha256(r.text.encode()).hexdigest().startswith("a0a3d2901a1bad62")
+    assert cpu <= 4.0, f"{cpu:.2f} s of CPU for one 40,000-item list"
+
+
 def _pdf(content: bytes, encrypt: bytes = b"") -> str:
     "One-page PDF with ``content`` as its uncompressed stream, optionally an /Encrypt dictionary."
     return (

@@ -3,6 +3,7 @@
 from trafilatura_spark.kernel.dom import (
     Element,
     delete_element,
+    iter_outside,
     parse_html,
     strip_elements,
     strip_tags,
@@ -94,6 +95,22 @@ def test_copy_tree_detached():
     copy[0][0].text = "changed"
     assert body[0][0].text == "a"
     assert copy.getparent() is None
+
+
+def test_append_of_the_last_child_keeps_the_tree():
+    body = parse_body("<p>a</p><p>b</p>")
+    first, last = body[0], body[1]
+    body.append(last)
+    assert list(body) == [first, last] and last.getparent() is body
+    body.append(first)  # a child that is not last still moves to the end
+    assert list(body) == [last, first] and first.getparent() is body
+
+
+def test_iter_outside_yields_skipped_roots_but_not_their_subtrees():
+    body = parse_body("<div><p>a</p><aside><p>b</p></aside></div><p>c</p>")
+    aside = body.find(".//aside")
+    assert [el.tag for el in iter_outside(body, {aside})] == ["div", "p", "aside", "p"]
+    assert list(iter_outside(body, set())) == list(body.iterdescendants())
 
 
 def test_misnested_recovery():

@@ -377,3 +377,42 @@ def ladder_page(n: int) -> str:
 def ladder_rows(n_pages: int) -> list:
     "(key, html) for ladder pages 0..n_pages-1."
     return [(f"ladder{n:04d}", ladder_page(n)) for n in range(n_pages)]
+
+
+# --- cascade branch corpus ----------------------------------------------------
+# Pages for the cascade's rarer branches, kept out of generate_rows (the
+# bench corpus and the oracle fixtures): overall discards holding >6/7 of
+# the text (the prune is undone), every <p> inside an element that tree
+# cleaning deletes (recall mode deletes nothing), escalating
+# DiscussionForumPosting pages, wide <ul>/<ol> lists.
+
+def branch_page(n: int) -> str:
+    "One branch page; ``n`` alone decides its kind (``n % 4``) and content."
+    h = _h(f"branch{n:04d}", 0, "branch")
+    s = [_sentence((h >> k) % 5000, 4 + (h >> k) % 30) for k in range(0, 40, 8)]
+    long = _long_text((h >> 8) % 5000, 300 + (h >> 12) % 2500)
+    head = ""
+    if n % 4 == 0:
+        hidden = f'<div class="hidden">{s[1]}</div>' if h % 3 == 0 else ""
+        share = f'<section class="share-box"><p>{s[2]}</p></section>' if h % 5 < 2 else ""
+        body = (
+            f"<article><h1>{s[0]}</h1><p>{_paragraph(h % 5000, 1 + h % 3, 6 + (h >> 4) % 10)}</p>"
+            f'<div class="sidebar"><p>{long}</p>{hidden}</div>{s[3] * (h % 2)}{share}</article><p>{s[4]}</p>'
+        )
+    elif n % 4 == 1:
+        outside = f"<p>{s[0]}</p>" if h % 3 == 0 else ""
+        body = f"<div><aside><p>{s[1]}</p></aside><div>{long[:1500]}</div><form><p>{s[2]}</p></form>{outside}</div>"
+    elif n % 4 == 2:
+        head = '<script type="application/ld+json">{"@type":"DiscussionForumPosting"}</script>'
+        replies = "".join(f'<div class="comment"><p>{x}</p></div>' for x in s[: h % 4])
+        body = f'{_genre_recall_escalation(h % 100_000)}<div class="comments">{replies}</div>'
+    else:
+        tag = "ol" if h % 2 else "ul"
+        items = "".join(f"<li><b>{i}</b> {_sentence(h % 5000 + i, 6)}</li>" for i in range(200 + h % 1300))
+        body = f"<article><h2>{s[0]}</h2><{tag}>{items}</{tag}></article>"
+    return f"<html><head>{head}</head><body>{body}</body></html>"
+
+
+def branch_rows(n_pages: int) -> list:
+    "(key, html) for branch pages 0..n_pages-1."
+    return [(f"branch{n:04d}", branch_page(n)) for n in range(n_pages)]

@@ -13,7 +13,7 @@ from typing import Callable, Iterable, Optional
 from urllib.parse import urlsplit
 
 from .dedup_state import duplicate_test
-from .dom import Element, delete_element, splice_matches as _splice_all, strip_tags
+from .dom import Element, delete_element, iter_outside, splice_matches as _splice_all, strip_tags
 from .selectors import basic_clean_matches
 from .settings import (
     CUT_EMPTY_ELEMS,
@@ -57,7 +57,7 @@ def tree_cleaning(tree: Element, options: Options) -> Element:
     # remove delete candidates — except the one tag on both lists (ins),
     # whose splice leaves its delete a parentless no-op exactly like the
     # reference's strip-then-rescan order.  Splices still run before the
-    # recall probe/copy and the deletions, preserving the sequence.
+    # recall probe and the deletions, preserving the sequence.
     strip_set = frozenset(stripping_list)
     delete_set = frozenset(cleaning_list)
     strip_matches: list = []
@@ -70,21 +70,20 @@ def tree_cleaning(tree: Element, options: Options) -> Element:
             by_tag[t].append(element)
     _splice_all(tree, strip_matches)
 
-    def _apply_deletes() -> None:
+    # recall mode undoes the deletions when they would leave a tree that
+    # has a <p> without one (the reference deletes on a copy and restores
+    # it); here that is decided before deleting, so nothing is copied
+    undone = False
+    if options.focus == "recall" and tree.find(".//p") is not None:
+        doomed = {element for elements in by_tag.values() for element in elements}
+        undone = not any(el.tag == "p" and el not in doomed for el in iter_outside(tree, doomed))
+    if not undone:
         # tag-by-tag in list order for determinism (reference iterates
         # per tag, htmlprocessing.py:77-80); deleting an element already
         # inside a detached subtree is a no-op on the output
         for tag in cleaning_list:
             for element in by_tag[tag]:
                 delete_element(element)
-
-    if options.focus == "recall" and tree.find(".//p") is not None:
-        tcopy = tree.copy_tree()
-        _apply_deletes()
-        if tree.find(".//p") is None:
-            tree = tcopy
-    else:
-        _apply_deletes()
 
     return prune_html(tree, options.focus)
 
@@ -102,27 +101,13 @@ def prune_html(tree: Element, focus: str = "balanced") -> Element:
     return tree
 
 
-def prune_unwanted_nodes(
-    tree: Element, match_passes: Iterable, with_backup: bool = False
-) -> Element:
-    """Delete nodes matched by each selector pass; optionally restore a
-    backup when >6/7 of the text would be lost (htmlprocessing.py:95-112).
-
-    ``match_passes`` is either a list of pre-computed element lists or a
-    list of callables (tree) -> list[Element].
-    """
-    if with_backup:
-        old_len = len(tree.text_content())
-        backup = tree.copy_tree()
-
-    for matcher in match_passes:
-        matches = matcher(tree) if callable(matcher) else matcher
+def prune_unwanted_nodes(tree: Element, match_passes: Iterable) -> Element:
+    """Delete the elements of each pass, a list of matches collected before
+    any deletion (htmlprocessing.py:95-112; its undo when >6/7 of the text
+    would go is decided beforehand by handlers._prune_overall_discards)."""
+    for matches in match_passes:
         for subtree in matches:
             delete_element(subtree)
-
-    if with_backup:
-        new_len = len(tree.text_content())
-        return tree if new_len > old_len / 7 else backup
     return tree
 
 

@@ -52,8 +52,6 @@ _BLOCK_STARTERS = frozenset(
 # an open <p> is closed by any block starter
 _P_CLOSERS = _BLOCK_STARTERS
 
-_WS_ONLY = re.compile(r"^\s*$")
-
 _ref = weakref.ref
 
 
@@ -96,11 +94,14 @@ class Element:
 
     # --- structure -----------------------------------------------------------
     def append(self, child: "Element") -> None:
+        children = self._children
+        if children and children[-1] is child:
+            return  # already the last child: moving it changes nothing, as in lxml
         parent = child.getparent()
         if parent is not None:
             parent._children.remove(child)
         child._parent = _ref(self)
-        self._children.append(child)
+        children.append(child)
 
     def extend(self, children) -> None:
         for c in list(children):
@@ -149,20 +150,9 @@ class Element:
     # --- traversal -----------------------------------------------------------
     def iter(self, *tags: str) -> Iterator["Element"]:
         "Document-order traversal including self; optionally filtered by tag."
-        if not tags or tags == ("*",):
+        if not tags or tags == ("*",) or self.tag in tags:
             yield self
-            yield from self.iterdescendants()
-            return
-        tagset = frozenset(tags)
-        if self.tag in tagset:
-            yield self
-        stack = self._children[::-1]
-        while stack:
-            node = stack.pop()
-            if node.tag in tagset:
-                yield node
-            if node._children:
-                stack.extend(node._children[::-1])
+        yield from self.iterdescendants(*tags)
 
     def iterdescendants(self, *tags: str) -> Iterator["Element"]:
         if not tags or tags == ("*",):
@@ -363,9 +353,19 @@ def delete_element(element: Element, keep_tail: bool = True) -> None:
     parent.remove(element)
 
 
-def drop_tree(element: Element) -> None:
-    "Remove element and children but keep its tail (lxml html drop_tree)."
-    delete_element(element, keep_tail=True)
+def iter_outside(tree: Element, skip) -> Iterator[Element]:
+    """``tree``'s descendants in document order; an element of the set
+    ``skip`` is yielded but its subtree is not walked.  Reads what deleting
+    ``skip`` would leave, before deciding to delete."""
+    stack = tree._children[::-1]
+    pop = stack.pop
+    push = stack.extend
+    while stack:
+        node = pop()
+        yield node
+        kids = node._children
+        if kids and node not in skip:
+            push(kids[::-1])
 
 
 def strip_tags(tree: Element, *tags: str) -> None:
@@ -377,18 +377,8 @@ def strip_tags(tree: Element, *tags: str) -> None:
     deepest-first in stable document order, so nested matches are
     handled without rescanning."""
     tagset = frozenset(t for group in tags for t in ([group] if isinstance(group, str) else group))
-    matches: list = []
-    stack = tree._children[::-1]
-    pop = stack.pop
-    push = stack.extend
-    while stack:
-        node = pop()
-        if node.tag in tagset:
-            matches.append(node)
-        kids = node._children
-        if kids:
-            push(kids[::-1])
-    splice_matches(tree, matches)
+    if tagset:
+        splice_matches(tree, list(tree.iterdescendants(*tagset)))
 
 
 def splice_matches(tree: Element, matches: list) -> None:
@@ -475,9 +465,6 @@ class _TreeBuilder(HTMLParser):
         self._last: Optional[Element] = None  # last closed/void element for tail text
 
     # -- helpers --
-    def _cur(self) -> Element:
-        return self._stack[-1]
-
     def _add_text(self, data: str) -> None:
         if not data:
             return
@@ -538,8 +525,6 @@ class _TreeBuilder(HTMLParser):
             # pre-body metadata element: goes to <head>
             el = Element(tag, attrib)
             self.head.append(el)
-            if tag not in VOID_ELEMENTS:
-                pass  # title content handled via stack below
             if tag == "title":
                 self._stack.append(el)
                 self._last = None
@@ -581,14 +566,7 @@ class _TreeBuilder(HTMLParser):
     def handle_data(self, data: str) -> None:
         self._add_text(data)
 
-    def handle_comment(self, data: str) -> None:  # dropped
-        pass
-
-    def handle_decl(self, decl: str) -> None:
-        pass
-
-    def handle_pi(self, data: str) -> None:
-        pass
+    # comments, declarations and PIs reach HTMLParser's no-op handlers
 
 
 # ---------------------------------------------------------------------------
@@ -828,18 +806,3 @@ def parse_html_stdlib(html: str) -> Optional[Element]:
         return None
     return builder.root
 
-
-def tostring_debug(el: Element) -> str:
-    "Serialize for debugging/tests (not a faithful HTML serializer)."
-    parts = [f"<{el.tag}"]
-    for k, v in el.attrib.items():
-        parts.append(f' {k}="{v}"')
-    parts.append(">")
-    if el.text:
-        parts.append(el.text)
-    for c in el:
-        parts.append(tostring_debug(c))
-        if c.tail:
-            parts.append(c.tail)
-    parts.append(f"</{el.tag}>")
-    return "".join(parts)

@@ -256,8 +256,12 @@ def trafilatura_sequence(tree: Element, options: Options, url: Optional[str] = N
         j_len = 0
         j_body, j_text = None, ""
         if not options.fast:
+            # jusText is esc_tree's last reader: it may take the escalation's
+            # own copy, but not the caller's tree
             try:
-                j_body, j_text, j_len = _justext_rescue(esc_tree.copy_tree(), options)
+                j_body, j_text, j_len = _justext_rescue(
+                    esc_tree.copy_tree() if is_forum else esc_tree, options
+                )
             except Exception:
                 pass
 
@@ -365,9 +369,9 @@ def bare_extract(filecontent: Any, options: Options = DEFAULT_OPTIONS) -> Extrac
         if options.prune_selectors:
             from .selectors import compile_user_selector
 
-            tree = prune_unwanted_nodes(
-                tree, [compile_user_selector(s) for s in options.prune_selectors]
-            )
+            # each rule matches on what the rules before it left
+            for select in [compile_user_selector(s) for s in options.prune_selectors]:
+                tree = prune_unwanted_nodes(tree, [select(tree)])
 
         (
             postbody,

@@ -20,7 +20,7 @@ from .cleaning import (
     process_node,
     prune_unwanted_nodes,
 )
-from .dom import Element, SubElement, delete_element, strip_elements, strip_tags
+from .dom import Element, SubElement, delete_element, iter_outside, strip_elements, strip_tags
 from .selectors import (
     BODY_PREDS,
     COMMENTS_PREDS,
@@ -84,8 +84,6 @@ def handle_formatting(element: Element, options: Options) -> Optional[Element]:
     if formatting is None:
         return None
     parent = element.getparent()
-    if parent is None:
-        parent = element.getprevious()
     if parent is None or parent.tag not in FORMATTING_PROTECTED:
         processed_element = Element("p")
         processed_element.insert(0, formatting)
@@ -540,12 +538,32 @@ def handle_textelem(element: Element, potential_tags: set, options: Options) -> 
 
 # --- section pruning and candidate ladder (:655-820) ---------------------------
 
+def _prune_overall_discards(tree: Element) -> Element:
+    """Delete the overall-discard matches; when they hold over 6/7 of the
+    text, return a pristine copy and leave ``tree`` pruned in its document,
+    as the reference's backup restore does (htmlprocessing.py:95-112).  The
+    text left is measured first (deletes keep tails): only a restore copies."""
+    passes = overall_discard_matches(tree)
+    matched = {el for matches in passes for el in matches}
+    kept, removed = len(tree.text or ""), 0
+    for el in iter_outside(tree, matched):
+        if el.tail:
+            kept += len(el.tail)
+        if el in matched:
+            removed += len(el.text_content())
+        elif el.text:
+            kept += len(el.text)
+    backup = None if 7 * kept > kept + removed else tree.copy_tree()
+    prune_unwanted_nodes(tree, passes)
+    return tree if backup is None else backup
+
+
 def prune_unwanted_sections(
     tree: Element, potential_tags: set, options: Options, keep_teasers: bool = False
 ) -> Element:
     "Rule-based deletion of targeted sections (:704-740)."
     favor_precision = options.focus == "precision"
-    tree = prune_unwanted_nodes(tree, overall_discard_matches(tree), with_backup=True)
+    tree = _prune_overall_discards(tree)
     if "graphic" not in potential_tags:
         tree = prune_unwanted_nodes(tree, discard_image_matches(tree))
     if options.focus != "recall":

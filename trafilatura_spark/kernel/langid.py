@@ -51,7 +51,6 @@ LANG_WORDS = {
     "id": "yang dan di itu dengan untuk tidak ini dari dalam akan pada juga mereka bisa oleh sudah telah",
     "ru": "и в не на что он как это по но они мы же за от так его было она мне",
 }
-LANG_WORD_SETS = {lang: frozenset(words.split()) for lang, words in LANG_WORDS.items()}
 
 _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 MIN_MARKER_HITS = 2  # evidence floor for a standalone word-hit decision

@@ -187,13 +187,6 @@ def _comments_pred_4(el: Element) -> bool:
 
 COMMENTS_PREDS = [_comments_pred_1, _comments_pred_2, _comments_pred_3, _comments_pred_4]
 
-COMMENTS_SELECTORS = [
-    lambda t: _first_match(t, _comments_pred_1),
-    lambda t: _first_match(t, _comments_pred_2),
-    lambda t: _first_match(t, _comments_pred_3),
-    lambda t: _first_match(t, _comments_pred_4),
-]
-
 _RC_ID = re.compile(r"^(?:[Cc]omment|comol|disqus_thread|dsq-comments)")
 _RC_CLASS = re.compile(r"^[Cc]omment|(?:article|post)-comments")
 

@@ -15,9 +15,6 @@ from typing import Optional
 # newlines not preceded by punctuation or '>' get collapsed to a space
 # (reference utils.py:82).  Python's re has no \p{P}; equivalent: rely on
 # unicodedata punctuation test via a function-based substitution.
-_PUNCT_CATS = ("P",)  # any Unicode punctuation category Pxx
-
-
 def _is_punct(ch: str) -> bool:
     return unicodedata.category(ch).startswith("P")
 
@@ -37,7 +34,6 @@ LINK_FARM_RATIO = 0.9
 IMAGE_EXTENSION = re.compile(r"[^\s]+\.(avif|bmp|gif|hei[cf]|jpe?g|png|webp)(\b|$)", re.I)
 
 FORMATTING_PROTECTED = {"cell", "head", "hi", "item", "p", "quote", "ref", "td"}
-SPACING_PROTECTED = {"code", "pre"}
 
 
 @lru_cache(maxsize=1024)
